@@ -101,12 +101,10 @@ def dbscan(points: DataFrame, eps: int = DEFAULT_EPS,
           .join(core.select(F.col("id").alias("a")), "a")
           .join(core.select(F.col("id").alias("b")), "b")
           .select(F.col("a").alias("id_a"), F.col("b").alias("id_b")))
-    # doubling=False measured faster here: eps-neighbor graphs are
-    # locally DENSE, so pre-contraction + 2-4 plain rounds converge and
-    # pointer doubling's per-round self-join is pure overhead (same-
-    # session A/B at 1M pts/local[16]: 15.2-16.6 s vs 18.8-28.5 s,
-    # identical signature). Chain-shaped graphs are the doubling case
-    # (operators/regions.py).
+    # eps-neighbor graphs are locally DENSE, so pre-contraction + 2-4
+    # plain rounds converge; pointer doubling's per-round self-join
+    # was pure overhead (same-session A/B at 1M pts/local[16]:
+    # 15.2-16.6 s vs 18.8-28.5 s, identical signature) and was removed.
     cc = connected_components(ce, core)  # (id, cluster_id)
     # border: non-core point -> min cluster among its core neighbors
     border = (pairs.where(F.col("a") != F.col("b"))

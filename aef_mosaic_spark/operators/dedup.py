@@ -525,8 +525,7 @@ CC_DRIVER_RESIDUAL_CAP = 100_000
 
 
 def connected_components(edges: DataFrame, nodes: DataFrame,
-                         max_iter: int = 20,
-                         doubling: bool = False) -> DataFrame:
+                         max_iter: int = 20) -> DataFrame:
     """Connected components by iterative min-label propagation (the
     classic Spark CC): label(v) starts as v, then repeatedly takes the
     min over neighbors until fixpoint — O(component diameter)
@@ -598,7 +597,7 @@ def connected_components(edges: DataFrame, nodes: DataFrame,
     # scale — the distributed loop below runs unchanged. Output is
     # identical either way (min id per component, any algorithm).
     resid = sym.count()
-    if not doubling and resid <= CC_DRIVER_RESIDUAL_CAP:
+    if resid <= CC_DRIVER_RESIDUAL_CAP:
         if resid == 0:
             return rep.select("id", F.col("rep").alias("cluster_id"))
         import pandas as pd
@@ -647,29 +646,6 @@ def connected_components(edges: DataFrame, nodes: DataFrame,
         labels = new.select("id", F.col("_new").alias("label"))
         if not changed:
             break
-        if doubling:
-            # pointer doubling (hash-to-min acceleration): label <-
-            # label(label). Every label value is itself a contracted
-            # node id, and label(b) is in b's component, so the
-            # invariant (label(v) reachable from v) and the min-label
-            # fixpoint are preserved exactly — this only SHORTENS
-            # label chains, turning the O(component diameter) round
-            # count of plain propagation into O(log diameter). Worth
-            # a node-sized self-join per round ONLY on long-CHAIN
-            # graphs (region-fragment chains, operators/regions.py).
-            # Locally-dense graphs (near-dup cliques, eps-neighbor
-            # DBSCAN adjacency) converge in 2-4 rounds after the
-            # pre-contraction and the extra join is a measured LOSS
-            # (1M-pt dbscan A/B local[16]: 15.2-16.6 s plain vs
-            # 18.8-28.5 s doubling, identical output) — default off.
-            labels = (labels.alias("a")
-                      .join(labels.select(
-                          F.col("id").alias("_lid"),
-                          F.col("label").alias("_llbl")),
-                          F.col("a.label") == F.col("_lid"))
-                      .select("a.id",
-                              F.least("a.label", "_llbl").alias("label"))
-                      .localCheckpoint())
     # compose back through the pre-contraction: label(v) = label(rep(v))
     return (rep.join(labels.withColumnRenamed("id", "rep"), "rep")
             .select("id", F.col("label").alias("cluster_id")))

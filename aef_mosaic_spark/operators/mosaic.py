@@ -5,12 +5,13 @@ Spark-first re-expression of the reference pipeline
 write over bounded channels) as ONE declarative DAG:
 
     images_df
-      -> grid-bounds columns        (pandas UDF, vectorized proj)
-      -> chunk-range columns        (pure Column floor arithmetic)
-      -> intersect/year filter      (Catalyst-pushed predicates)
-      -> mapInPandas: decode ONCE per tile, reproject, emit one
-         *patch* per intersecting chunk (the analytic tile->chunk
-         inversion, reference output_grid.rs:315-384 / J2)
+      -> WGS84 bbox + year prefilter (Catalyst-pushed predicates)
+      -> spread_input               (only if the scan is under-parallel)
+      -> reproject_patches, ONE mapInPandas: vectorized grid bounds,
+         exact chunk ranges (the analytic tile->chunk inversion,
+         reference output_grid.rs:315-384 / J2), decode ONCE per tile,
+         emit one *patch* per intersecting (or, on resume, pending)
+         chunk
       -> groupBy(time_idx,row_idx,col_idx).applyInPandas: accumulate
          patches into the chunk canvas (mean / last-on-top / weighted,
          reference mosaic.rs:233-291 / R2+R3)
@@ -119,7 +120,9 @@ def wgs84_prefilter(images: DataFrame, grid: OutputGrid,
 def with_grid_bounds(df: DataFrame, grid: OutputGrid) -> DataFrame:
     """Add tile bounds in the grid CRS (gx0, gy0, gx1, gy1) as a
     pass-through mapInPandas projection — NO join back (a join would
-    shuffle the image bytes and recompute the scan branch twice)."""
+    shuffle the image bytes and recompute the scan branch twice).
+    Feed it metadata columns only: every column crosses the Python
+    boundary."""
     dst = grid.crs
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
     schema += ", gx0 double, gy0 double, gx1 double, gy1 double"
@@ -139,7 +142,8 @@ def with_chunk_ranges(df: DataFrame, grid: OutputGrid) -> DataFrame:
     that intersect the grid and a configured year — all pure Column
     arithmetic (Catalyst codegen, pushdown-friendly). Mirrors
     chunks_for_bounds_wgs84 (reference output_grid.rs:315-384) and the
-    year filter F5 (spatial_lookup.rs:61-74)."""
+    year filter F5 (spatial_lookup.rs:61-74). reproject_patches applies
+    the same law in numpy; tests pin the two to each other."""
     gx0, gy0, gx1, gy1 = grid.bounds
     gx1 = gx0 + grid.width * grid.resolution
     gy0 = gy1 - grid.height * grid.resolution
@@ -256,29 +260,72 @@ def _reproject_tile_to_chunk(img: np.ndarray, tile_crs: str, tmin_x: float,
     return y0 + r_lo, x0 + c_lo, patch, v.astype(np.uint8)
 
 
-def reproject_patches(ranged: DataFrame, grid: OutputGrid,
+def reproject_patches(tiles: DataFrame, grid: OutputGrid,
+                      row_range: tuple[int, int] | None = None,
                       approx_px: float | None = None,
                       skip_bad_tiles: bool = False,
                       bad_tile_acc=None) -> DataFrame:
-    """mapInPandas: decode each tile ONCE, emit one patch row per
-    intersecting chunk. sort_key = stable compositing order for
-    last-on-top (reference composites by insertion order; we make it
-    deterministic by image_id).
+    """THE patch kernel: ONE mapInPandas over raw tile rows doing the
+    bounds transform, exact chunk ranges, decode-once and patch
+    reprojection per Arrow batch; one patch row per intersecting chunk.
+    sort_key = stable compositing order for last-on-top (reference
+    composites by insertion order; we make it deterministic by
+    image_id).
 
-    If `ranged` carries a `todo` column (array<long> of packed
+    row_range=(r0, r1) clips the chunk ranges to that inclusive row
+    band (incremental-commit split: a band pays only its own kernel
+    cost).
+
+    If `tiles` carries a `todo` column (array<long> of packed
     row*chunk_cols+col chunk keys — the resume work-list from
     MosaicJob.pending_tiles), only those chunks are reprojected: a
-    partially-done tile pays kernel cost for its PENDING chunks only."""
+    partially-done tile pays kernel cost for its PENDING chunks only.
+
+    skip_bad_tiles: a decode failure drops THAT tile (counted in
+    bad_tile_acc if given) instead of failing the task — at 10^12
+    tiles, corrupt inputs are routine, and one byte-rotted object must
+    not kill a 10-hour job. Default False = fail fast (CI parity)."""
+    import hashlib
+
     nb = grid.num_bands
     gd = grid.to_dict()
-    has_todo = "todo" in ranged.columns
+    has_todo = "todo" in tiles.columns
+    band_lo, band_hi = row_range if row_range is not None \
+        else (0, grid.chunk_rows - 1)
+    gx0g, _, _, gy1g = grid.bounds
+    gx1g = gx0g + grid.width * grid.resolution
+    gy0g = gy1g - grid.height * grid.resolution
+    cw = grid.chunk_w * grid.resolution
+    ch = grid.chunk_h * grid.resolution
     n_cols = grid.chunk_cols
+    t_for_year = {y: i for i, y in enumerate(grid.years)}
 
     def _gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         g = OutputGrid.from_dict(gd)
         for pdf in it:
+            if not len(pdf):
+                continue
+            # the chunk-range law (with_chunk_ranges' Column twin)
+            gx0, gy0, gx1, gy1 = _grid_bounds_np(pdf, g.crs)
+            col_min = np.maximum(np.floor((gx0 - gx0g) / cw), 0).astype(int)
+            col_max = np.minimum(np.ceil((gx1 - gx0g) / cw) - 1,
+                                 n_cols - 1).astype(int)
+            row_min = np.maximum(np.floor((gy1g - gy1) / ch), band_lo).astype(int)
+            row_max = np.minimum(np.ceil((gy1g - gy0) / ch) - 1,
+                                 band_hi).astype(int)
+            ok = ((gx0 < gx1g) & (gx1 > gx0g) & (gy0 < gy1g) & (gy1 > gy0g)
+                  & (col_min <= col_max) & (row_min <= row_max))
             rows: list[dict] = []
-            for t in pdf.itertuples(index=False):
+            for i, t in enumerate(pdf.itertuples(index=False)):
+                if not ok[i] or t.year not in t_for_year:
+                    continue
+                todo = {int(k) for k in t.todo} if has_todo else None
+                rcs = [(r, c)
+                       for r in range(row_min[i], row_max[i] + 1)
+                       for c in range(col_min[i], col_max[i] + 1)
+                       if todo is None or r * n_cols + c in todo]
+                if not rcs:
+                    continue
                 try:
                     img = codecs.decode(t.bytes, t.fmt, t.w, t.h)[:nb]
                 except Exception:
@@ -288,45 +335,34 @@ def reproject_patches(ranged: DataFrame, grid: OutputGrid,
                         bad_tile_acc.add(1)
                     continue
                 sort_key = int.from_bytes(
-                    __import__("hashlib").md5(t.image_id.encode()).digest()[:8],
-                    "big", signed=True,
-                )
-                gbox = (t.gx0, t.gy0, t.gx1, t.gy1)
-                if has_todo:
-                    rcs = sorted(divmod(int(k), n_cols) for k in t.todo
-                                 if t.row_min <= int(k) // n_cols <= t.row_max
-                                 and t.col_min <= int(k) % n_cols <= t.col_max)
-                else:
-                    rcs = [(r, c)
-                           for r in range(t.row_min, t.row_max + 1)
-                           for c in range(t.col_min, t.col_max + 1)]
+                    hashlib.md5(t.image_id.encode()).digest()[:8], "big", signed=True)
+                gbox = (gx0[i], gy0[i], gx1[i], gy1[i])
+                ti = t_for_year[t.year]
                 for r, c in rcs:
-                        res = _reproject_tile_to_chunk(
-                            img, t.crs, t.min_x, t.max_y, t.resolution, g, r, c,
-                            gbox=gbox, approx_px=approx_px,
-                        )
-                        if res is None:
-                            continue
-                        y0, x0, patch, mask = res
-                        rows.append({
-                            "time_idx": int(t.time_idx), "row_idx": r, "col_idx": c,
-                            "y0": y0, "x0": x0,
-                            "ph": patch.shape[1], "pw": patch.shape[2],
-                            "patch": zlib.compress(
-                                patch.astype(np.uint8).tobytes(), 1),
-                            "mask": zlib.compress(
-                                np.packbits(mask.ravel()).tobytes(), 1),
-                            "sort_key": sort_key,
-                            "weight": float(getattr(t, "weight", 1.0)),
-                            "image_id": t.image_id,
-                        })
+                    res = _reproject_tile_to_chunk(
+                        img, t.crs, t.min_x, t.max_y, t.resolution, g, r, c,
+                        gbox=gbox, approx_px=approx_px)
+                    if res is None:
+                        continue
+                    y0, x0, patch, mask = res
+                    rows.append({
+                        "time_idx": ti, "row_idx": r, "col_idx": c,
+                        "y0": y0, "x0": x0,
+                        "ph": patch.shape[1], "pw": patch.shape[2],
+                        "patch": zlib.compress(
+                            patch.astype(np.uint8).tobytes(), 1),
+                        "mask": zlib.compress(
+                            np.packbits(mask.ravel()).tobytes(), 1),
+                        "sort_key": sort_key,
+                        "weight": float(getattr(t, "weight", 1.0)),
+                        "image_id": t.image_id,
+                    })
             yield pd.DataFrame(
                 rows,
                 columns=["time_idx", "row_idx", "col_idx", "y0", "x0", "ph", "pw",
-                         "patch", "mask", "sort_key", "weight", "image_id"],
-            )
+                         "patch", "mask", "sort_key", "weight", "image_id"])
 
-    return ranged.mapInPandas(_gen, schema=PATCH_SCHEMA)
+    return tiles.mapInPandas(_gen, schema=PATCH_SCHEMA)
 
 
 def _finalize_mean(s: np.ndarray, c: np.ndarray) -> np.ndarray:
@@ -875,88 +911,15 @@ def tiles_to_patches(images: DataFrame, grid: OutputGrid,
                      approx_px: float | None = None,
                      skip_bad_tiles: bool = False,
                      bad_tile_acc=None) -> DataFrame:
-    """The FUSED fast path: WGS84+year prefilter (pushed to the scan)
-    -> ONE mapInPandas doing bounds transform, exact chunk ranges,
-    decode-once, and patch reprojection. Zero shuffles and zero branch
-    recomputation before the patch exchange — this is the stage whose
-    throughput scales linearly with cores (see BENCH/BASELINE.md).
+    """The flagship plan: WGS84+year prefilter (pushed to the scan)
+    -> spread_input -> the reproject_patches kernel. Zero shuffles and
+    zero branch recomputation before the patch exchange — this is the
+    stage whose throughput scales linearly with cores (see
+    BENCH/BASELINE.md). Fresh and resumed runs both enter here; a
+    resume's tiles carry the `todo` work-list through to the kernel.
 
     row_range=(r0, r1): emit only chunks in that inclusive row band
-    (incremental-commit split — the prefilter AND the kernel loop are
-    both clipped, so a band pays only its own kernel cost).
-
-    skip_bad_tiles: a decode/reproject failure drops THAT tile (counted
-    in bad_tile_acc if given) instead of failing the task — at 10^12
-    tiles, corrupt inputs are routine, and one byte-rotted object must
-    not kill a 10-hour job. Default False = fail fast (CI parity)."""
-    import hashlib
-
-    nb = grid.num_bands
-    gd = grid.to_dict()
-    band_lo = row_range[0] if row_range is not None else 0
-    band_hi = row_range[1] if row_range is not None else grid.chunk_rows - 1
-    gx0g, _, _, gy1g = grid.bounds
-    gx1g = gx0g + grid.width * grid.resolution
-    gy0g = gy1g - grid.height * grid.resolution
-    cw = grid.chunk_w * grid.resolution
-    ch = grid.chunk_h * grid.resolution
-    t_for_year = {y: i for i, y in enumerate(grid.years)}
-
-    def _gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        g = OutputGrid.from_dict(gd)
-        for pdf in it:
-            if not len(pdf):
-                continue
-            gx0, gy0, gx1, gy1 = _grid_bounds_np(pdf, g.crs)
-            col_min = np.maximum(np.floor((gx0 - gx0g) / cw), 0).astype(int)
-            col_max = np.minimum(np.ceil((gx1 - gx0g) / cw) - 1,
-                                 g.chunk_cols - 1).astype(int)
-            row_min = np.maximum(np.floor((gy1g - gy1) / ch), band_lo).astype(int)
-            row_max = np.minimum(np.ceil((gy1g - gy0) / ch) - 1,
-                                 band_hi).astype(int)
-            ok = ((gx0 < gx1g) & (gx1 > gx0g) & (gy0 < gy1g) & (gy1 > gy0g)
-                  & (col_min <= col_max) & (row_min <= row_max))
-            rows: list[dict] = []
-            for i, t in enumerate(pdf.itertuples(index=False)):
-                if not ok[i] or t.year not in t_for_year:
-                    continue
-                try:
-                    img = codecs.decode(t.bytes, t.fmt, t.w, t.h)[:nb]
-                except Exception:
-                    if not skip_bad_tiles:
-                        raise
-                    if bad_tile_acc is not None:
-                        bad_tile_acc.add(1)
-                    continue
-                sort_key = int.from_bytes(
-                    hashlib.md5(t.image_id.encode()).digest()[:8], "big", signed=True)
-                gbox = (gx0[i], gy0[i], gx1[i], gy1[i])
-                ti = t_for_year[t.year]
-                for r in range(row_min[i], row_max[i] + 1):
-                    for c in range(col_min[i], col_max[i] + 1):
-                        res = _reproject_tile_to_chunk(
-                            img, t.crs, t.min_x, t.max_y, t.resolution, g, r, c,
-                            gbox=gbox, approx_px=approx_px)
-                        if res is None:
-                            continue
-                        y0, x0, patch, mask = res
-                        rows.append({
-                            "time_idx": ti, "row_idx": r, "col_idx": c,
-                            "y0": y0, "x0": x0,
-                            "ph": patch.shape[1], "pw": patch.shape[2],
-                            "patch": zlib.compress(
-                                patch.astype(np.uint8).tobytes(), 1),
-                            "mask": zlib.compress(
-                                np.packbits(mask.ravel()).tobytes(), 1),
-                            "sort_key": sort_key,
-                            "weight": float(getattr(t, "weight", 1.0)),
-                            "image_id": t.image_id,
-                        })
-            yield pd.DataFrame(
-                rows,
-                columns=["time_idx", "row_idx", "col_idx", "y0", "x0", "ph", "pw",
-                         "patch", "mask", "sort_key", "weight", "image_id"])
-
+    (the prefilter AND the kernel loop are both clipped)."""
     # spread_input (r6): a small bin-packed parquet scan (150 MB of
     # tile rows -> 2 splits at the 128 MB target) serializes the
     # decode+reproject kernel onto 2 cores; the conditional spread is
@@ -964,9 +927,11 @@ def tiles_to_patches(images: DataFrame, grid: OutputGrid,
     # Applied AFTER the prefilter so only surviving tiles shuffle.
     from aef_mosaic_spark.partitioning import spread_input
 
-    return spread_input(
-        wgs84_prefilter(images, grid, row_range=row_range), "image_id"
-    ).mapInPandas(_gen, schema=PATCH_SCHEMA)
+    return reproject_patches(
+        spread_input(wgs84_prefilter(images, grid, row_range=row_range),
+                     "image_id"),
+        grid, row_range=row_range, approx_px=approx_px,
+        skip_bad_tiles=skip_bad_tiles, bad_tile_acc=bad_tile_acc)
 
 
 def mosaic(images: DataFrame, grid: OutputGrid, mode: str = "mean",

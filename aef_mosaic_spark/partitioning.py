@@ -36,18 +36,22 @@ def fanout_partitions(df: DataFrame, factor: int = 2) -> int:
 def spread_input(df: DataFrame, *key_cols: str, factor: int = 2) -> DataFrame:
     """Conditionally repartition an UNDER-PARALLEL source (shape 1).
 
-    Only fires when the physical plan yields fewer partitions than the
-    session's parallelism — i.e. the local single-file scan — so at
-    real scale (thousands of splits) it is a no-op and the corpus is
-    never gratuitously shuffled. Hash-partitions by ``key_cols``
-    (deterministic keys — guide §2.5 forbids rand-derived ones);
-    results are identical, only placement changes."""
-    target = fanout_partitions(df, factor)
-    try:
-        cur = df.rdd.getNumPartitions()
-    except Exception:  # planning failure -> leave the plan alone
+    Only fires when an exchange-free physical plan yields fewer
+    partitions than the session's parallelism — i.e. the local
+    single-file scan — so at real scale (thousands of splits) it is a
+    no-op and the corpus is never gratuitously shuffled.
+    Hash-partitions by ``key_cols`` (deterministic keys — guide §2.5
+    forbids rand-derived ones); results are identical, only placement
+    changes."""
+    if df.isStreaming:  # no physical partition count to inspect
         return df
-    if cur >= target:
+    # a plan with an exchange is not the leaf-scan shape: its width is
+    # the shuffle's, and counting it under AQE would run every
+    # upstream stage once here and again in the real job
+    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
+        return df
+    target = fanout_partitions(df, factor)
+    if df.rdd.getNumPartitions() >= target:
         return df
     if key_cols:
         return df.repartition(target, *[F.col(c) for c in key_cols])
@@ -74,8 +78,5 @@ def pinned_shuffle(df: DataFrame, *key_cols: str) -> DataFrame:
     1-2 byte-coalesced partitions; pinning the configured value keeps
     the scale knob (spark.sql.shuffle.partitions) in charge while
     disabling the fan-out-blind coalesce."""
-    try:
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        n = fanout_partitions(df)
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, *[F.col(c) for c in key_cols])

@@ -76,9 +76,6 @@ class MosaicJob:
         return chunks.mapInPandas(_h, schema=schema)
 
     # ------------------------------------------------------------ plan
-    def ranged_tiles(self, images: DataFrame) -> DataFrame:
-        return M.with_chunk_ranges(M.with_grid_bounds(images, self.grid), self.grid)
-
     def pending_tiles(self, images: DataFrame, done: DataFrame,
                       row_range: tuple[int, int] | None = None) -> DataFrame:
         """Prune completed chunks (reference src/lib.rs:249-264, F4/J9).
@@ -88,10 +85,9 @@ class MosaicJob:
         row*chunk_cols+col longs) is computed from a METADATA-ONLY
         branch (column-pruned scan -> assignments -> anti-join the
         committed keys), then inner-joined back to the raw tile rows —
-        fully-completed tiles drop out before any decode, and
-        reproject_patches consumes `todo` so partially-done tiles
-        reproject ONLY their pending chunks (round-1 re-reprojected
-        everything and anti-joined after; VERDICT r1 'What's wrong' #4).
+        fully-completed tiles drop out before any decode, and the
+        patch kernel consumes `todo` so partially-done tiles reproject
+        ONLY their pending chunks.
         """
         meta = images.select("image_id", "crs", "min_x", "min_y",
                              "max_x", "max_y", "year")
@@ -105,8 +101,7 @@ class MosaicJob:
                  + F.col("col_idx")).cast("long")
             ).alias("todo")
         )
-        pending = images.join(todo, "image_id")
-        return self.ranged_tiles(pending)
+        return images.join(todo, "image_id")
 
     # ------------------------------------------------------------- run
     def run(self, spark: SparkSession, images: DataFrame, output_path: str,
@@ -120,8 +115,8 @@ class MosaicJob:
         row_range=(r0, r1) restricts this commit to the inclusive
         chunk-row band — the unit of incremental checkpointing (see
         run_incremental). With a band, `previously_completed` counts
-        only that band's committed chunks, and an untouched band takes
-        the fused fresh path even on a resumed table.
+        only that band's committed chunks, and an untouched band skips
+        the pending-tiles anti-join even on a resumed table.
 
         process_years restricts this commit to a subset of the grid's
         output years — the reference's output-years vs process-years
@@ -169,38 +164,23 @@ class MosaicJob:
                 done = done.where(F.col("time_idx").isin(t_sel))
             n_completed = done.count()
 
+        # fresh run (or untouched band): every tile; resume: the tiles
+        # with pending chunks, each carrying its `todo` work-list into
+        # the kernel — the emitted patch set IS the pending set
+        tiles = images if n_completed == 0 else \
+            self.pending_tiles(images, done, row_range=row_range)
         obs_tiles = Observation("tiles")
-        if n_completed == 0:
-            # fresh run (or untouched band): fused zero-shuffle path
-            # (scan -> one mapInPandas -> patch exchange)
-            pre = M.wgs84_prefilter(images, self.grid,
-                                    row_range=row_range).observe(
-                obs_tiles,
-                F.count(F.lit(1)).alias("n_tiles"),
-                F.sum(F.length("bytes")).alias("tile_bytes"),
-            )
-            bad_acc = spark.sparkContext.accumulator(0) \
-                if self.skip_bad_tiles else None
-            patches = M.tiles_to_patches(pre, self.grid, row_range=row_range,
-                                         approx_px=self.approx_px,
-                                         skip_bad_tiles=self.skip_bad_tiles,
-                                         bad_tile_acc=bad_acc)
-        else:
-            # resume: per-tile remaining-work lists via anti-join; the
-            # patch kernel itself consumes `todo`, so the emitted patch
-            # set IS the pending set — no post-hoc anti-join needed
-            tiles = self.pending_tiles(images, done,
-                                       row_range=row_range).observe(
-                obs_tiles,
-                F.count(F.lit(1)).alias("n_tiles"),
-                F.sum(F.length("bytes")).alias("tile_bytes"),
-            )
-            bad_acc = spark.sparkContext.accumulator(0) \
-                if self.skip_bad_tiles else None
-            patches = M.reproject_patches(tiles, self.grid,
-                                          approx_px=self.approx_px,
-                                          skip_bad_tiles=self.skip_bad_tiles,
-                                          bad_tile_acc=bad_acc)
+        pre = M.wgs84_prefilter(tiles, self.grid, row_range=row_range).observe(
+            obs_tiles,
+            F.count(F.lit(1)).alias("n_tiles"),
+            F.sum(F.length("bytes")).alias("tile_bytes"),
+        )
+        bad_acc = spark.sparkContext.accumulator(0) \
+            if self.skip_bad_tiles else None
+        patches = M.tiles_to_patches(pre, self.grid, row_range=row_range,
+                                     approx_px=self.approx_px,
+                                     skip_bad_tiles=self.skip_bad_tiles,
+                                     bad_tile_acc=bad_acc)
         obs_patches = Observation("patches")
         patches = patches.observe(
             obs_patches,
@@ -306,8 +286,8 @@ class MosaicJob:
         band edge are read in both bands — bounded double-decode at the
         boundary only). Resume reuses the normal done-keys anti-join
         per band: completed bands skip at metadata cost, the interrupted
-        band resumes at pending-chunk granularity, untouched bands take
-        the fused fresh path."""
+        band resumes at pending-chunk granularity, untouched bands skip
+        the pending-tiles anti-join."""
         rows = self.grid.chunk_rows
         groups = max(1, min(groups, rows))
         edges = [round(i * rows / groups) for i in range(groups + 1)]

@@ -62,10 +62,8 @@ def make_patch_sink(table: Icelite, grid: OutputGrid):
     def _sink(batch_df: DataFrame, batch_id: int):
         if batch_id in applied_batch_ids(table):
             return  # replayed after crash-before-checkpoint: committed
-        ranged = M.with_chunk_ranges(M.with_grid_bounds(batch_df, grid), grid)
-        patches = M.reproject_patches(ranged, grid)
         table.append(
-            patches,
+            M.reproject_patches(batch_df, grid),
             partition_by=["time_idx"],
             summary={"operation": "stream-patches", "batch_id": batch_id},
         )
@@ -76,9 +74,10 @@ def make_patch_sink(table: Icelite, grid: OutputGrid):
 def stream_patches_to_table(images_stream: DataFrame, grid: OutputGrid,
                             table_path: str, checkpoint_dir: str,
                             timeout_s: int = 300):
-    """Run the stateless prefix (grid bounds -> chunk ranges ->
-    decode-once patch reprojection) on the stream; each microbatch
-    commits one icelite snapshot of patch rows."""
+    """Run the stateless prefix (the reproject_patches kernel: grid
+    bounds, chunk ranges, decode-once patch reprojection) on the
+    stream; each microbatch commits one icelite snapshot of patch
+    rows."""
     table = Icelite(table_path)
     _sink = make_patch_sink(table, grid)
 

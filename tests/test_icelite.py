@@ -175,7 +175,7 @@ def test_resume_reprojects_only_pending_chunks(spark, grid):
 
     images = spark.createDataFrame(generator.images_pdf(40))
     job = MosaicJob(grid, mode="mean")
-    full = M.reproject_patches(job.ranged_tiles(images), grid) \
+    full = M.reproject_patches(images, grid) \
         .groupBy(*KEYS).count().collect()
     all_keys = {(r.time_idx, r.row_idx, r.col_idx): r["count"] for r in full}
     assert len(all_keys) > 3

@@ -6,7 +6,7 @@ reference numeric vectors for the mean accumulator)."""
 import numpy as np
 import pytest
 
-from aef_mosaic_spark import generator, oracle
+from aef_mosaic_spark import generator, oracle, proj
 from aef_mosaic_spark.grid import OutputGrid
 from aef_mosaic_spark.operators import mosaic as M
 
@@ -45,6 +45,28 @@ def test_assignments_match_oracle(spark, images_pdf, images_sdf, grid):
     want = oracle.oracle_assignments(images_pdf, grid)
     assert got == want
     assert len(got) > N_TILES  # tiles overlap multiple chunks
+
+
+@pytest.mark.parametrize("crs", ["EPSG:32610", "EPSG:6933"])
+def test_kernel_chunk_ranges_within_assignments(spark, images_sdf, grid, crs):
+    """The chunk-range law exists twice: numpy inside the
+    reproject_patches kernel and Column arithmetic in
+    with_chunk_ranges (behind assignments). Every chunk the kernel
+    emits a patch for must be an assignment row — on the native grid
+    and on an EPSG:6933 grid every tile reprojects into."""
+    if crs != grid.crs:
+        b = proj.transform_bounds(grid.bounds, grid.crs, crs, densify=21)
+        grid = OutputGrid(
+            bounds=(float(np.floor(b[0] / 10) * 10), float(np.floor(b[1] / 10) * 10),
+                    float(np.ceil(b[2] / 10) * 10), float(np.ceil(b[3] / 10) * 10)),
+            crs=crs, resolution=10.0, years=grid.years, num_bands=3,
+            chunk_h=256, chunk_w=256)
+    got = {tuple(r) for r in M.reproject_patches(images_sdf, grid)
+           .select("image_id", "time_idx", "row_idx", "col_idx").collect()}
+    want = {tuple(r) for r in M.assignments(images_sdf, grid)
+            .select("image_id", "time_idx", "row_idx", "col_idx").collect()}
+    assert len(got) > N_TILES
+    assert got <= want
 
 
 def test_assignment_excludes_wrong_year_and_far_tiles(spark, images_pdf, images_sdf, grid):

@@ -212,8 +212,7 @@ def test_streaming_stateful_mosaic_matches_batch(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     images.repartition(3).write.parquet(in_dir)
     stream = SI.read_image_stream(spark, in_dir)
-    ranged = M.with_chunk_ranges(M.with_grid_bounds(stream, grid), grid)
-    patches = M.reproject_patches(ranged, grid)
+    patches = M.reproject_patches(stream, grid)
     q = (streaming_mosaic_mean(patches, grid)
          .writeStream.format("memory").queryName("live_chunks")
          .outputMode("update")
