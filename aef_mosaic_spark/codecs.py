@@ -174,6 +174,10 @@ def decode_qdct(data: bytes, w: int = 0, h: int = 0) -> np.ndarray:
     coef = coef.reshape(bands, hb, wb, _DCT_N, _DCT_N).astype(np.float64) * _Q_STEP
     out = np.empty((bands, h_, w_), np.uint8)
     for b in range(bands):
+        # the einsum's summation order is part of the codec's output:
+        # a DC-only block decodes to exact .5 values, so the order
+        # decides which way rint goes. Two matmuls are ~12x faster but
+        # changed the decoded bytes of 714 of 900 benchmark qdct tiles.
         rec = np.einsum("ji,bcjk,kl->bcil", _DCT_M, coef[b], _DCT_M)
         plane = rec.transpose(0, 2, 1, 3).reshape(hb * _DCT_N, wb * _DCT_N)
         out[b] = np.clip(np.rint(plane + 128.0), 0, 255)[:h_, :w_]

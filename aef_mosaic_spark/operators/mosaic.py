@@ -210,8 +210,11 @@ def _reproject_tile_to_chunk(img: np.ndarray, tile_crs: str, tmin_x: float,
 
     Replaces the reference's adaptive-grid approximation
     (reproject.rs:454-628) with exact per-pixel inverse projection —
-    affordable because it's one vectorized numpy/trig pass per patch
-    and *more* accurate than the <=0.75 px interpolation budget.
+    affordable because it's one vectorized proj.transform_grid pass
+    per patch (from the cylindrical EPSG:6933 / EPSG:4326 grids into
+    UTM only the Krüger series runs per pixel, bit-identical to the
+    full-grid transform) and *more* accurate than the <=0.75 px
+    interpolation budget.
     `gbox` (tile bounds in grid CRS) pre-clips the target window so
     the transform only touches pixels the tile can reach, not the
     whole 256^2 chunk."""
@@ -232,17 +235,13 @@ def _reproject_tile_to_chunk(img: np.ndarray, tile_crs: str, tmin_x: float,
     cc = np.arange(c_lo, c_hi)
     ty = grid.bounds[3] - (R0 + rr + 0.5) * grid.resolution
     tx = grid.bounds[0] + (C0 + cc + 0.5) * grid.resolution
-    shape = (len(ty), len(tx))
     if approx_px is not None and tile_crs != grid.crs:
         # opt-in approximate path (reference adaptive grid): budget is
         # approx_px SOURCE pixels -> err_limit in source CRS units
         sx_w, sy_w = proj.transform_grid_approx(
             tx, ty, grid.crs, tile_crs, err_limit=approx_px * tres)
     else:
-        TX, TY = np.meshgrid(tx, ty)
-        sx_w, sy_w = proj.transform_points(TX.ravel(), TY.ravel(),
-                                           grid.crs, tile_crs)
-        sx_w, sy_w = sx_w.reshape(shape), sy_w.reshape(shape)
+        sx_w, sy_w = proj.transform_grid(tx, ty, grid.crs, tile_crs)
     # world -> source pixel index (source rows top-down from tmax_y)
     sc = np.floor((sx_w - tmin_x) / tres).astype(np.int64)
     sr = np.floor((tmax_y - sy_w) / tres).astype(np.int64)
@@ -368,12 +367,12 @@ def reproject_patches(tiles: DataFrame, grid: OutputGrid,
 def _finalize_mean(s: np.ndarray, c: np.ndarray) -> np.ndarray:
     """Rounded mean, half away from zero — bit-exact with the
     reference accumulator (mosaic.rs:265-290: (s+c/2)/c for s>=0,
-    (s-c/2)/c otherwise, integer division toward zero)."""
-    cc = np.maximum(c, 1).astype(np.int64)
-    s = s.astype(np.int64)
-    pos = (s + cc // 2) // cc
-    neg = -((-s + cc // 2) // cc)
-    return np.where(s >= 0, pos, neg)
+    (s-c/2)/c otherwise, integer division toward zero). Both signs are
+    the same division of |s|, so it runs once, in the inputs' dtype:
+    the caller keeps |s| + c//2 inside it. Zero counts divide by 1."""
+    c = np.maximum(c, 1)
+    q = (np.abs(s) + c // 2) // c
+    return np.where(s >= 0, q, -q)
 
 
 def composite_chunks(patches: DataFrame, grid: OutputGrid, mode: str = "mean") -> DataFrame:
@@ -391,8 +390,11 @@ def composite_chunks(patches: DataFrame, grid: OutputGrid, mode: str = "mean") -
     def _fin(pdf: pd.DataFrame) -> pd.DataFrame:
         t, r, c = (int(pdf.iloc[0][k]) for k in ("time_idx", "row_idx", "col_idx"))
         if mode == "mean":
-            acc = np.zeros((nb, chh, chw), np.int64)
-            cnt = np.zeros((chh, chw), np.int64)
+            # int32 holds |sum| + count//2 <= 255.5 per patch, the
+            # most _finalize_mean adds up
+            assert len(pdf) <= (2**31 - 1) // 256, len(pdf)
+            acc = np.zeros((nb, chh, chw), np.int32)
+            cnt = np.zeros((chh, chw), np.int32)
         elif mode == "weighted":
             acc = np.zeros((nb, chh, chw), np.float64)
             cnt = np.zeros((chh, chw), np.float64)
@@ -925,11 +927,13 @@ def tiles_to_patches(images: DataFrame, grid: OutputGrid,
     # decode+reproject kernel onto 2 cores; the conditional spread is
     # a no-op at real scale where the scan has thousands of splits.
     # Applied AFTER the prefilter so only surviving tiles shuffle.
+    # factor=1: one kernel task per core, as every Python task pays a
+    # fixed start-up cost (see spread_input).
     from aef_mosaic_spark.partitioning import spread_input
 
     return reproject_patches(
         spread_input(wgs84_prefilter(images, grid, row_range=row_range),
-                     "image_id"),
+                     "image_id", factor=1),
         grid, row_range=row_range, approx_px=approx_px,
         skip_bad_tiles=skip_bad_tiles, bad_tile_acc=bad_tile_acc)
 

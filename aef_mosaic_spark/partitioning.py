@@ -36,10 +36,22 @@ def fanout_partitions(df: DataFrame, factor: int = 2) -> int:
 def spread_input(df: DataFrame, *key_cols: str, factor: int = 2) -> DataFrame:
     """Conditionally repartition an UNDER-PARALLEL source (shape 1).
 
-    Only fires when an exchange-free physical plan yields fewer
-    partitions than the session's parallelism — i.e. the local
-    single-file scan — so at real scale (thousands of splits) it is a
-    no-op and the corpus is never gratuitously shuffled.
+    Fires only when an exchange-free physical plan has fewer partitions
+    than the target, i.e. the local single-file scan; at real scale
+    (thousands of splits) it is a no-op and the corpus is never
+    gratuitously shuffled. Two targets:
+
+    - ``factor=2`` (default): ``fanout_partitions`` — 2x the session's
+      cores, floored at 16 — for JVM stages whose rows fan out
+      downstream (tokenize/signature, band joins, dot products).
+    - ``factor=1``: one task per core (``defaultParallelism``, no
+      floor), for a Python stage that does all of its work in its one
+      UDF (the mosaic's patch kernel). Every Python task costs
+      ~0.2-0.3 s before its UDF body runs, even on a reused worker
+      (16 trivial mapInPandas tasks: 1.2-1.5 s wall on local[4],
+      against 0.15 s for a JVM-only stage), so more tasks than cores
+      buy no pipelining, only that cost again.
+
     Hash-partitions by ``key_cols`` (deterministic keys — guide §2.5
     forbids rand-derived ones); results are identical, only placement
     changes."""
@@ -50,7 +62,8 @@ def spread_input(df: DataFrame, *key_cols: str, factor: int = 2) -> DataFrame:
     # upstream stage once here and again in the real job
     if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
         return df
-    target = fanout_partitions(df, factor)
+    target = (fanout_partitions(df, factor) if factor > 1
+              else int(df.sparkSession.sparkContext.defaultParallelism))
     if df.rdd.getNumPartitions() >= target:
         return df
     if key_cols:

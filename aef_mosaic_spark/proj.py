@@ -61,18 +61,26 @@ def _q_auth(sin_phi: np.ndarray) -> np.ndarray:
 _QP = float(_q_auth(np.array(1.0)))  # q at the pole
 
 
-def wgs84_to_utm(lon: np.ndarray, lat: np.ndarray, zone: int, south: bool):
-    """Forward Transverse Mercator (Karney series). Returns (easting, northing)."""
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.asarray(lat, dtype=np.float64)
-    lam0 = np.deg2rad(zone * 6.0 - 183.0)
-    phi = np.deg2rad(lat)
-    lam = np.deg2rad(lon) - lam0
-    sphi = np.sin(phi)
-    # conformal latitude tangent
-    t = np.sinh(np.arctanh(sphi) - E * np.arctanh(E * sphi))
-    xi_p = np.arctan2(t, np.cos(lam))
-    eta_p = np.arcsinh(np.sin(lam) / np.sqrt(t**2 + np.cos(lam) ** 2))
+def _tm_lat(lat: np.ndarray) -> np.ndarray:
+    """Latitude-only part of the forward Transverse Mercator: the
+    conformal latitude tangent t."""
+    sphi = np.sin(np.deg2rad(lat))
+    return np.sinh(np.arctanh(sphi) - E * np.arctanh(E * sphi))
+
+
+def _tm_lon(lon: np.ndarray, zone: int):
+    """Longitude-only part: (cos λ, sin λ) of the longitude from the
+    zone's central meridian."""
+    lam = np.deg2rad(lon) - np.deg2rad(zone * 6.0 - 183.0)
+    return np.cos(lam), np.sin(lam)
+
+
+def _tm_xy(t: np.ndarray, cos_lam: np.ndarray, sin_lam: np.ndarray,
+           south: bool):
+    """Per-point part: Gauss-Schreiber angles plus the Krüger series.
+    Returns (easting, northing)."""
+    xi_p = np.arctan2(t, cos_lam)
+    eta_p = np.arcsinh(sin_lam / np.sqrt(t**2 + cos_lam**2))
     xi = xi_p.copy()
     eta = eta_p.copy()
     for j, a_j in enumerate(_ALPHA, start=1):
@@ -81,6 +89,13 @@ def wgs84_to_utm(lon: np.ndarray, lat: np.ndarray, zone: int, south: bool):
     easting = UTM_FE + UTM_K0 * _A_BAR * eta
     northing = (UTM_FN_SOUTH if south else 0.0) + UTM_K0 * _A_BAR * xi
     return easting, northing
+
+
+def wgs84_to_utm(lon: np.ndarray, lat: np.ndarray, zone: int, south: bool):
+    """Forward Transverse Mercator (Karney series). Returns (easting, northing)."""
+    lon = np.asarray(lon, dtype=np.float64)
+    lat = np.asarray(lat, dtype=np.float64)
+    return _tm_xy(_tm_lat(lat), *_tm_lon(lon, zone), south)
 
 
 def utm_to_wgs84(x: np.ndarray, y: np.ndarray, zone: int, south: bool):
@@ -177,6 +192,38 @@ def transform_points(x, y, src_crs: str, dst_crs: str):
     return wgs84_to_cea(lon, lat)
 
 
+def transform_grid(tx: np.ndarray, ty: np.ndarray, src_crs: str,
+                   dst_crs: str):
+    """Transform the window of pixel centres with axes tx (w,) and
+    ty (h,) src_crs -> dst_crs. Returns (X, Y) of shape (h, w), bit for
+    bit what transform_points returns over meshgrid(tx, ty).
+
+    From a cylindrical source (EPSG:4326, EPSG:6933) into UTM, lon
+    depends on x alone and lat on y alone: the inverse CEA and the
+    conformal t run once per row, λ and its cos/sin once per column,
+    and only _tm_xy runs per pixel. Its inputs are materialized
+    contiguous because NumPy's SIMD and strided loops for the
+    transcendental ufuncs may differ in the last bit, and the full-grid
+    call takes the SIMD ones. Every other CRS pair transforms the full
+    grid."""
+    tx = np.asarray(tx, dtype=np.float64)
+    ty = np.asarray(ty, dtype=np.float64)
+    shape = (len(ty), len(tx))
+    if (src_crs == dst_crs or parse_epsg(src_crs)[0] == "utm"
+            or parse_epsg(dst_crs)[0] != "utm"):
+        TX, TY = np.meshgrid(tx, ty)
+        x, y = transform_points(TX.ravel(), TY.ravel(), src_crs, dst_crs)
+        return x.reshape(shape), y.reshape(shape)
+    _, dzone, dsouth = parse_epsg(dst_crs)
+    # cea_to_wgs84 maps x to lon and y to lat independently
+    lon, lat = ((tx, ty) if parse_epsg(src_crs)[0] == "wgs84"
+                else cea_to_wgs84(tx, ty))
+    cos_lam, sin_lam = _tm_lon(lon, dzone)
+    return _tm_xy(np.repeat(_tm_lat(lat), shape[1]).reshape(shape),
+                  np.tile(cos_lam, (shape[0], 1)),
+                  np.tile(sin_lam, (shape[0], 1)), dsouth)
+
+
 def transform_grid_approx(tx: np.ndarray, ty: np.ndarray, src_crs: str,
                           dst_crs: str, err_limit: float,
                           step: int = 16):
@@ -195,34 +242,24 @@ def transform_grid_approx(tx: np.ndarray, ty: np.ndarray, src_crs: str,
     Returns (sx, sy) of shape (h, w).
     """
     h, w = len(ty), len(tx)
-
-    def _exact():
-        TX, TY = np.meshgrid(tx, ty)
-        sx, sy = transform_points(TX.ravel(), TY.ravel(), src_crs, dst_crs)
-        return sx.reshape(TY.shape), sy.reshape(TY.shape)
-
     if src_crs == dst_crs or h < 4 or w < 4:
-        return _exact()
+        return transform_grid(tx, ty, src_crs, dst_crs)
     step = int(step)
     while step >= 2:
         xi = np.unique(np.concatenate([np.arange(0, w, step), [w - 1]]))
         yi = np.unique(np.concatenate([np.arange(0, h, step), [h - 1]]))
         if len(xi) < 2 or len(yi) < 2:
             break
-        Xg, Yg = np.meshgrid(tx[xi], ty[yi])
-        gx, gy = transform_points(Xg.ravel(), Yg.ravel(), src_crs, dst_crs)
-        gx = gx.reshape(Xg.shape)
-        gy = gy.reshape(Yg.shape)
+        gx, gy = transform_grid(tx[xi], ty[yi], src_crs, dst_crs)
         # bilinear value at every cell center is the 4-corner mean;
         # compare with the exact transform there (the reference's
         # subdivision test, reproject.rs:276-331)
         cx = (tx[xi][:-1] + tx[xi][1:]) / 2.0
         cy = (ty[yi][:-1] + ty[yi][1:]) / 2.0
-        CX, CY = np.meshgrid(cx, cy)
-        ex, ey = transform_points(CX.ravel(), CY.ravel(), src_crs, dst_crs)
+        ex, ey = transform_grid(cx, cy, src_crs, dst_crs)
         ix = (gx[:-1, :-1] + gx[:-1, 1:] + gx[1:, :-1] + gx[1:, 1:]) / 4.0
         iy = (gy[:-1, :-1] + gy[:-1, 1:] + gy[1:, :-1] + gy[1:, 1:]) / 4.0
-        err = max(np.abs(ix.ravel() - ex).max(), np.abs(iy.ravel() - ey).max())
+        err = max(np.abs(ix - ex).max(), np.abs(iy - ey).max())
         if err <= err_limit:
             def _w(n, idx):
                 k = np.clip(np.searchsorted(idx, np.arange(n), side="right") - 1,
@@ -244,7 +281,7 @@ def transform_grid_approx(tx: np.ndarray, ty: np.ndarray, src_crs: str,
                   + wy * wx * gy[KY + 1, KX + 1])
             return sx, sy
         step //= 2
-    return _exact()
+    return transform_grid(tx, ty, src_crs, dst_crs)
 
 
 def transform_bounds(bounds, src_crs: str, dst_crs: str, densify: int = 21):

@@ -47,20 +47,31 @@ def test_assignments_match_oracle(spark, images_pdf, images_sdf, grid):
     assert len(got) > N_TILES  # tiles overlap multiple chunks
 
 
-@pytest.mark.parametrize("crs", ["EPSG:32610", "EPSG:6933"])
+GRID_CRS = ["EPSG:32610", "EPSG:6933"]
+
+
+def _grid_in(grid: OutputGrid, crs: str) -> OutputGrid:
+    """`grid`'s area as a 10 m grid in `crs`: the native UTM 10N grid
+    itself, or an EPSG:6933 grid (the default output CRS) that every
+    tile reprojects into."""
+    if crs == grid.crs:
+        return grid
+    b = proj.transform_bounds(grid.bounds, grid.crs, crs, densify=21)
+    return OutputGrid(
+        bounds=(float(np.floor(b[0] / 10) * 10), float(np.floor(b[1] / 10) * 10),
+                float(np.ceil(b[2] / 10) * 10), float(np.ceil(b[3] / 10) * 10)),
+        crs=crs, resolution=10.0, years=grid.years, num_bands=3,
+        chunk_h=256, chunk_w=256)
+
+
+@pytest.mark.parametrize("crs", GRID_CRS)
 def test_kernel_chunk_ranges_within_assignments(spark, images_sdf, grid, crs):
     """The chunk-range law exists twice: numpy inside the
     reproject_patches kernel and Column arithmetic in
     with_chunk_ranges (behind assignments). Every chunk the kernel
     emits a patch for must be an assignment row — on the native grid
     and on an EPSG:6933 grid every tile reprojects into."""
-    if crs != grid.crs:
-        b = proj.transform_bounds(grid.bounds, grid.crs, crs, densify=21)
-        grid = OutputGrid(
-            bounds=(float(np.floor(b[0] / 10) * 10), float(np.floor(b[1] / 10) * 10),
-                    float(np.ceil(b[2] / 10) * 10), float(np.ceil(b[3] / 10) * 10)),
-            crs=crs, resolution=10.0, years=grid.years, num_bands=3,
-            chunk_h=256, chunk_w=256)
+    grid = _grid_in(grid, crs)
     got = {tuple(r) for r in M.reproject_patches(images_sdf, grid)
            .select("image_id", "time_idx", "row_idx", "col_idx").collect()}
     want = {tuple(r) for r in M.assignments(images_sdf, grid)
@@ -75,7 +86,9 @@ def test_assignment_excludes_wrong_year_and_far_tiles(spark, images_pdf, images_
     assert not (got_ids & y2022)
 
 
-def test_mean_mosaic_matches_oracle(spark, images_pdf, images_sdf, grid):
+@pytest.mark.parametrize("crs", GRID_CRS)
+def test_mean_mosaic_matches_oracle(spark, images_pdf, images_sdf, grid, crs):
+    grid = _grid_in(grid, crs)
     chunks = {
         (r.time_idx, r.row_idx, r.col_idx): r
         for r in M.mosaic(images_sdf, grid, mode="mean").collect()
@@ -93,7 +106,9 @@ def test_mean_mosaic_matches_oracle(spark, images_pdf, images_sdf, grid):
         )
 
 
-def test_last_on_top_matches_oracle(spark, images_pdf, images_sdf, grid):
+@pytest.mark.parametrize("crs", GRID_CRS)
+def test_last_on_top_matches_oracle(spark, images_pdf, images_sdf, grid, crs):
+    grid = _grid_in(grid, crs)
     chunks = {
         (r.time_idx, r.row_idx, r.col_idx): r
         for r in M.mosaic(images_sdf, grid, mode="last").collect()
@@ -110,12 +125,36 @@ def test_weighted_mode_runs(spark, images_sdf, grid):
     assert rows and all(r.valid_px > 0 for r in rows)
 
 
+def _finalize_mean_two_divisions(s, c):
+    """The int64 two-division form of the law, the reference for the
+    one-division _finalize_mean."""
+    cc = np.maximum(c, 1).astype(np.int64)
+    s = s.astype(np.int64)
+    pos = (s + cc // 2) // cc
+    neg = -((-s + cc // 2) // cc)
+    return np.where(s >= 0, pos, neg)
+
+
 def test_mean_rounding_reference_vector():
     # reference mosaic.rs tests: mean(10, 20) == 15; half-away-from-zero
     assert M._finalize_mean(np.array([30]), np.array([2]))[0] == 15
     assert M._finalize_mean(np.array([5]), np.array([2]))[0] == 3  # 2.5 -> 3
     assert M._finalize_mean(np.array([-5]), np.array([2]))[0] == -3  # -2.5 -> -3
     assert M._finalize_mean(np.array([7]), np.array([3]))[0] == 2
+    # random sums of both signs, counts including zero, in the callers'
+    # dtypes: int32 (the compositor, |s| + c//2 < 2**31 up to its
+    # patch-count bound) and int64 (overview, temporal, salted merge)
+    rng = np.random.default_rng(7)
+    for dtype, max_c, max_per in ((np.int32, (2**31 - 1) // 256, 255),
+                                  (np.int64, 2**31, 2**30)):
+        c = rng.integers(0, max_c, 200_000)
+        c[::17] = 0
+        s = rng.integers(-max_per, max_per + 1, c.size) * np.maximum(c, 1)
+        s[::13] = rng.integers(-max_per, max_per + 1, s[::13].size)
+        c, s = c.astype(dtype), s.astype(dtype)
+        got = M._finalize_mean(s, c)
+        assert got.dtype == dtype
+        assert np.array_equal(got, _finalize_mean_two_divisions(s, c)), dtype
 
 
 def test_caption_passthrough(spark, images_pdf, images_sdf, grid):

@@ -4,7 +4,7 @@ property testing; these pin the invariants its production bug class
 lived in: round-trips, top-down conventions, containment)."""
 
 import numpy as np
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from aef_mosaic_spark import cells, proj
@@ -13,6 +13,43 @@ from aef_mosaic_spark.operators.mosaic import _finalize_mean
 
 lon_s = st.floats(-179.9, 179.9, allow_nan=False)
 lat_s = st.floats(-84.0, 84.0, allow_nan=False)
+
+
+# (src, dst) pairs: cylindrical -> UTM north/south in zones 10 and 11
+# (the separable path), then the full-grid fallbacks: UTM source,
+# non-UTM destination, identity
+_GRID_PAIRS = [(s, d) for s in ("EPSG:6933", "EPSG:4326")
+               for d in ("EPSG:32610", "EPSG:32611", "EPSG:32710", "EPSG:32711")]
+_GRID_PAIRS += [("EPSG:32610", "EPSG:32611"), ("EPSG:32610", "EPSG:6933"),
+                ("EPSG:6933", "EPSG:4326"), ("EPSG:6933", "EPSG:6933")]
+
+
+@settings(max_examples=300, deadline=None)
+@given(pair=st.sampled_from(_GRID_PAIRS), lon=st.floats(-128.0, -112.0),
+       lat=st.floats(0.5, 70.0), h=st.integers(1, 96), w=st.integers(1, 96))
+@example(pair=("EPSG:6933", "EPSG:32610"), lon=-121.5, lat=37.0, h=1, w=256)
+@example(pair=("EPSG:6933", "EPSG:32611"), lon=-118.0, lat=37.0, h=256, w=1)
+@example(pair=("EPSG:4326", "EPSG:32710"), lon=-121.5, lat=12.0, h=1, w=256)
+@example(pair=("EPSG:4326", "EPSG:32711"), lon=-118.0, lat=12.0, h=256, w=1)
+@example(pair=("EPSG:6933", "EPSG:32610"), lon=-121.5, lat=37.0, h=256, w=256)
+def test_transform_grid_equals_full_grid_transform(pair, lon, lat, h, w):
+    """transform_grid over a window's pixel-centre axes is bit for bit
+    meshgrid + transform_points, on the separable path and the
+    fallbacks alike."""
+    src, dst = pair
+    if proj.parse_epsg(dst)[2]:  # UTM south
+        lat = -lat
+    # window origin and pixel size in the source CRS
+    x0, y0 = proj.transform_points(np.array([lon]), np.array([lat]),
+                                   "EPSG:4326", src)
+    res = 1e-4 if src == "EPSG:4326" else 10.0
+    tx = x0[0] + (np.arange(w) + 0.5) * res
+    ty = y0[0] - (np.arange(h) + 0.5) * res
+    gx, gy = proj.transform_grid(tx, ty, src, dst)
+    TX, TY = np.meshgrid(tx, ty)
+    ex, ey = proj.transform_points(TX.ravel(), TY.ravel(), src, dst)
+    assert gx.shape == gy.shape == (h, w)
+    assert np.array_equal(gx.ravel(), ex) and np.array_equal(gy.ravel(), ey)
 
 
 @settings(max_examples=200, deadline=None)
