@@ -8,8 +8,8 @@ variant (a) runs JVM-side with map-side partial aggregation, and
 __spark_entry__.py). Shuffle shape at 10^12 docs:
 
 - exact/fingerprint: one groupBy on a 128-bit key (combiner-friendly),
-- MinHash: explode(tokens) -> groupBy(doc) [local distinct + min] ->
-  explode(bands) -> groupBy(band bucket) — candidate pairs only ever
+- MinHash: map-side per-doc signatures (no exchange) -> explode(bands)
+  -> equi-join on the band bucket — candidate pairs only ever
   materialize within a bucket, never a crossJoin,
 - SimHash: banding on hash substrings, same property,
 - cosine: sign-LSH bucketing (see operators/knn.py).
@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from aef_mosaic_spark.functions.hashes import h32_col, minhash_coeffs, minhash_col
 from aef_mosaic_spark.functions.text import fingerprint_col
+from aef_mosaic_spark.operators.knn import bit_band_rows, bit_first_match
 from aef_mosaic_spark.partitioning import spread_fanout, spread_input
 
 
@@ -48,57 +49,56 @@ def exact_duplicate_groups(df: DataFrame, id_col: str, text_col: str,
     )
 
 
-def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
-                       k: int = 16) -> DataFrame:
-    """-> (id, mh0..mh{k-1}) MinHash signature columns over distinct
-    word tokens (shingle=1 word; Broder resemblance sketch).
-
-    ZERO-shuffle formulation (r6): the per-doc distinct token set is
-    an array_distinct projection and each signature min is an
-    array_min over a transform of the per-token h32 column — all
-    map-side, so the old explode -> distinct -> groupBy pair of
-    exchanges over the full token stream is gone (plan: 2 Exchange ->
-    0 before banding). Values are identical: min over the same
-    distinct token set, same (a,b) permutations. The token-hash array
-    materializes as its own projected column first (no-CSE-in-lambdas
-    law — inlined, the md5 would re-run once per permutation)."""
-    ts = token_sets(spread_input(df, id_col), id_col, text_col) \
-        .where(F.col("n") > 0)
-    hs = ts.select(F.col(id_col),
-                   F.transform("tokens", lambda t: h32_col(t)).alias("_h32"))
+def _minhash_base(df: DataFrame, id_col: str, text_col: str,
+                  k: int) -> DataFrame:
+    """-> (id, hashes, n, mh0..mh{k-1}) over non-empty docs, zero
+    shuffles: distinct tokens by array_distinct, each min an array_min
+    over the per-token h32 array, `hashes` the xxhash64 token hashes
+    the verify intersects. The h32 array is its own column first
+    (no-CSE-in-lambdas law: inlined, md5 re-runs per permutation)."""
+    base = token_sets(spread_input(df, id_col), id_col, text_col) \
+        .where(F.col("n") > 0) \
+        .withColumn("_h32", F.transform("tokens", lambda t: h32_col(t)))
     mhs = [
         F.array_min(F.transform("_h32", lambda h: minhash_col(h, a, b)))
         .alias(f"mh{i}")
         for i, (a, b) in enumerate(minhash_coeffs(k))
     ]
-    return hs.select(F.col(id_col), *mhs)
+    return base.select(
+        F.col(id_col),
+        F.transform("tokens", lambda t: F.xxhash64(t)).alias("hashes"),
+        F.col("n"), *mhs,
+    )
 
 
-def minhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
-                            k: int = 16, bands: int = 4) -> DataFrame:
-    """LSH banding: signature split into `bands` rows of k/bands mins;
-    candidates = pairs agreeing on >=1 full band. -> (id_a, id_b)."""
+def _band_rows(sigs: DataFrame, id_col: str, k: int,
+               bands: int) -> DataFrame:
+    """LSH banding of (id, mh0..mh{k-1}): each band value joins k/bands
+    consecutive mins -> (id, bv0..bv{bands-1}, band_idx, band_val),
+    one row per (doc, band)."""
     rows = k // bands
-    sigs = minhash_signatures(df, id_col, text_col, k)
     bv = [
         F.concat_ws(":", *[F.col(f"mh{bi * rows + j}") for j in range(rows)])
         .alias(f"bv{bi}")
         for bi in range(bands)
     ]
-    sigs = sigs.select(F.col(id_col), *bv)
-    banded = sigs.withColumn(
+    return sigs.select(F.col(id_col), *bv).withColumn(
         "band_idx", F.explode(F.array(*[F.lit(i) for i in range(bands)]))
     ).withColumn(
         "band_val",
         F.element_at(F.array(*[F.col(f"bv{i}") for i in range(bands)]),
                      F.col("band_idx") + 1),
     )
+
+
+def _first_band_pairs(banded: DataFrame, id_col: str,
+                      bands: int) -> DataFrame:
+    """Band-bucket self-join of _band_rows output -> (id_a, id_b),
+    id_a < id_b, each pair once: at its FIRST matching band (all
+    earlier bands differ), so no distinct() over the multiply-matched
+    join output. Assumes unique ids."""
     a = banded.alias("a")
     b = banded.alias("b")
-    # canonical-band dedup: emit a pair only at its FIRST matching band
-    # (all earlier bands differ) — exactly one row per candidate pair
-    # by construction, replacing a distinct() over the multiply-matched
-    # join output (a near-identical pair matches on every band)
     first_match = F.lit(True)
     for j in range(bands - 1):
         first_match = first_match & (
@@ -109,6 +109,53 @@ def minhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
         .where((F.col(f"a.{id_col}") < F.col(f"b.{id_col}")) & first_match)
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
     )
+
+
+def _jaccard_verify(cand: DataFrame, sets: DataFrame, id_col: str,
+                    threshold: float) -> DataFrame:
+    """Exact Jaccard of candidates (id_a, id_b) over `sets` (id,
+    hashes, n) -> (id_a, id_b, jaccard), 6 dp. Per-pair array_intersect
+    of 64-bit token hashes: O(|A|+|B|) long compares, immune to
+    frequent-token blowup (xxhash64 collisions ~2^-64 per pair); AQE
+    picks broadcast or shuffle for the set side."""
+    a = sets.select(F.col(id_col).alias("id_a"),
+                    F.col("hashes").alias("_ta"),
+                    F.col("n").alias("na"))
+    b = sets.select(F.col(id_col).alias("id_b"),
+                    F.col("hashes").alias("_tb"),
+                    F.col("n").alias("nb"))
+    return (
+        cand.join(a, "id_a").join(b, "id_b")
+        # exact length prefilter (Arasu/Bayardo-style): J <= min/max,
+        # so min(n) < t*max(n) cannot reach the threshold — the int
+        # compare prunes ~24% of candidates before the (expensive)
+        # per-pair array_intersect
+        .where(F.least("na", "nb") >= threshold * F.greatest("na", "nb"))
+        .withColumn("inter", F.size(F.array_intersect("_ta", "_tb")))
+        .withColumn("jaccard",
+                    F.round(F.col("inter")
+                            / (F.col("na") + F.col("nb") - F.col("inter")), 6))
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
+                       k: int = 16) -> DataFrame:
+    """-> (id, mh0..mh{k-1}) MinHash signature columns over distinct
+    word tokens (shingle=1 word; Broder resemblance sketch); docs with
+    no tokens have no row."""
+    return _minhash_base(df, id_col, text_col, k) \
+        .select(F.col(id_col), *[F.col(f"mh{i}") for i in range(k)])
+
+
+def minhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
+                            k: int = 16, bands: int = 4) -> DataFrame:
+    """LSH banding: signature split into `bands` rows of k/bands mins;
+    candidates = pairs agreeing on >=1 full band, one row per pair.
+    -> (id_a, id_b), id_a < id_b. Assumes unique ids."""
+    sigs = minhash_signatures(df, id_col, text_col, k)
+    return _first_band_pairs(_band_rows(sigs, id_col, k, bands), id_col, bands)
 
 
 def token_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -122,61 +169,20 @@ def token_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
-                  threshold: float, candidates: DataFrame | None = None,
-                  verify_broadcast: bool | None = False) -> DataFrame:
+                  threshold: float, candidates: DataFrame | None = None
+                  ) -> DataFrame:
     """Exact token-set Jaccard -> (id_a, id_b, jaccard).
 
-    With `candidates`: join each pair to its two token *arrays* and
-    intersect JVM-side (array_intersect) — per-pair O(|A|+|B|) work,
-    immune to frequent-token blowup (a corpus with a small vocabulary
-    makes every token a hot join key; candidate-scoped verification is
-    the scalable shape). Without candidates: token equi-join
-    reduction (pairs materialize per shared token, never a crossJoin).
-
-    verify_broadcast: False (DEFAULT) shuffle-joins the token sets on
-    id — always scale-safe, and measured fastest at gate scale (20.7 s
-    vs 22.3 s broadcast at sf0.1: the pair side shuffles either way).
-    True forces broadcasting the full per-doc token-set table — an
-    O(all docs) broadcast that must fit in every executor; small-n
-    only (this was round 1's unconditional default — a 10^9-doc OOM).
-    None first prunes the token-set side to docs that actually appear
-    in `candidates` (left-semi) and lets AQE pick broadcast-vs-shuffle
-    from the RUNTIME size of the pruned side — wins when candidates
-    touch a small fraction of the corpus, at the cost of re-evaluating
-    the candidate subtree for the prune.
-    """
+    With `candidates` (id_a, id_b): candidate-scoped verification
+    (_jaccard_verify) — the scalable shape, since a corpus with a
+    small vocabulary makes every token a hot join key. Without
+    candidates: token equi-join reduction over all pairs (pairs
+    materialize per shared token, never a crossJoin)."""
     if candidates is not None:
-        # intersect on 64-bit token hashes (cheap long equality instead
-        # of string compares; xxhash64 collisions are ~2^-64 per pair)
         ts = token_sets(df, id_col, text_col).withColumn(
             "hashes", F.transform("tokens", lambda t: F.xxhash64(t))
         )
-        if verify_broadcast is None:
-            ids = (candidates.select(F.col("id_a").alias(id_col))
-                   .union(candidates.select(F.col("id_b").alias(id_col))))
-            ts = ts.join(ids, id_col, "left_semi")
-        a = ts.select(F.col(id_col).alias("id_a"),
-                      F.col("hashes").alias("_ta"),
-                      F.col("n").alias("na"))
-        b = ts.select(F.col(id_col).alias("id_b"),
-                      F.col("hashes").alias("_tb"),
-                      F.col("n").alias("nb"))
-        if verify_broadcast:
-            a, b = F.broadcast(a), F.broadcast(b)
-        return (
-            candidates.join(a, "id_a").join(b, "id_b")
-            # exact length prefilter (Arasu/Bayardo-style): J <= min/max,
-            # so min(n) < t*max(n) cannot reach the threshold — the int
-            # compare prunes ~24% of candidates before the (expensive)
-            # per-pair array_intersect
-            .where(F.least("na", "nb") >= threshold * F.greatest("na", "nb"))
-            .withColumn("inter", F.size(F.array_intersect("_ta", "_tb")))
-            .withColumn("jaccard",
-                        F.round(F.col("inter")
-                                / (F.col("na") + F.col("nb") - F.col("inter")), 6))
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
+        return _jaccard_verify(candidates, ts, id_col, threshold)
     toks = distinct_tokens(df, id_col, text_col)
     sizes = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     a = toks.alias("a")
@@ -200,159 +206,23 @@ def jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
 
 def minhash_near_duplicates(df: DataFrame, id_col: str, text_col: str,
                             threshold: float = 0.7, k: int = 16,
-                            bands: int = 4, fused: bool = False,
-                            verify_broadcast: bool | None = False) -> DataFrame:
+                            bands: int = 4) -> DataFrame:
     """MinHash-LSH candidates verified by exact Jaccard — the standard
-    two-phase near-dup pipeline. -> (id_a, id_b, jaccard).
+    two-phase near-dup pipeline. -> (id_a, id_b, jaccard); equal to
+    jaccard_pairs(candidates=minhash_candidate_pairs(...)). Assumes
+    unique ids.
 
-    fused=False (DEFAULT): minhash_candidate_pairs -> jaccard_pairs.
-    The verify joins the thin pair set to the per-doc token-hash sets;
-    with no forced broadcast, AQE picks broadcast-hash when the
-    token-set side fits (it does for any corpus whose token sets fit
-    one executor) and falls back to a shuffle join when it doesn't —
-    never an OOM ceiling. Measured 20.7 s at sf0.1 (2.8M verified
-    pairs). verify_broadcast: False = let AQE decide (default),
-    None = semi-join prune first, True = force broadcast (small-n).
-
-    fused=True: ONE aggregation computes the k signature mins AND the
-    doc's 64-bit token-hash set AND its size, so the banded self-join
-    emits candidate pairs already carrying both token sets — verify is
-    map-side array_intersect and the PAIR SET IS NEVER SHUFFLED OR
-    JOINED. Slightly slower at gate scale (22.9 s: wider join output)
-    but the right plan at extreme scale, where candidate pairs >>
-    corpus and the token-set table no longer broadcasts: its shuffle
-    volume is bands x corpus, independent of the pair count.
-    Tested output-identical to the two-phase path.
-
-    r6 plan shape (two-phase default): ONE per-doc base table —
-    (id, hashes, n, mh0..mh{k-1}), all map-side array expressions —
-    is lazily localCheckpointed and feeds all four consumers (the two
-    banded self-join sides and the two verify sides), so the corpus
-    is scanned + tokenized + md5-hashed exactly ONCE instead of four
+    Plan shape (r6): ONE per-doc base table (_minhash_base) is lazily
+    localCheckpointed and feeds all four consumers (the two banded
+    self-join sides and the two verify sides), so the corpus is
+    scanned + tokenized + md5-hashed exactly ONCE instead of four
     times (Catalyst does not reuse multi-consumer subtrees — the
     scan-audit law). The checkpoint is O(docs) compact rows (token
-    hashes + k longs), the same per-doc state the fused variant
-    shuffles; it spills via MEMORY_AND_DISK storage at scale."""
-    if not fused:
-        rows = k // bands
-        base = token_sets(spread_input(df, id_col), id_col, text_col) \
-            .where(F.col("n") > 0) \
-            .withColumn("_h32", F.transform("tokens", lambda t: h32_col(t)))
-        mhs = [
-            F.array_min(F.transform("_h32", lambda h: minhash_col(h, a, b)))
-            .alias(f"mh{i}")
-            for i, (a, b) in enumerate(minhash_coeffs(k))
-        ]
-        base = base.select(
-            F.col(id_col),
-            F.transform("tokens", lambda t: F.xxhash64(t)).alias("hashes"),
-            F.col("n"), *mhs,
-        ).localCheckpoint(eager=False)
-        bv = [
-            F.concat_ws(":", *[F.col(f"mh{bi * rows + j}") for j in range(rows)])
-            .alias(f"bv{bi}")
-            for bi in range(bands)
-        ]
-        sigs = base.select(F.col(id_col), *bv)
-        banded = sigs.withColumn(
-            "band_idx", F.explode(F.array(*[F.lit(i) for i in range(bands)]))
-        ).withColumn(
-            "band_val",
-            F.element_at(F.array(*[F.col(f"bv{i}") for i in range(bands)]),
-                         F.col("band_idx") + 1),
-        )
-        a = banded.alias("a")
-        b = banded.alias("b")
-        # canonical-band dedup (same as minhash_candidate_pairs): a pair
-        # is emitted only at its FIRST matching band
-        first_match = F.lit(True)
-        for j in range(bands - 1):
-            first_match = first_match & (
-                (F.col("a.band_idx") <= j)
-                | (F.col(f"a.bv{j}") != F.col(f"b.bv{j}"))
-            )
-        cand = (
-            a.join(b, ["band_idx", "band_val"])
-            .where((F.col(f"a.{id_col}") < F.col(f"b.{id_col}")) & first_match)
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"))
-        )
-        ta = base.select(F.col(id_col).alias("id_a"),
-                         F.col("hashes").alias("_ta"),
-                         F.col("n").alias("na"))
-        tb = base.select(F.col(id_col).alias("id_b"),
-                         F.col("hashes").alias("_tb"),
-                         F.col("n").alias("nb"))
-        if verify_broadcast is None:
-            ids = (cand.select(F.col("id_a").alias(id_col))
-                   .union(cand.select(F.col("id_b").alias(id_col))))
-            ta = ta.join(ids.withColumnRenamed(id_col, "id_a"),
-                         "id_a", "left_semi")
-            tb = tb.join(ids.withColumnRenamed(id_col, "id_b"),
-                         "id_b", "left_semi")
-        elif verify_broadcast:
-            ta, tb = F.broadcast(ta), F.broadcast(tb)
-        return (
-            cand.join(ta, "id_a").join(tb, "id_b")
-            # exact length prefilter (Arasu/Bayardo): J <= min/max
-            .where(F.least("na", "nb") >= threshold * F.greatest("na", "nb"))
-            .withColumn("inter", F.size(F.array_intersect("_ta", "_tb")))
-            .withColumn("jaccard",
-                        F.round(F.col("inter")
-                                / (F.col("na") + F.col("nb") - F.col("inter")),
-                                6))
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-    rows = k // bands
-    toks = distinct_tokens(df, id_col, text_col).withColumn(
-        "h", h32_col(F.col("token"))
-    ).withColumn("h64", F.xxhash64(F.col("token")))
-    aggs = [
-        F.min(minhash_col(F.col("h"), a, b)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(k))
-    ] + [F.collect_set("h64").alias("hashes"),
-         F.count(F.lit(1)).alias("n")]
-    sigs = toks.groupBy(id_col).agg(*aggs)
-    bv = [
-        F.concat_ws(":", *[F.col(f"mh{bi * rows + j}") for j in range(rows)])
-        .alias(f"bv{bi}")
-        for bi in range(bands)
-    ]
-    sigs = sigs.select(F.col(id_col), F.col("hashes"), F.col("n"), *bv)
-    banded = sigs.withColumn(
-        "band_idx", F.explode(F.array(*[F.lit(i) for i in range(bands)]))
-    ).withColumn(
-        "band_val",
-        F.element_at(F.array(*[F.col(f"bv{i}") for i in range(bands)]),
-                     F.col("band_idx") + 1),
-    )
-    a = banded.select(
-        F.col(id_col).alias("id_a"), F.col("hashes").alias("_ta"),
-        F.col("n").alias("na"), "band_idx", "band_val",
-        *[F.col(f"bv{j}").alias(f"_av{j}") for j in range(bands - 1)])
-    b = banded.select(
-        F.col(id_col).alias("id_b"), F.col("hashes").alias("_tb"),
-        F.col("n").alias("nb"), "band_idx", "band_val",
-        *[F.col(f"bv{j}").alias(f"_bv{j}") for j in range(bands - 1)])
-    # canonical-band dedup: emit a pair only at its FIRST matching band
-    first_match = F.lit(True)
-    for j in range(bands - 1):
-        first_match = first_match & (
-            (F.col("band_idx") <= j) | (F.col(f"_av{j}") != F.col(f"_bv{j}"))
-        )
-    return (
-        a.join(b, ["band_idx", "band_val"])
-        .where((F.col("id_a") < F.col("id_b")) & first_match)
-        # same exact length prefilter as the two-phase verify
-        .where(F.least("na", "nb") >= threshold * F.greatest("na", "nb"))
-        .withColumn("inter", F.size(F.array_intersect("_ta", "_tb")))
-        .withColumn("jaccard",
-                    F.round(F.col("inter")
-                            / (F.col("na") + F.col("nb") - F.col("inter")), 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    hashes + k longs); it spills via MEMORY_AND_DISK storage at
+    scale."""
+    base = _minhash_base(df, id_col, text_col, k).localCheckpoint(eager=False)
+    cand = _first_band_pairs(_band_rows(base, id_col, k, bands), id_col, bands)
+    return _jaccard_verify(cand, base, id_col, threshold)
 
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 2,
@@ -463,44 +333,24 @@ def hamming_near_duplicates(df: DataFrame, id_col: str, hash_col: str,
                             n_bands: int = 4) -> DataFrame:
     """Banded near-dup join over ANY 64-bit hash column (simhash,
     image phash, audio fingerprint): band into 64/n_bands-bit keys
-    (complete recall for hamming < n_bands; good above), equi-join on
-    (band_idx, band_val) — never a crossJoin — verify exact
-    Hamming <= max_hamming. -> (id_a, id_b, hamming).
-
-    Canonical-band dedup (r6, VERDICT r5 #3): a pair is emitted only
-    at its FIRST agreeing band — every earlier band of h_a XOR h_b
-    must be nonzero — exactly one row per candidate pair by
-    construction, replacing the old O(candidate-pairs) ``distinct()``
-    shuffle over the multiply-matched join output (a near-identical
-    pair matches on every band). Both sides carry the full 64-bit
-    hash, so the earlier-band comparison is exact (same pattern as
-    minhash_candidate_pairs / embedding_near_duplicates)."""
-    width = 64 // n_bands
-    mask = (1 << width) - 1
+    (knn.bit_band_rows; complete recall for hamming < n_bands, good
+    above), equi-join on (band_idx, band_val) — never a crossJoin —
+    emit each pair once at its first agreeing band
+    (knn.bit_first_match), verify exact Hamming <= max_hamming.
+    -> (id_a, id_b, hamming). Requires unique ids: repeated ids give
+    repeated pairs."""
     # spread_fanout: the (id, hash) table is thin but the band-bucket
     # self-join multiplies rows by the bucket sizes; without an
     # explicit partition count AQE coalesces the tiny pre-join bytes
     # to 1-2 partitions and the fan-out runs on 1-2 cores
-    banded = spread_fanout(
-        df.select(F.col(id_col), F.col(hash_col).alias("_h")), id_col) \
-        .withColumn(
-        "band_idx", F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1)))
-    ).withColumn(
-        "band_val",
-        F.expr(f"shiftrightunsigned(_h, CAST(band_idx * {width} AS INT))"
-               f" & {mask}"),
-    )
+    banded = bit_band_rows(spread_fanout(
+        df.select(F.col(id_col), F.col(hash_col).alias("_h")), id_col),
+        "_h", n_bands)
     a, b = banded.alias("a"), banded.alias("b")
-    # column-valued shift counts need the SQL form (Column-API shifts
-    # take literal counts only — repo law)
-    first_match = F.expr(
-        f"band_idx = 0 OR forall(sequence(0, band_idx - 1), "
-        f"j -> (shiftrightunsigned(a._h ^ b._h, CAST(j * {width} AS INT))"
-        f" & {mask}) != 0)"
-    )
     return (
         a.join(b, ["band_idx", "band_val"])
-        .where((F.col(f"a.{id_col}") < F.col(f"b.{id_col}")) & first_match)
+        .where((F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+               & bit_first_match("a._h", "b._h", n_bands))
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"),
                 F.bit_count(F.col("a._h").bitwiseXOR(F.col("b._h")))
                 .cast("int").alias("hamming"))
@@ -657,20 +507,9 @@ def minhash_band_rows(df: DataFrame, id_col: str, text_col: str,
     shared by candidate generation and the incremental update path.
     At corpus scale this IS the dedup index — persist it (icelite) and
     append each increment's rows instead of recomputing O(corpus)."""
-    rows = k // bands
     sigs = minhash_signatures(df, id_col, text_col, k)
-    bv = [
-        F.concat_ws(":", *[F.col(f"mh{bi * rows + j}") for j in range(rows)])
-        .alias(f"bv{bi}")
-        for bi in range(bands)
-    ]
-    return sigs.select(F.col(id_col), *bv).withColumn(
-        "band_idx", F.explode(F.array(*[F.lit(i) for i in range(bands)]))
-    ).withColumn(
-        "band_val",
-        F.element_at(F.array(*[F.col(f"bv{i}") for i in range(bands)]),
-                     F.col("band_idx") + 1),
-    ).select(F.col(id_col).alias("id"), "band_idx", "band_val")
+    return _band_rows(sigs, id_col, k, bands) \
+        .select(F.col(id_col).alias("id"), "band_idx", "band_val")
 
 
 def update_near_duplicate_clusters(df_all: DataFrame, new_ids: DataFrame,
@@ -703,6 +542,8 @@ def update_near_duplicate_clusters(df_all: DataFrame, new_ids: DataFrame,
     banded = (band_rows_all if band_rows_all is not None
               else minhash_band_rows(df_all, id_col, text_col, k, bands))
     b_new = banded.join(new_ids, "id", "left_semi")
+    # distinct(), not a first-match predicate: the persisted band index
+    # keeps only (id, band_idx, band_val), no earlier-band values
     cand = (b_new.alias("a")
             .join(banded.alias("b"), ["band_idx", "band_val"])
             .where(F.col("a.id") != F.col("b.id"))
@@ -774,7 +615,9 @@ def embedding_near_duplicates(df: DataFrame, id_col: str, vec_col: str,
     — that equality, not this estimate, is the verified property;
     raise n_bands (narrower bands -> more candidates) for corpora
     dense at the boundary. The candidate join output carries both vectors, so verify
-    adds no extra join.
+    adds no extra join. Each candidate pair is emitted once, at its
+    first agreeing band (knn.bit_first_match); requires unique ids —
+    repeated ids give repeated pairs.
 
     method='exact': all-pairs crossJoin — the small-n oracle-parity
     baseline ONLY (O(n^2); unusable at corpus scale, and required when
@@ -794,8 +637,6 @@ def embedding_near_duplicates(df: DataFrame, id_col: str, vec_col: str,
             .select("id_a", "id_b", "sim")
         )
 
-    width = n_planes // n_bands
-    mask = (1 << width) - 1
     planes = make_planes(dim, n_planes)
     # spread_input: parallelize the n_planes dot products over the
     # session's cores (a single-file scan otherwise runs them on one
@@ -805,27 +646,12 @@ def embedding_near_duplicates(df: DataFrame, id_col: str, vec_col: str,
         F.col(id_col), F.col(vec_col).alias("_v"),
         lsh_signature(F.col(vec_col), planes).alias("_sig"),
     )
-    banded = sigs.withColumn(
-        "band_idx", F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1)))
-    ).withColumn(
-        "band_val",
-        F.expr(f"shiftrightunsigned(_sig, CAST(band_idx * {width} AS INT))"
-               f" & {mask}"),
-    )
+    banded = bit_band_rows(sigs, "_sig", n_bands, bits=n_planes)
     a = banded.select(F.col(id_col).alias("id_a"), F.col("_v").alias("_va"),
                       F.col("_sig").alias("_siga"), "band_idx", "band_val")
     b = banded.select(F.col(id_col).alias("id_b"), F.col("_v").alias("_vb"),
                       F.col("_sig").alias("_sigb"), "band_idx", "band_val")
-    # canonical-band dedup (same trick as minhash_candidate_pairs): a
-    # pair is emitted ONLY at its first agreeing band — every earlier
-    # band of sig_a XOR sig_b must be nonzero — so no distinct() over
-    # the multiply-matched join output is needed (column-valued shift
-    # counts require the SQL form, per the Column-API literal rule)
-    first_match = F.expr(
-        f"band_idx = 0 OR forall(sequence(0, band_idx - 1), "
-        f"j -> (shiftrightunsigned(_siga ^ _sigb, CAST(j * {width} AS INT))"
-        f" & {mask}) != 0)"
-    )
+    first_match = bit_first_match("_siga", "_sigb", n_bands, bits=n_planes)
     return (
         a.join(b, ["band_idx", "band_val"])
         .where((F.col("id_a") < F.col("id_b")) & first_match)

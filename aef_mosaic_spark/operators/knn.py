@@ -38,35 +38,52 @@ def knn_hamming_exact(queries: DataFrame, items: DataFrame, k: int,
     )
 
 
+def bit_band_rows(df: DataFrame, hash_col: str, n_bands: int,
+                  bits: int = 64) -> DataFrame:
+    """df + (band_idx, band_val): one row per band of bits/n_bands bits
+    of the `bits`-bit `hash_col`. Hashes within Hamming < n_bands agree
+    on >=1 band (pigeonhole). Column-valued shift counts need the SQL
+    form (the Column API takes literal counts only)."""
+    width = bits // n_bands
+    return df.withColumn(
+        "band_idx", F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1)))
+    ).withColumn(
+        "band_val",
+        F.expr(f"shiftrightunsigned({hash_col}, CAST(band_idx * {width} AS INT))"
+               f" & {(1 << width) - 1}"),
+    )
+
+
+def bit_first_match(ha: str, hb: str, n_bands: int, bits: int = 64):
+    """Predicate for a bit_band_rows join on (band_idx, band_val) with
+    full hashes in columns `ha`, `hb`: true only at the pair's FIRST
+    agreeing band, so each pair of input rows is emitted once, with no
+    distinct(). Requires unique ids: repeated ids give repeated pairs."""
+    width = bits // n_bands
+    return F.expr(
+        f"band_idx = 0 OR forall(sequence(0, band_idx - 1), "
+        f"j -> (shiftrightunsigned({ha} ^ {hb}, CAST(j * {width} AS INT))"
+        f" & {(1 << width) - 1}) != 0)"
+    )
+
+
 def knn_hamming_banded(queries: DataFrame, items: DataFrame, k: int,
                        q_id: str = "query_id", i_id: str = "item_id",
                        n_bands: int = 4) -> DataFrame:
-    """Scale path: LSH banding — split the 64-bit hash into `n_bands`
-    bands of 64/n_bands bits; candidates = pairs sharing >=1 band
-    (guaranteed to include every pair with Hamming distance < n_bands,
-    pigeonhole); then exact distance + top-k. Replaces the crossJoin
-    with an equi-join on (band_idx, band_value)."""
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-
-    def banded(df, idc, hc):
-        return (
-            df.select(F.col(idc), F.col("phash").alias(hc))
-            .withColumn("band_idx", F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))))
-            .withColumn(
-                "band_val",
-                F.expr(f"shiftrightunsigned({hc}, CAST(band_idx * {width} AS INT))"
-                       f" & {mask}"),
-            )
-        )
-
-    q = banded(queries, q_id, "_qh")
-    i = banded(items, i_id, "_ih")
+    """Scale path: LSH banding (bit_band_rows) — candidates = pairs
+    sharing >=1 band (guaranteed to include every pair with Hamming
+    distance < n_bands, pigeonhole), each emitted once at its first
+    agreeing band (bit_first_match); then exact distance + top-k.
+    Replaces the crossJoin with an equi-join on (band_idx, band_val).
+    Requires unique q_id among queries and unique i_id among items."""
+    q = bit_band_rows(queries.select(F.col(q_id), F.col("phash").alias("_qh")),
+                      "_qh", n_bands)
+    i = bit_band_rows(items.select(F.col(i_id), F.col("phash").alias("_ih")),
+                      "_ih", n_bands)
     cand = (
         q.join(i, ["band_idx", "band_val"])
-        .where(F.col(q_id) != F.col(i_id))
+        .where((F.col(q_id) != F.col(i_id)) & bit_first_match("_qh", "_ih", n_bands))
         .select(q_id, i_id, "_qh", "_ih")
-        .dropDuplicates([q_id, i_id])
     )
     cand = cand.withColumn("dist", hamming(F.col("_qh"), F.col("_ih")).cast("int"))
     return _topk(cand, q_id, [F.col("dist"), F.col(i_id)], k).select(
@@ -227,7 +244,12 @@ def ann_cosine_lsh(queries: DataFrame, items: DataFrame, k: int, dim: int,
     `max_sig_hamming` bit flips of its own (explode of xor masks), and
     candidates come from a signature EQUI-join — no crossJoin anywhere.
     Scale path for 10^12 vectors: per-query work ~ probe_count x
-    avg bucket size instead of |items|."""
+    avg bucket size instead of |items|.
+
+    Each (query, item) pair is emitted at most once with no dedup
+    step: the xor masks are distinct, so a query's probe signatures
+    are distinct, and an item has one signature. Requires unique
+    q_id among queries and unique i_id among items."""
     planes = make_planes(dim, n_planes)
     masks = [0] + [1 << j for j in range(n_planes)]
     if max_sig_hamming >= 2:
@@ -247,11 +269,7 @@ def ann_cosine_lsh(queries: DataFrame, items: DataFrame, k: int, dim: int,
         F.col(i_id), F.col(vec).alias("_iv"),
         lsh_signature(F.col(vec), planes).alias("_sig"),
     )
-    cand = (
-        q.join(i, "_sig")
-        .where(F.col(q_id) != F.col(i_id))
-        .dropDuplicates([q_id, i_id])
-    )
+    cand = q.join(i, "_sig").where(F.col(q_id) != F.col(i_id))
     cand = cand.withColumn("sim", F.round(cosine_sim(F.col("_qv"), F.col("_iv")), 6))
     return _topk(cand, q_id, [F.col("sim").desc(), F.col(i_id)], k).select(
         q_id, i_id, "sim", "rank"

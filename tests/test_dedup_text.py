@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from aef_mosaic_spark.functions import text as T
@@ -160,30 +161,36 @@ def test_embedding_near_dup_lsh_plan_has_no_cross_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_jaccard_verify_strategies_agree(spark):
-    """All three verify-join strategies (shuffle default, forced
-    broadcast, semi-join prune + AQE) must give identical pairs."""
-    d = _sdf(spark)
-    outs = []
-    for vb in (False, True, None):
-        outs.append({(r.id_a, r.id_b, r.jaccard) for r in
-                     D.minhash_near_duplicates(
-                         d, "doc_id", "text", threshold=0.5,
-                         verify_broadcast=vb).collect()})
-    assert outs[0] == outs[1] == outs[2]
-    assert len(outs[0]) > 0  # doc 0/1 are exact dups -> jaccard 1.0
-
-
-def test_minhash_fused_equals_two_phase(spark):
-    """The pair-shuffle-free fused plan must reproduce the two-phase
-    result exactly (same candidates via canonical-band dedup, same
-    64-bit token-hash intersection)."""
+def test_minhash_entry_points_agree(spark):
+    """The single-scan minhash_near_duplicates equals the public
+    candidate -> verify composition, and every pair it returns carries
+    its exact all-pairs Jaccard."""
     d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    two = {tuple(r) for r in D.minhash_near_duplicates(
-        d, "doc_id", "text", threshold=0.8, fused=False).collect()}
-    fus = {tuple(r) for r in D.minhash_near_duplicates(
-        d, "doc_id", "text", threshold=0.8, fused=True).collect()}
-    assert fus == two and len(two) > 0
+    one = {tuple(r) for r in D.minhash_near_duplicates(
+        d, "doc_id", "text", threshold=0.8).collect()}
+    two = {tuple(r) for r in D.jaccard_pairs(
+        d, "doc_id", "text", 0.8,
+        candidates=D.minhash_candidate_pairs(d, "doc_id", "text")).collect()}
+    assert one == two and len(one) > 0
+    exact = {(r.id_a, r.id_b): r.jaccard for r in
+             D.jaccard_pairs(d, "doc_id", "text", 0.8).collect()}
+    assert all(exact.get((a, b)) == j for a, b, j in one)
+
+
+@pytest.mark.parametrize("texts", [[], ["", "   ", "\t\n"]],
+                         ids=["empty", "blank"])
+def test_degenerate_corpus_gives_empty_results(spark, texts):
+    d = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    outs = {
+        ("id_a", "id_b", "jaccard"): D.minhash_near_duplicates(d, "doc_id", "text"),
+        ("id_a", "id_b"): D.minhash_candidate_pairs(d, "doc_id", "text"),
+        ("id", "band_idx", "band_val"): D.minhash_band_rows(d, "doc_id", "text"),
+        ("id_a", "id_b", "hamming"): D.hamming_near_duplicates(
+            D.simhash(d, "doc_id", "text"), "doc_id", "simhash"),
+    }
+    for cols, out in outs.items():
+        assert tuple(out.columns) == cols
+        assert out.count() == 0
 
 
 def test_winnowing_guarantee(spark):

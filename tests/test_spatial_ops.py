@@ -118,6 +118,46 @@ def test_knn_hamming_exact_vs_bruteforce(spark):
         assert sorted(by_q[qid]) == want
 
 
+def _aggregates(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "HashAggregate" in plan or "SortAggregate" in plan
+
+
+def _flip(h: int, bits) -> int:
+    v = int(h) & (2**64 - 1)
+    for b in bits:
+        v ^= 1 << int(b)
+    return v - 2**64 if v >= 2**63 else v
+
+
+def test_knn_hamming_banded_equals_exact(spark):
+    """Each query's true top-k lies within Hamming < n_bands, so the
+    banded candidates hold it; the query's twins (equal hash) agree on
+    every band and must still be emitted once."""
+    n_bands, k = 4, 4
+    rng = np.random.RandomState(6)
+    far = rng.randint(np.iinfo(np.int64).min, np.iinfo(np.int64).max, 60,
+                      dtype=np.int64)
+    rows = [(f"i{j:03d}", int(h)) for j, h in enumerate(far)]
+    for qi in range(5):
+        h = int(far[qi])
+        bits = rng.choice(64, 3, replace=False)
+        rows += [(f"q{qi}t0", h), (f"q{qi}t1", h),
+                 (f"q{qi}d1", _flip(h, bits[:1])), (f"q{qi}d2", _flip(h, bits[:2])),
+                 (f"q{qi}d3", _flip(h, bits))]
+    items = spark.createDataFrame(rows, "item_id string, phash long")
+    qs = items.where(F.col("item_id") < "i005") \
+        .withColumnRenamed("item_id", "query_id")
+    exact = K.knn_hamming_exact(qs, items, k=k).collect()
+    assert max(r.dist for r in exact) < n_bands
+    banded_df = K.knn_hamming_banded(qs, items, k=k, n_bands=n_bands)
+    banded = banded_df.collect()
+    pairs = [(r.query_id, r.item_id) for r in banded]
+    assert len(pairs) == len(set(pairs)) == 5 * k
+    assert sorted(map(tuple, banded)) == sorted(map(tuple, exact))
+    assert not _aggregates(banded_df)
+
+
 def test_knn_cosine_exact_vs_numpy(spark):
     rng = np.random.RandomState(4)
     vecs = rng.randn(60, 8).round(4)
@@ -149,9 +189,11 @@ def test_ann_lsh_recall(spark):
     qs = items.iloc[::40].rename(columns={"item_id": "query_id"})
     exact = K.knn_cosine_exact(
         spark.createDataFrame(qs), spark.createDataFrame(items), k=1).collect()
-    ann = K.ann_cosine_lsh(
+    ann_df = K.ann_cosine_lsh(
         spark.createDataFrame(qs), spark.createDataFrame(items), k=1,
-        dim=16, n_planes=8, max_sig_hamming=2).collect()
+        dim=16, n_planes=8, max_sig_hamming=2)
+    ann = ann_df.collect()
+    assert not _aggregates(ann_df)  # no dedup over (query, item)
     exact_nn = {r.query_id: r.item_id for r in exact}
     ann_nn = {r.query_id: r.item_id for r in ann}
     hits = sum(ann_nn.get(k) == v for k, v in exact_nn.items())
