@@ -117,78 +117,60 @@ def wgs84_prefilter(images: DataFrame, grid: OutputGrid,
     )
 
 
-def with_grid_bounds(df: DataFrame, grid: OutputGrid) -> DataFrame:
-    """Add tile bounds in the grid CRS (gx0, gy0, gx1, gy1) as a
-    pass-through mapInPandas projection — NO join back (a join would
-    shuffle the image bytes and recompute the scan branch twice).
-    Feed it metadata columns only: every column crosses the Python
-    boundary."""
-    dst = grid.crs
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema += ", gx0 double, gy0 double, gx1 double, gy1 double"
+def _chunk_ranges(pdf: pd.DataFrame, grid: OutputGrid,
+                  row_range: tuple[int, int] | None = None):
+    """THE chunk-range law over an Arrow batch of tile metadata: the
+    analytic tile->chunk inversion (reference output_grid.rs:315-384,
+    J2) plus the year filter F5 (spatial_lookup.rs:61-74).
 
-    def _tx(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            gx0, gy0, gx1, gy1 = _grid_bounds_np(pdf, dst)
-            out = pdf.copy()
-            out["gx0"], out["gy0"], out["gx1"], out["gy1"] = gx0, gy0, gx1, gy1
-            yield out
-
-    return df.mapInPandas(_tx, schema=schema)
-
-
-def with_chunk_ranges(df: DataFrame, grid: OutputGrid) -> DataFrame:
-    """Add inclusive chunk-range columns + time_idx, filter to tiles
-    that intersect the grid and a configured year — all pure Column
-    arithmetic (Catalyst codegen, pushdown-friendly). Mirrors
-    chunks_for_bounds_wgs84 (reference output_grid.rs:315-384) and the
-    year filter F5 (spatial_lookup.rs:61-74). reproject_patches applies
-    the same law in numpy; tests pin the two to each other."""
-    gx0, gy0, gx1, gy1 = grid.bounds
-    gx1 = gx0 + grid.width * grid.resolution
-    gy0 = gy1 - grid.height * grid.resolution
+    Returns (ok, row_min, row_max, col_min, col_max, gbox): inclusive
+    ranges clipped to the grid (and to the row band row_range=(r0, r1)
+    if given), `ok` marking the rows in a grid year whose ranges are
+    non-empty, and gbox = the (gx0, gy0, gx1, gy1) tile bounds in the
+    grid CRS. OutputGrid.chunk_ranges_for_bounds is its scalar
+    reference."""
+    gx0, gy0, gx1, gy1 = _grid_bounds_np(pdf, grid.crs)
+    x0, _, _, y1 = grid.bounds
+    x1 = x0 + grid.width * grid.resolution
+    y0 = y1 - grid.height * grid.resolution
     cw = grid.chunk_w * grid.resolution
     ch = grid.chunk_h * grid.resolution
-    years_map = F.create_map(
-        *[F.lit(v) for y, t in ((y, i) for i, y in enumerate(grid.years)) for v in (y, t)]
-    )
-    out = (
-        df.where(
-            (F.col("gx0") < gx1) & (F.col("gx1") > gx0)
-            & (F.col("gy0") < gy1) & (F.col("gy1") > gy0)
-            & F.col("year").isin(list(grid.years))
-        )
-        .withColumn("time_idx", years_map[F.col("year")])
-        .withColumn(
-            "col_min",
-            F.greatest(F.floor((F.col("gx0") - F.lit(gx0)) / cw), F.lit(0)).cast("int"),
-        )
-        .withColumn(
-            "col_max",
-            F.least(F.ceil((F.col("gx1") - F.lit(gx0)) / cw) - 1,
-                    F.lit(grid.chunk_cols - 1)).cast("int"),
-        )
-        .withColumn(
-            "row_min",
-            F.greatest(F.floor((F.lit(gy1) - F.col("gy1")) / ch), F.lit(0)).cast("int"),
-        )
-        .withColumn(
-            "row_max",
-            F.least(F.ceil((F.lit(gy1) - F.col("gy0")) / ch) - 1,
-                    F.lit(grid.chunk_rows - 1)).cast("int"),
-        )
-        .where((F.col("col_min") <= F.col("col_max")) & (F.col("row_min") <= F.col("row_max")))
-    )
-    return out
+    r_lo, r_hi = row_range if row_range is not None else (0, grid.chunk_rows - 1)
+    col_min = np.maximum(np.floor((gx0 - x0) / cw), 0).astype(int)
+    col_max = np.minimum(np.ceil((gx1 - x0) / cw) - 1, grid.chunk_cols - 1).astype(int)
+    row_min = np.maximum(np.floor((y1 - gy1) / ch), r_lo).astype(int)
+    row_max = np.minimum(np.ceil((y1 - gy0) / ch) - 1, r_hi).astype(int)
+    ok = ((gx0 < x1) & (gx1 > x0) & (gy0 < y1) & (gy1 > y0)
+          & (col_min <= col_max) & (row_min <= row_max)
+          & pdf["year"].isin(grid.years).to_numpy())
+    return ok, row_min, row_max, col_min, col_max, (gx0, gy0, gx1, gy1)
 
 
 def assignments(df: DataFrame, grid: OutputGrid) -> DataFrame:
     """(image_id, time_idx, row_idx, col_idx) — the join-output
     tile/cell assignment table (golden_assignments fixture; J2+J3).
-    Pure JVM explode of `sequence` ranges; bytes are pruned before the
-    bounds UDF so only metadata crosses the Python boundary."""
+    One metadata-only mapInPandas applies _chunk_ranges (bytes are
+    pruned first, so only metadata crosses the Python boundary), then
+    a pure JVM explode of the `sequence` ranges."""
     meta = df.select("image_id", "crs", "min_x", "min_y", "max_x", "max_y", "year")
-    ranged = with_chunk_ranges(with_grid_bounds(meta, grid), grid)
+    gd = grid.to_dict()
+    t_for_year = {y: i for i, y in enumerate(grid.years)}
+    id_type = meta.schema["image_id"].dataType.simpleString()
+
+    def _ranges(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        g = OutputGrid.from_dict(gd)
+        for pdf in it:
+            ok, row_min, row_max, col_min, col_max, _ = _chunk_ranges(pdf, g)
+            yield pd.DataFrame({
+                "image_id": pdf["image_id"].to_numpy()[ok],
+                "time_idx": [t_for_year[y] for y in pdf["year"].to_numpy()[ok]],
+                "row_min": row_min[ok], "row_max": row_max[ok],
+                "col_min": col_min[ok], "col_max": col_max[ok],
+            })
+
+    ranged = meta.mapInPandas(
+        _ranges, schema=f"image_id {id_type}, time_idx int, row_min int, "
+                        "row_max int, col_min int, col_max int")
     return (
         ranged.select(
             "image_id", "time_idx",
@@ -289,13 +271,6 @@ def reproject_patches(tiles: DataFrame, grid: OutputGrid,
     nb = grid.num_bands
     gd = grid.to_dict()
     has_todo = "todo" in tiles.columns
-    band_lo, band_hi = row_range if row_range is not None \
-        else (0, grid.chunk_rows - 1)
-    gx0g, _, _, gy1g = grid.bounds
-    gx1g = gx0g + grid.width * grid.resolution
-    gy0g = gy1g - grid.height * grid.resolution
-    cw = grid.chunk_w * grid.resolution
-    ch = grid.chunk_h * grid.resolution
     n_cols = grid.chunk_cols
     t_for_year = {y: i for i, y in enumerate(grid.years)}
 
@@ -304,19 +279,11 @@ def reproject_patches(tiles: DataFrame, grid: OutputGrid,
         for pdf in it:
             if not len(pdf):
                 continue
-            # the chunk-range law (with_chunk_ranges' Column twin)
-            gx0, gy0, gx1, gy1 = _grid_bounds_np(pdf, g.crs)
-            col_min = np.maximum(np.floor((gx0 - gx0g) / cw), 0).astype(int)
-            col_max = np.minimum(np.ceil((gx1 - gx0g) / cw) - 1,
-                                 n_cols - 1).astype(int)
-            row_min = np.maximum(np.floor((gy1g - gy1) / ch), band_lo).astype(int)
-            row_max = np.minimum(np.ceil((gy1g - gy0) / ch) - 1,
-                                 band_hi).astype(int)
-            ok = ((gx0 < gx1g) & (gx1 > gx0g) & (gy0 < gy1g) & (gy1 > gy0g)
-                  & (col_min <= col_max) & (row_min <= row_max))
+            ok, row_min, row_max, col_min, col_max, (gx0, gy0, gx1, gy1) = \
+                _chunk_ranges(pdf, g, row_range)
             rows: list[dict] = []
             for i, t in enumerate(pdf.itertuples(index=False)):
-                if not ok[i] or t.year not in t_for_year:
+                if not ok[i]:
                     continue
                 todo = {int(k) for k in t.todo} if has_todo else None
                 rcs = [(r, c)
@@ -375,93 +342,159 @@ def _finalize_mean(s: np.ndarray, c: np.ndarray) -> np.ndarray:
     return np.where(s >= 0, q, -q)
 
 
-def composite_chunks(patches: DataFrame, grid: OutputGrid, mode: str = "mean") -> DataFrame:
-    """groupBy(chunk).applyInPandas — the A1/R2/R3 compositor.
+# patches one int32 mean canvas holds: |sum| + count//2 stays inside
+# int32 while each patch adds at most 255.5 (_finalize_mean's addend)
+MEAN_PATCH_CAP = (2**31 - 1) // 256
+_NO_KEY = np.iinfo(np.int64).min  # `last` canvas: pixel never written
 
-    modes: 'mean' (reference parity), 'last' (last-on-top by
-    sort_key), 'weighted' (float weighted blend), 'median' (per-pixel
-    LOWER median — ascending index (c-1)//2 — an order-independent
-    outlier-robust composite: the standard cloud/sensor-glitch
-    rejection for temporal stacks; integer-exact, no float ties).
+
+def _patch_pixels(p, nb: int) -> tuple[np.ndarray, np.ndarray]:
+    """One PATCH_SCHEMA row -> (uint8 (nb, ph, pw) patch, bool mask)."""
+    patch = np.frombuffer(zlib.decompress(p.patch), np.uint8).reshape(nb, p.ph, p.pw)
+    mask = np.unpackbits(np.frombuffer(zlib.decompress(p.mask), np.uint8),
+                         count=p.ph * p.pw).reshape(p.ph, p.pw).astype(bool)
+    return patch, mask
+
+
+class _Canvas:
+    """One chunk's compositing state (A1/R2/R3, reference
+    mosaic.rs:233-291) — the single accumulator behind composite_chunks,
+    both levels of composite_chunks_salted and streaming_mosaic_mean.
+
+    State is (a, b), the PARTIAL_SCHEMA pair: mean/weighted = (sums,
+    counts), last = (uint8 canvas, per-pixel max sort_key), median =
+    (staged patches, counts). Every mode is order-independent: sums
+    are exact integers (mean) and `last` keeps, per pixel, the patch
+    with the largest sort_key. An int32 mean canvas refuses its
+    MEAN_PATCH_CAP+1-th patch; wide=True (the salted merge) sums in
+    int64."""
+
+    def __init__(self, mode: str, nb: int, chh: int, chw: int, wide: bool = False):
+        self.mode, self.nb, self.n = mode, nb, 0
+        self.cap = MEAN_PATCH_CAP if mode == "mean" and not wide else None
+        if mode == "last":
+            self.a = np.zeros((nb, chh, chw), np.uint8)
+            self.b = np.full((chh, chw), _NO_KEY, np.int64)
+        else:
+            dt = {"mean": np.int64 if wide else np.int32, "weighted": np.float64,
+                  "median": np.int32}[mode]
+            self.a = [] if mode == "median" else np.zeros((nb, chh, chw), dt)
+            self.b = np.zeros((chh, chw), dt)
+
+    def add(self, patch, mask, y0: int, x0: int, weight: float = 1.0,
+            sort_key: int = 0) -> None:
+        if self.cap is not None and self.n >= self.cap:
+            raise OverflowError(
+                f"chunk canvas holds at most {self.cap} mean patches (int32 sums)")
+        self.n += 1
+        ys, xs = slice(y0, y0 + mask.shape[0]), slice(x0, x0 + mask.shape[1])
+        if self.mode == "mean":
+            self.a[:, ys, xs] += patch * mask
+            self.b[ys, xs] += mask
+        elif self.mode == "weighted":
+            self.a[:, ys, xs] += patch * (mask * weight)
+            self.b[ys, xs] += mask * weight
+        elif self.mode == "median":
+            self.a.append((patch, mask, y0, x0))
+            self.b[ys, xs] += mask
+        else:
+            self.merge(patch, np.where(mask, sort_key, _NO_KEY), y0, x0)
+
+    def add_rows(self, pdf: pd.DataFrame) -> None:
+        """add() every PATCH_SCHEMA row of `pdf`."""
+        for p in pdf.itertuples(index=False):
+            self.add(*_patch_pixels(p, self.nb), p.y0, p.x0, p.weight, p.sort_key)
+
+    def merge(self, a: np.ndarray, b: np.ndarray, y0: int, x0: int) -> None:
+        """Fold in a cropped (a, b) state whose corner is (y0, x0)."""
+        ys, xs = slice(y0, y0 + b.shape[0]), slice(x0, x0 + b.shape[1])
+        if self.mode == "last":
+            best = self.b[ys, xs]
+            take = b > best
+            sub = self.a[:, ys, xs]
+            sub[:, take] = a[:, take]
+            best[take] = b[take]
+        else:
+            self.a[:, ys, xs] += a
+            self.b[ys, xs] += b
+
+    def _touched(self) -> np.ndarray:
+        return self.b > (_NO_KEY if self.mode == "last" else 0)
+
+    def crop(self):
+        """(y0, x0, a, b) over the touched bounding box, or None."""
+        ys, xs = np.nonzero(self._touched())
+        if not len(ys):
+            return None
+        y0, y1, x0, x1 = int(ys.min()), int(ys.max()) + 1, int(xs.min()), int(xs.max()) + 1
+        return y0, x0, self.a[:, y0:y1, x0:x1], self.b[y0:y1, x0:x1]
+
+    def finish(self) -> tuple[np.ndarray, int]:
+        """-> (uint8 (nb, chh, chw) canvas, valid_px); never-touched
+        pixels are 0."""
+        touched = self._touched()
+        if self.mode == "mean":
+            out = _finalize_mean(self.a, self.b)
+        elif self.mode == "weighted":
+            out = np.rint(self.a / np.maximum(self.b, 1e-12))
+        elif self.mode == "median":
+            out = self._median()
+        else:
+            out = self.a
+        return np.where(touched, out, 0).astype(np.uint8), int(touched.sum())
+
+    def _median(self) -> np.ndarray:
+        """Per-pixel LOWER median: scatter the staged patches into a
+        (max_depth, nb, chh, chw) stack with 256 as the above-uint8
+        sentinel; memory = depth x ~0.4 MB, depth bounded by
+        tiles-per-chunk (the same bound every mode's group already
+        holds decompressed)."""
+        cnt = self.b
+        stack = np.full((max(int(cnt.max()), 1), self.nb, *cnt.shape), 256, np.uint16)
+        widx = np.zeros(cnt.shape, np.int32)
+        for patch, mask, y0, x0 in self.a:
+            yy, xx = np.nonzero(mask)
+            gy, gx = y0 + yy, x0 + xx
+            stack[widx[gy, gx], :, gy, gx] = patch[:, yy, xx].T
+            widx[gy, gx] += 1
+        stack.sort(axis=0)  # sentinel 256 sorts past every value
+        k = (np.maximum(cnt - 1, 0) // 2).astype(np.int64)
+        return np.take_along_axis(stack, k[None, None], axis=0)[0]
+
+
+def _chunk_frame(pdf: pd.DataFrame, cv: _Canvas, n_tiles: int) -> pd.DataFrame:
+    """The CHUNK_SCHEMA row of the group `pdf` composited into `cv`."""
+    canvas, valid = cv.finish()
+    return pd.DataFrame([{
+        **{k: int(pdf[k].iat[0]) for k in ("time_idx", "row_idx", "col_idx")},
+        "chunk": canvas.tobytes(), "n_tiles": int(n_tiles), "valid_px": valid,
+        "bands": cv.nb, "chunk_h": canvas.shape[1], "chunk_w": canvas.shape[2],
+    }])
+
+
+def _composite(pdf: pd.DataFrame, mode: str, nb: int, chh: int, chw: int) -> pd.DataFrame:
+    """One chunk's PATCH_SCHEMA rows -> its CHUNK_SCHEMA row."""
+    cv = _Canvas(mode, nb, chh, chw)
+    cv.add_rows(pdf)
+    return _chunk_frame(pdf, cv, pdf["image_id"].nunique())
+
+
+def composite_chunks(patches: DataFrame, grid: OutputGrid, mode: str = "mean") -> DataFrame:
+    """groupBy(chunk).applyInPandas — the A1/R2/R3 compositor, one
+    _Canvas per chunk.
+
+    modes: 'mean' (reference parity), 'last' (last-on-top: each pixel
+    comes from the patch with the largest sort_key — an md5 of
+    image_id, so two patches of one chunk tie only when an image_id is
+    repeated, and a tie keeps whichever patch came first), 'weighted'
+    (float weighted blend), 'median' (per-pixel LOWER median —
+    ascending index (c-1)//2 — an order-independent outlier-robust
+    composite: the standard cloud/sensor-glitch rejection for temporal
+    stacks; integer-exact, no float ties). A 'mean' chunk holds at
+    most MEAN_PATCH_CAP patches (int32 sums); more raise OverflowError.
     Fill for never-touched pixels is 0 with a valid-pixel count
     reported (uint8 analog of the reference's -128 int8 NODATA)."""
     nb, chh, chw = grid.num_bands, grid.chunk_h, grid.chunk_w
-
-    def _fin(pdf: pd.DataFrame) -> pd.DataFrame:
-        t, r, c = (int(pdf.iloc[0][k]) for k in ("time_idx", "row_idx", "col_idx"))
-        if mode == "mean":
-            # int32 holds |sum| + count//2 <= 255.5 per patch, the
-            # most _finalize_mean adds up
-            assert len(pdf) <= (2**31 - 1) // 256, len(pdf)
-            acc = np.zeros((nb, chh, chw), np.int32)
-            cnt = np.zeros((chh, chw), np.int32)
-        elif mode == "weighted":
-            acc = np.zeros((nb, chh, chw), np.float64)
-            cnt = np.zeros((chh, chw), np.float64)
-        elif mode == "median":
-            # two passes: depth count, then scatter into a
-            # (max_depth, nb, chh, chw) stack with 256 as the
-            # above-uint8 sentinel; memory = depth x ~0.4 MB, depth
-            # bounded by tiles-per-chunk (the same bound every mode's
-            # group already holds decompressed)
-            cnt = np.zeros((chh, chw), np.int32)
-            staged = []
-        else:
-            canvas = np.zeros((nb, chh, chw), np.uint8)
-            touched = np.zeros((chh, chw), bool)
-            pdf = pdf.sort_values("sort_key", kind="stable")
-        n_tiles = pdf["image_id"].nunique()
-        for p in pdf.itertuples(index=False):
-            patch = np.frombuffer(zlib.decompress(p.patch), np.uint8
-                                  ).reshape(nb, p.ph, p.pw)
-            mask = np.unpackbits(
-                np.frombuffer(zlib.decompress(p.mask), np.uint8), count=p.ph * p.pw
-            ).reshape(p.ph, p.pw).astype(bool)
-            ys, xs = slice(p.y0, p.y0 + p.ph), slice(p.x0, p.x0 + p.pw)
-            if mode == "mean":
-                acc[:, ys, xs] += patch * mask
-                cnt[ys, xs] += mask
-            elif mode == "weighted":
-                acc[:, ys, xs] += patch * (mask * p.weight)
-                cnt[ys, xs] += mask * p.weight
-            elif mode == "median":
-                cnt[ys, xs] += mask
-                staged.append((patch, mask, p.y0, p.x0))
-            else:
-                sub = canvas[:, ys, xs]
-                sub[:, mask] = patch[:, mask]
-                canvas[:, ys, xs] = sub
-                touched[ys, xs] |= mask
-        if mode == "mean":
-            canvas = np.where(cnt > 0, _finalize_mean(acc, cnt), 0).astype(np.uint8)
-            valid = int((cnt > 0).sum())
-        elif mode == "weighted":
-            canvas = np.where(
-                cnt > 0, np.rint(acc / np.maximum(cnt, 1e-12)), 0
-            ).astype(np.uint8)
-            valid = int((cnt > 0).sum())
-        elif mode == "median":
-            depth = int(cnt.max()) if staged else 0
-            stack = np.full((max(depth, 1), nb, chh, chw), 256, np.uint16)
-            widx = np.zeros((chh, chw), np.int32)
-            for patch, mask, y0, x0 in staged:
-                yy, xx = np.nonzero(mask)
-                gy, gx = y0 + yy, x0 + xx
-                stack[widx[gy, gx], :, gy, gx] = patch[:, yy, xx].T
-                widx[gy, gx] += 1
-            stack.sort(axis=0)  # sentinel 256 sorts past every value
-            k = np.maximum(cnt - 1, 0) // 2
-            med = np.take_along_axis(
-                stack, k[None, None, :, :].astype(np.int64), axis=0)[0]
-            canvas = np.where(cnt > 0, med, 0).astype(np.uint8)
-            valid = int((cnt > 0).sum())
-        else:
-            valid = int(touched.sum())
-        return pd.DataFrame([{
-            "time_idx": t, "row_idx": r, "col_idx": c,
-            "chunk": canvas.tobytes(), "n_tiles": int(n_tiles),
-            "valid_px": valid, "bands": nb, "chunk_h": chh, "chunk_w": chw,
-        }])
 
     # NOTE (r6): pinning the group exchange at the configured shuffle
     # partition count was tried and REVERTED — no bench gain (the
@@ -471,7 +504,7 @@ def composite_chunks(patches: DataFrame, grid: OutputGrid, mode: str = "mean") -
     # byte-based coalescing is the right default here because the
     # per-group python work tracks patch bytes closely.
     return patches.groupBy("time_idx", "row_idx", "col_idx").applyInPandas(
-        _fin, schema=CHUNK_SCHEMA
+        lambda pdf: _composite(pdf, mode, nb, chh, chw), schema=CHUNK_SCHEMA
     )
 
 
@@ -488,10 +521,10 @@ def composite_chunks_salted(patches: DataFrame, grid: OutputGrid,
     groupBy cannot split — the agg-side analog of join skew).
 
     Level 1: groupBy(chunk, salt(image_id)) -> per-salt PARTIAL state
-    (bbox-cropped running sums / argmax canvas), so the hot group's
-    work spreads over `salt` tasks. Level 2: groupBy(chunk) merges the
-    <=salt partials and finalizes. Bit-exact vs composite_chunks for
-    'mean' (integer accumulators — addition order irrelevant) and
+    (the bbox-cropped _Canvas), so the hot group's work spreads over
+    `salt` tasks. Level 2: groupBy(chunk) merges the <=salt partials
+    into an int64 canvas and finalizes. Bit-exact vs composite_chunks
+    for 'mean' (integer accumulators — addition order irrelevant) and
     'last' (per-pixel max sort_key is order-independent); for
     'weighted' the float64 sums accumulate per salt before merging, so
     addition order differs from the single-level path and np.rint at
@@ -507,109 +540,34 @@ def composite_chunks_salted(patches: DataFrame, grid: OutputGrid,
             "median is not salt-decomposable (needs per-pixel value "
             "histograms); use composite_chunks(mode='median')")
     nb, chh, chw = grid.num_bands, grid.chunk_h, grid.chunk_w
+    level1 = _Canvas(mode, nb, 0, 0)  # the dtypes a partial is cropped in
 
     def _partial(pdf: pd.DataFrame) -> pd.DataFrame:
-        t, r, c = (int(pdf.iloc[0][k]) for k in ("time_idx", "row_idx", "col_idx"))
-        if mode == "mean":
-            acc = np.zeros((nb, chh, chw), np.int32)
-            cnt = np.zeros((chh, chw), np.int32)
-        elif mode == "weighted":
-            acc = np.zeros((nb, chh, chw), np.float64)
-            cnt = np.zeros((chh, chw), np.float64)
-        else:
-            canvas = np.zeros((nb, chh, chw), np.uint8)
-            best = np.full((chh, chw), np.iinfo(np.int64).min, np.int64)
-        for p in pdf.itertuples(index=False):
-            patch = np.frombuffer(zlib.decompress(p.patch), np.uint8
-                                  ).reshape(nb, p.ph, p.pw)
-            mask = np.unpackbits(np.frombuffer(zlib.decompress(p.mask), np.uint8),
-                                 count=p.ph * p.pw).reshape(p.ph, p.pw).astype(bool)
-            ys, xs = slice(p.y0, p.y0 + p.ph), slice(p.x0, p.x0 + p.pw)
-            if mode == "mean":
-                acc[:, ys, xs] += patch * mask
-                cnt[ys, xs] += mask
-            elif mode == "weighted":
-                acc[:, ys, xs] += patch * (mask * p.weight)
-                cnt[ys, xs] += mask * p.weight
-            else:
-                sub_b = best[ys, xs]
-                take = mask & (p.sort_key > sub_b)
-                sub_c = canvas[:, ys, xs]
-                sub_c[:, take] = patch[:, take]
-                canvas[:, ys, xs] = sub_c
-                sub_b[take] = p.sort_key
-                best[ys, xs] = sub_b
-        touched = cnt > 0 if mode in ("mean", "weighted") else \
-            best > np.iinfo(np.int64).min
-        if not touched.any():
+        cv = _Canvas(mode, nb, chh, chw)
+        cv.add_rows(pdf)
+        part = cv.crop()
+        if part is None:
             return pd.DataFrame(columns=[f.split()[0] for f in
                                          PARTIAL_SCHEMA.split(", ")])
-        ys, xs = np.where(touched)
-        y0, y1 = int(ys.min()), int(ys.max()) + 1
-        x0, x1 = int(xs.min()), int(xs.max()) + 1
-        if mode in ("mean", "weighted"):
-            a = zlib.compress(np.ascontiguousarray(acc[:, y0:y1, x0:x1]).tobytes(), 1)
-            b = zlib.compress(np.ascontiguousarray(cnt[y0:y1, x0:x1]).tobytes(), 1)
-        else:
-            a = zlib.compress(np.ascontiguousarray(canvas[:, y0:y1, x0:x1]).tobytes(), 1)
-            b = zlib.compress(np.ascontiguousarray(best[y0:y1, x0:x1]).tobytes(), 1)
+        y0, x0, a, b = part
         return pd.DataFrame([{
-            "time_idx": t, "row_idx": r, "col_idx": c,
-            "y0": y0, "x0": x0, "ph": y1 - y0, "pw": x1 - x0,
-            "a": a, "b": b, "n_tiles": int(pdf["image_id"].nunique()),
+            **{k: int(pdf[k].iat[0]) for k in ("time_idx", "row_idx", "col_idx")},
+            "y0": y0, "x0": x0, "ph": b.shape[0], "pw": b.shape[1],
+            "a": zlib.compress(np.ascontiguousarray(a).tobytes(), 1),
+            "b": zlib.compress(np.ascontiguousarray(b).tobytes(), 1),
+            "n_tiles": int(pdf["image_id"].nunique()),
         }])
 
     def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        t, r, c = (int(pdf.iloc[0][k]) for k in ("time_idx", "row_idx", "col_idx"))
-        if mode == "mean":
-            acc = np.zeros((nb, chh, chw), np.int64)
-            cnt = np.zeros((chh, chw), np.int64)
-        elif mode == "weighted":
-            acc = np.zeros((nb, chh, chw), np.float64)
-            cnt = np.zeros((chh, chw), np.float64)
-        else:
-            canvas = np.zeros((nb, chh, chw), np.uint8)
-            best = np.full((chh, chw), np.iinfo(np.int64).min, np.int64)
-        n_tiles = 0
+        cv = _Canvas(mode, nb, chh, chw, wide=True)
         for p in pdf.itertuples(index=False):
-            ys, xs = slice(p.y0, p.y0 + p.ph), slice(p.x0, p.x0 + p.pw)
-            n_tiles += p.n_tiles  # salts partition image_ids disjointly
-            if mode == "mean":
-                acc[:, ys, xs] += np.frombuffer(zlib.decompress(p.a), np.int32
-                                                ).reshape(nb, p.ph, p.pw)
-                cnt[ys, xs] += np.frombuffer(zlib.decompress(p.b), np.int32
-                                             ).reshape(p.ph, p.pw)
-            elif mode == "weighted":
-                acc[:, ys, xs] += np.frombuffer(zlib.decompress(p.a), np.float64
-                                                ).reshape(nb, p.ph, p.pw)
-                cnt[ys, xs] += np.frombuffer(zlib.decompress(p.b), np.float64
-                                             ).reshape(p.ph, p.pw)
-            else:
-                pc = np.frombuffer(zlib.decompress(p.a), np.uint8
-                                   ).reshape(nb, p.ph, p.pw)
-                pb = np.frombuffer(zlib.decompress(p.b), np.int64
-                                   ).reshape(p.ph, p.pw)
-                sub_b = best[ys, xs]
-                take = pb > sub_b
-                sub_c = canvas[:, ys, xs]
-                sub_c[:, take] = pc[:, take]
-                canvas[:, ys, xs] = sub_c
-                sub_b[take] = pb[take]
-                best[ys, xs] = sub_b
-        if mode == "mean":
-            canvas = np.where(cnt > 0, _finalize_mean(acc, cnt), 0).astype(np.uint8)
-            valid = int((cnt > 0).sum())
-        elif mode == "weighted":
-            canvas = np.where(cnt > 0, np.rint(acc / np.maximum(cnt, 1e-12)), 0
-                              ).astype(np.uint8)
-            valid = int((cnt > 0).sum())
-        else:
-            valid = int((best > np.iinfo(np.int64).min).sum())
-        return pd.DataFrame([{
-            "time_idx": t, "row_idx": r, "col_idx": c,
-            "chunk": canvas.tobytes(), "n_tiles": n_tiles,
-            "valid_px": valid, "bands": nb, "chunk_h": chh, "chunk_w": chw,
-        }])
+            cv.merge(np.frombuffer(zlib.decompress(p.a), level1.a.dtype
+                                   ).reshape(nb, p.ph, p.pw),
+                     np.frombuffer(zlib.decompress(p.b), level1.b.dtype
+                                   ).reshape(p.ph, p.pw),
+                     p.y0, p.x0)
+        # salts partition image_ids disjointly
+        return _chunk_frame(pdf, cv, pdf["n_tiles"].sum())
 
     salted = patches.withColumn(
         "_salt", F.pmod(F.xxhash64("image_id"), F.lit(salt)).cast("int"))

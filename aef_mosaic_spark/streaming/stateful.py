@@ -74,12 +74,14 @@ def streaming_mosaic_mean(patches: DataFrame, grid) -> DataFrame:
     State size: zlib'd int32 sum + int32 count per active chunk
     (~1 MB raw, compresses with sparsity); the keyed state store
     shards it across executors — the streaming analog of the
-    reference's bounded in-flight chunk set."""
+    reference's bounded in-flight chunk set. Each update restores the
+    state into the batch compositor's _Canvas, so a chunk holds at
+    most MEAN_PATCH_CAP patches over the whole stream, as in batch."""
     import zlib
 
     import numpy as np
 
-    from aef_mosaic_spark.operators.mosaic import _finalize_mean
+    from aef_mosaic_spark.operators.mosaic import _Canvas
 
     nb, chh, chw = grid.num_bands, grid.chunk_h, grid.chunk_w
     out_schema = ("time_idx int, row_idx int, col_idx int, chunk binary, "
@@ -87,36 +89,21 @@ def streaming_mosaic_mean(patches: DataFrame, grid) -> DataFrame:
     state_schema = "acc binary, cnt binary, n long"
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        cv = _Canvas("mean", nb, chh, chw)
         if state.exists:
-            acc_z, cnt_z, n = state.get
-            acc = np.frombuffer(zlib.decompress(acc_z), np.int32) \
-                .reshape(nb, chh, chw).copy()
-            cnt = np.frombuffer(zlib.decompress(cnt_z), np.int32) \
-                .reshape(chh, chw).copy()
-        else:
-            acc = np.zeros((nb, chh, chw), np.int32)
-            cnt = np.zeros((chh, chw), np.int32)
-            n = 0
+            acc_z, cnt_z, cv.n = state.get
+            cv.merge(np.frombuffer(zlib.decompress(acc_z), np.int32).reshape(nb, chh, chw),
+                     np.frombuffer(zlib.decompress(cnt_z), np.int32).reshape(chh, chw),
+                     0, 0)
         for pdf in pdfs:
-            for p in pdf.itertuples(index=False):
-                patch = np.frombuffer(zlib.decompress(p.patch), np.uint8
-                                      ).reshape(nb, p.ph, p.pw)
-                mask = np.unpackbits(
-                    np.frombuffer(zlib.decompress(p.mask), np.uint8),
-                    count=p.ph * p.pw).reshape(p.ph, p.pw).astype(bool)
-                ys = slice(p.y0, p.y0 + p.ph)
-                xs = slice(p.x0, p.x0 + p.pw)
-                acc[:, ys, xs] += patch * mask
-                cnt[ys, xs] += mask
-                n += 1
-        state.update((zlib.compress(acc.tobytes(), 1),
-                      zlib.compress(cnt.tobytes(), 1), n))
-        canvas = np.where(cnt > 0, _finalize_mean(acc.astype(np.int64), cnt),
-                          0).astype(np.uint8)
+            cv.add_rows(pdf)
+        state.update((zlib.compress(cv.a.tobytes(), 1),
+                      zlib.compress(cv.b.tobytes(), 1), cv.n))
+        canvas, valid = cv.finish()
         yield pd.DataFrame([{
             "time_idx": int(key[0]), "row_idx": int(key[1]),
             "col_idx": int(key[2]), "chunk": canvas.tobytes(),
-            "n_patches": n, "valid_px": int((cnt > 0).sum()),
+            "n_patches": cv.n, "valid_px": valid,
         }])
 
     return patches.groupBy("time_idx", "row_idx", "col_idx") \

@@ -5,6 +5,7 @@ reference numeric vectors for the mean accumulator)."""
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from aef_mosaic_spark import generator, oracle, proj
 from aef_mosaic_spark.grid import OutputGrid
@@ -66,11 +67,11 @@ def _grid_in(grid: OutputGrid, crs: str) -> OutputGrid:
 
 @pytest.mark.parametrize("crs", GRID_CRS)
 def test_kernel_chunk_ranges_within_assignments(spark, images_sdf, grid, crs):
-    """The chunk-range law exists twice: numpy inside the
-    reproject_patches kernel and Column arithmetic in
-    with_chunk_ranges (behind assignments). Every chunk the kernel
-    emits a patch for must be an assignment row — on the native grid
-    and on an EPSG:6933 grid every tile reprojects into."""
+    """The reproject_patches kernel and assignments apply one
+    chunk-range law (_chunk_ranges). The kernel drops chunks where a
+    tile has no valid pixel, so every chunk it emits a patch for must
+    be an assignment row — on the native grid and on an EPSG:6933 grid
+    every tile reprojects into."""
     grid = _grid_in(grid, crs)
     got = {tuple(r) for r in M.reproject_patches(images_sdf, grid)
            .select("image_id", "time_idx", "row_idx", "col_idx").collect()}
@@ -184,6 +185,86 @@ def test_salted_composite_matches_single_level(spark, images_pdf, images_sdf, gr
         assert single == salted, mode
 
 
+MODES = ("mean", "last", "weighted", "median")
+
+
+@pytest.fixture(scope="module")
+def weighted_patches(spark, images_pdf, grid):
+    """Every patch row of the module's tiles, with per-tile weights 1..5."""
+    wpdf = images_pdf.copy()
+    wpdf["weight"] = [1.0 + (i % 5) for i in range(len(wpdf))]
+    return M.tiles_to_patches(spark.createDataFrame(wpdf), grid).toPandas()
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_composite_is_order_independent(weighted_patches, grid, mode):
+    """Each chunk's patch rows composited in reverse order give the
+    same chunk bytes, n_tiles and valid_px. `weighted` sums floats, so
+    a pixel may move by 1, and only where its quotient is an exact .5
+    tie."""
+    nb, chh, chw = grid.num_bands, grid.chunk_h, grid.chunk_w
+    overlapped = 0
+    for _, rows in weighted_patches.groupby(["time_idx", "row_idx", "col_idx"]):
+        fwd, rev = (M._composite(r, mode, nb, chh, chw).iloc[0]
+                    for r in (rows, rows.iloc[::-1]))
+        assert (fwd.n_tiles, fwd.valid_px) == (rev.n_tiles, rev.valid_px)
+        overlapped += len(rows) > 1
+        if mode != "weighted":
+            assert fwd.chunk == rev.chunk
+            continue
+        diff = (np.frombuffer(fwd.chunk, np.uint8).astype(int)
+                - np.frombuffer(rev.chunk, np.uint8).astype(int)).reshape(nb, chh, chw)
+        cv = M._Canvas(mode, nb, chh, chw)
+        cv.add_rows(rows)
+        q = cv.a / np.maximum(cv.b, 1e-12)
+        tie = np.isclose(q - np.floor(q), 0.5, rtol=0, atol=1e-9)
+        assert np.abs(diff).max() <= 1 and tie[diff != 0].all()
+    assert overlapped > 10
+
+
+def test_mean_canvas_refuses_patch_past_cap():
+    """An int32 mean canvas (batch, salted partial and streaming state)
+    holds MEAN_PATCH_CAP patches: full-value sums at the cap still
+    finalize, and one more patch raises instead of wrapping. The int64
+    salted-merge canvas has no cap."""
+    patch, mask = np.full((1, 2, 2), 255, np.uint8), np.ones((2, 2), bool)
+    cv = M._Canvas("mean", 1, 2, 2)
+    cv.n = M.MEAN_PATCH_CAP - 1
+    cv.add(patch, mask, 0, 0)
+    cv.a[:] = 255 * M.MEAN_PATCH_CAP
+    cv.b[:] = M.MEAN_PATCH_CAP
+    assert cv.finish()[0].tolist() == [[[255, 255], [255, 255]]]
+    with pytest.raises(OverflowError):
+        cv.add(patch, mask, 0, 0)
+    assert cv.n == M.MEAN_PATCH_CAP
+    wide = M._Canvas("mean", 1, 2, 2, wide=True)
+    wide.n = M.MEAN_PATCH_CAP
+    wide.add(patch, mask, 0, 0)
+
+
+@pytest.mark.parametrize("case", ["empty", "other_year"])
+def test_degenerate_tiles_give_empty_results(spark, images_sdf, grid, case):
+    """No tiles, or tiles outside every grid year, give empty results
+    with the documented columns from assignments, reproject_patches
+    and every compositor mode."""
+    def cols(schema):
+        return [f.split()[0] for f in schema.split(", ")]
+
+    tiles = (spark.createDataFrame([], images_sdf.schema) if case == "empty"
+             else images_sdf.withColumn("year", F.lit(1999)))
+    a = M.assignments(tiles, grid)
+    assert a.columns == ["image_id", "time_idx", "row_idx", "col_idx"]
+    assert a.collect() == []
+    patches = M.reproject_patches(tiles, grid)
+    assert patches.columns == cols(M.PATCH_SCHEMA) and patches.collect() == []
+    for mode in MODES:
+        out = [M.composite_chunks(patches, grid, mode=mode)]
+        if mode != "median":
+            out.append(M.composite_chunks_salted(patches, grid, mode=mode))
+        for c in out:
+            assert c.columns == cols(M.CHUNK_SCHEMA) and c.collect() == [], mode
+
+
 def test_weighted_mosaic_matches_oracle(spark, images_pdf, grid):
     # per-tile weights ride a `weight` column; exact parity vs the
     # oracle's float weighted-blend (R3)
@@ -264,8 +345,8 @@ def test_approx_reprojection_parity(spark, images_sdf, grid):
     """Opt-in approximate reprojection (corner lattice + bilinear,
     <=0.75 src px budget — reference reproject.rs:23-31, 189-358) must
     match the exact path to PSNR >= 40 dB per chunk (same bar as the
-    lossy-codec invariant); kernel micro-bench: ~5x faster per
-    cross-CRS 256^2 patch (31.4 -> 6.3 ms)."""
+    lossy-codec invariant). Its speed-up depends on whether the exact
+    transform is separable (see README, `--approx-px`)."""
     exact = {(r.time_idx, r.row_idx, r.col_idx): np.frombuffer(
         bytes(r.chunk), np.uint8) for r in
         M.mosaic(images_sdf, grid, mode="mean").collect()}
