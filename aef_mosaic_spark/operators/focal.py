@@ -9,8 +9,8 @@ neighbor keys (9x chunk bytes through the shuffle).  The halo plan
 ships only the r-pixel edge strips: per 256x256x3 chunk at r=1 that is
 ~3 KB of strips vs 196 KB of chunk — the shuffle moves
 (1 + perimeter*r/area) ~= 1.02 chunk-equivalents instead of 9.
-Both strategies produce bit-identical output (tested); `replicate`
-is kept as the A/B twin, exactly like the forced-shuffle twins q68/q69.
+Replicating full chunks gives bit-identical output but measured
+1.5-4.2x slower with 8.6x the shuffle bytes (BENCH/BASELINE.md §10g).
 
 Semantics (documented, deterministic):
 - border policy: pixels beyond the global raster edge are 0 — the
@@ -209,24 +209,19 @@ def _apply_kernel(pad: np.ndarray, op: str, r: int,
 
 
 def focal_chunks(chunks: DataFrame, grid: OutputGrid, op: str = "mean",
-                 radius: int = 1, chunk_col: str = "chunk",
-                 strategy: str = "halo") -> DataFrame:
+                 radius: int = 1, chunk_col: str = "chunk") -> DataFrame:
     """Apply a focal op to every committed chunk ->
     (time_idx, row_idx, col_idx, chunk, n_parts).
 
-    strategy='halo' (default): one mapInPandas pass emits each chunk
-    once to its own key plus r-wide edge strips to the <=8 existing
-    neighbor keys; ONE groupBy assembles the (chh+2r, chw+2r) padded
-    canvas and runs the vectorized kernel.  strategy='replicate' is
-    the naive 9x-full-chunk twin (bit-identical output, ~9x shuffle
-    bytes) kept for A/B benchmarking.
+    One mapInPandas pass emits each chunk once to its own key plus
+    r-wide edge strips to the <=8 existing neighbor keys; ONE groupBy
+    assembles the (chh+2r, chw+2r) padded canvas and runs the
+    vectorized kernel.
 
     Output rows exist only for chunks present in the input (a strip
     arriving at a hole in a sparse mosaic is dropped, matching the
     sparse-overview convention).
     """
-    import pandas as pd
-
     if op not in FOCAL_OPS:
         raise ValueError(f"op must be one of {FOCAL_OPS}, got {op!r}")
     if op in ("grad", "slope", "hillshade", "aspect",
@@ -234,8 +229,6 @@ def focal_chunks(chunks: DataFrame, grid: OutputGrid, op: str = "mean",
         raise ValueError(f"{op} is a fixed 3x3 kernel; radius must be 1")
     if radius < 1 or radius > min(grid.chunk_h, grid.chunk_w):
         raise ValueError("radius must be in [1, chunk size]")
-    if strategy not in ("halo", "replicate"):
-        raise ValueError("strategy must be 'halo' or 'replicate'")
 
     chh, chw, nb = grid.chunk_h, grid.chunk_w, grid.num_bands
     r = radius
@@ -244,13 +237,11 @@ def focal_chunks(chunks: DataFrame, grid: OutputGrid, op: str = "mean",
                         F.col(chunk_col).alias("chunk"))
     return _halo_pass(src, n_rows=grid.chunk_rows, n_cols=grid.chunk_cols,
                       nbands=nb, chh=chh, chw=chw, r=r,
-                      kernel=lambda pad: _apply_kernel(pad, op, r, chh, chw),
-                      strategy=strategy)
+                      kernel=lambda pad: _apply_kernel(pad, op, r, chh, chw))
 
 
 def _halo_pass(src: DataFrame, *, n_rows: int, n_cols: int, nbands: int,
-               chh: int, chw: int, r: int, kernel,
-               strategy: str = "halo") -> DataFrame:
+               chh: int, chw: int, r: int, kernel) -> DataFrame:
     """The halo-exchange machinery shared by focal_chunks and
     flow_accumulation: emit each chunk once plus r-wide edge strips to
     its <=8 existing neighbor keys, assemble the padded canvas per
@@ -261,53 +252,33 @@ def _halo_pass(src: DataFrame, *, n_rows: int, n_cols: int, nbands: int,
 
     nb = nbands
 
-    part_schema = ("time_idx int, row_idx int, col_idx int, "
-                   "sy int, sx int, part binary")
-
-    if strategy == "halo":
-        def _emit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                rows = []
-                for t in pdf.itertuples(index=False):
-                    ti, ri, ci = int(t.time_idx), int(t.row_idx), int(t.col_idx)
-                    arr = np.frombuffer(t.chunk, np.uint8).reshape(nb, chh, chw)
-                    rows.append((ti, ri, ci, 0, 0, t.chunk))
-                    for dy in (-1, 0, 1):
-                        for dx in (-1, 0, 1):
-                            if dy == 0 and dx == 0:
-                                continue
-                            nr, nc = ri + dy, ci + dx
-                            if not (0 <= nr < n_rows and 0 <= nc < n_cols):
-                                continue
-                            ys = (slice(chh - r, chh) if dy == 1 else
-                                  slice(0, r) if dy == -1 else slice(0, chh))
-                            xs = (slice(chw - r, chw) if dx == 1 else
-                                  slice(0, r) if dx == -1 else slice(0, chw))
-                            strip = np.ascontiguousarray(arr[:, ys, xs])
-                            # from the receiver's view the sender sits at
-                            # offset (-dy, -dx)
-                            rows.append((ti, nr, nc, -dy, -dx,
-                                         strip.tobytes()))
-                yield pd.DataFrame(rows, columns=[
-                    "time_idx", "row_idx", "col_idx", "sy", "sx", "part"])
-        parts = src.mapInPandas(_emit, schema=part_schema)
-    else:
-        def _emit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                rows = []
-                for t in pdf.itertuples(index=False):
-                    ti, ri, ci = int(t.time_idx), int(t.row_idx), int(t.col_idx)
-                    for dy in (-1, 0, 1):
-                        for dx in (-1, 0, 1):
-                            nr, nc = ri + dy, ci + dx
-                            if not (0 <= nr < n_rows and 0 <= nc < n_cols):
-                                continue
-                            rows.append((ti, nr, nc, -dy, -dx, t.chunk))
-                yield pd.DataFrame(rows, columns=[
-                    "time_idx", "row_idx", "col_idx", "sy", "sx", "part"])
-        parts = src.mapInPandas(_emit, schema=part_schema)
-
-    full_strips = strategy == "replicate"
+    def _emit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = []
+            for t in pdf.itertuples(index=False):
+                ti, ri, ci = int(t.time_idx), int(t.row_idx), int(t.col_idx)
+                arr = np.frombuffer(t.chunk, np.uint8).reshape(nb, chh, chw)
+                rows.append((ti, ri, ci, 0, 0, t.chunk))
+                for dy in (-1, 0, 1):
+                    for dx in (-1, 0, 1):
+                        if dy == 0 and dx == 0:
+                            continue
+                        nr, nc = ri + dy, ci + dx
+                        if not (0 <= nr < n_rows and 0 <= nc < n_cols):
+                            continue
+                        ys = (slice(chh - r, chh) if dy == 1 else
+                              slice(0, r) if dy == -1 else slice(0, chh))
+                        xs = (slice(chw - r, chw) if dx == 1 else
+                              slice(0, r) if dx == -1 else slice(0, chw))
+                        strip = np.ascontiguousarray(arr[:, ys, xs])
+                        # from the receiver's view the sender sits at
+                        # offset (-dy, -dx)
+                        rows.append((ti, nr, nc, -dy, -dx,
+                                     strip.tobytes()))
+            yield pd.DataFrame(rows, columns=[
+                "time_idx", "row_idx", "col_idx", "sy", "sx", "part"])
+    parts = src.mapInPandas(_emit, schema="time_idx int, row_idx int, "
+                            "col_idx int, sy int, sx int, part binary")
 
     def _assemble(pdf: pd.DataFrame) -> pd.DataFrame:
         has_center = ((pdf["sy"] == 0) & (pdf["sx"] == 0)).any()
@@ -317,19 +288,9 @@ def _halo_pass(src: DataFrame, *, n_rows: int, n_cols: int, nbands: int,
         pad = np.zeros((nb, chh + 2 * r, chw + 2 * r), np.uint8)
         for t in pdf.itertuples(index=False):
             sy, sx = int(t.sy), int(t.sx)
-            full = np.frombuffer(t.part, np.uint8)
-            if full_strips:
-                arr = full.reshape(nb, chh, chw)
-                # clip the full neighbor chunk to the strip we need
-                ys = (slice(chh - r, chh) if sy == -1 else
-                      slice(0, r) if sy == 1 else slice(0, chh))
-                xs = (slice(chw - r, chw) if sx == -1 else
-                      slice(0, r) if sx == 1 else slice(0, chw))
-                arr = arr[:, ys, xs]
-            else:
-                ph = r if sy != 0 else chh
-                pw = r if sx != 0 else chw
-                arr = full.reshape(nb, ph, pw)
+            ph = r if sy != 0 else chh
+            pw = r if sx != 0 else chw
+            arr = np.frombuffer(t.part, np.uint8).reshape(nb, ph, pw)
             py = (0 if sy == -1 else r if sy == 0 else r + chh)
             px = (0 if sx == -1 else r if sx == 0 else r + chw)
             pad[:, py:py + arr.shape[1], px:px + arr.shape[2]] = arr
@@ -802,9 +763,6 @@ def contour_segments(chunks: DataFrame, grid: OutputGrid,
     src = chunks.select("time_idx", "row_idx", "col_idx",
                         F.col(chunk_col).alias("chunk"))
 
-    part_schema = ("time_idx int, row_idx int, col_idx int, "
-                   "sy int, sx int, part binary")
-
     def _emit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
@@ -830,7 +788,8 @@ def contour_segments(chunks: DataFrame, grid: OutputGrid,
             yield pd.DataFrame(rows, columns=[
                 "time_idx", "row_idx", "col_idx", "sy", "sx", "part"])
 
-    parts = src.mapInPandas(_emit, schema=part_schema)
+    parts = src.mapInPandas(_emit, schema="time_idx int, row_idx int, "
+                            "col_idx int, sy int, sx int, part binary")
 
     def _cells(pdf: pd.DataFrame) -> pd.DataFrame:
         if not ((pdf["sy"] == 0) & (pdf["sx"] == 0)).any():
@@ -876,8 +835,7 @@ MORPH_OPS = ("open", "close")
 
 
 def morphology(chunks: DataFrame, grid: OutputGrid, op: str,
-               radius: int = 1, chunk_col: str = "chunk",
-               strategy: str = "halo") -> DataFrame:
+               radius: int = 1, chunk_col: str = "chunk") -> DataFrame:
     """Grayscale morphological opening (erode->dilate: despeckle,
     removes bright specks smaller than the structuring element) or
     closing (dilate->erode: fills dark pinholes) with a square
@@ -894,9 +852,8 @@ def morphology(chunks: DataFrame, grid: OutputGrid, op: str,
         raise ValueError(f"op must be one of {MORPH_OPS}, got {op!r}")
     first, second = ("min", "max") if op == "open" else ("max", "min")
     mid = focal_chunks(chunks, grid, op=first, radius=radius,
-                       chunk_col=chunk_col, strategy=strategy)
-    return focal_chunks(mid, grid, op=second, radius=radius,
-                        strategy=strategy)
+                       chunk_col=chunk_col)
+    return focal_chunks(mid, grid, op=second, radius=radius)
 
 
 def morphology_oracle_np(canvas: np.ndarray, op: str, radius: int,

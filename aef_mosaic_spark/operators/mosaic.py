@@ -184,8 +184,7 @@ def assignments(df: DataFrame, grid: OutputGrid) -> DataFrame:
 def _reproject_tile_to_chunk(img: np.ndarray, tile_crs: str, tmin_x: float,
                              tmax_y: float, tres: float, grid: OutputGrid,
                              row_idx: int, col_idx: int,
-                             gbox: tuple[float, float, float, float] | None = None,
-                             approx_px: float | None = None):
+                             gbox: tuple[float, float, float, float]):
     """Inverse-map one chunk window's pixel centers into the source
     tile; nearest-neighbor gather. Returns (y0, x0, patch, mask) of the
     tight valid window, or None.
@@ -203,27 +202,18 @@ def _reproject_tile_to_chunk(img: np.ndarray, tile_crs: str, tmin_x: float,
     bands, sh, sw = img.shape
     R0 = row_idx * grid.chunk_h
     C0 = col_idx * grid.chunk_w
-    r_lo, r_hi = 0, grid.chunk_h
-    c_lo, c_hi = 0, grid.chunk_w
-    if gbox is not None:
-        gx0, gy0, gx1, gy1 = gbox
-        c_lo = max(c_lo, int(np.floor((gx0 - grid.bounds[0]) / grid.resolution)) - C0)
-        c_hi = min(c_hi, int(np.ceil((gx1 - grid.bounds[0]) / grid.resolution)) - C0)
-        r_lo = max(r_lo, int(np.floor((grid.bounds[3] - gy1) / grid.resolution)) - R0)
-        r_hi = min(r_hi, int(np.ceil((grid.bounds[3] - gy0) / grid.resolution)) - R0)
-        if r_lo >= r_hi or c_lo >= c_hi:
-            return None
+    gx0, gy0, gx1, gy1 = gbox
+    c_lo = max(0, int(np.floor((gx0 - grid.bounds[0]) / grid.resolution)) - C0)
+    c_hi = min(grid.chunk_w, int(np.ceil((gx1 - grid.bounds[0]) / grid.resolution)) - C0)
+    r_lo = max(0, int(np.floor((grid.bounds[3] - gy1) / grid.resolution)) - R0)
+    r_hi = min(grid.chunk_h, int(np.ceil((grid.bounds[3] - gy0) / grid.resolution)) - R0)
+    if r_lo >= r_hi or c_lo >= c_hi:
+        return None
     rr = np.arange(r_lo, r_hi)
     cc = np.arange(c_lo, c_hi)
     ty = grid.bounds[3] - (R0 + rr + 0.5) * grid.resolution
     tx = grid.bounds[0] + (C0 + cc + 0.5) * grid.resolution
-    if approx_px is not None and tile_crs != grid.crs:
-        # opt-in approximate path (reference adaptive grid): budget is
-        # approx_px SOURCE pixels -> err_limit in source CRS units
-        sx_w, sy_w = proj.transform_grid_approx(
-            tx, ty, grid.crs, tile_crs, err_limit=approx_px * tres)
-    else:
-        sx_w, sy_w = proj.transform_grid(tx, ty, grid.crs, tile_crs)
+    sx_w, sy_w = proj.transform_grid(tx, ty, grid.crs, tile_crs)
     # world -> source pixel index (source rows top-down from tmax_y)
     sc = np.floor((sx_w - tmin_x) / tres).astype(np.int64)
     sr = np.floor((tmax_y - sy_w) / tres).astype(np.int64)
@@ -243,7 +233,6 @@ def _reproject_tile_to_chunk(img: np.ndarray, tile_crs: str, tmin_x: float,
 
 def reproject_patches(tiles: DataFrame, grid: OutputGrid,
                       row_range: tuple[int, int] | None = None,
-                      approx_px: float | None = None,
                       skip_bad_tiles: bool = False,
                       bad_tile_acc=None) -> DataFrame:
     """THE patch kernel: ONE mapInPandas over raw tile rows doing the
@@ -307,7 +296,7 @@ def reproject_patches(tiles: DataFrame, grid: OutputGrid,
                 for r, c in rcs:
                     res = _reproject_tile_to_chunk(
                         img, t.crs, t.min_x, t.max_y, t.resolution, g, r, c,
-                        gbox=gbox, approx_px=approx_px)
+                        gbox=gbox)
                     if res is None:
                         continue
                     y0, x0, patch, mask = res
@@ -868,7 +857,6 @@ def chunks_to_training_patches(chunks: DataFrame, grid: OutputGrid,
 
 def tiles_to_patches(images: DataFrame, grid: OutputGrid,
                      row_range: tuple[int, int] | None = None,
-                     approx_px: float | None = None,
                      skip_bad_tiles: bool = False,
                      bad_tile_acc=None) -> DataFrame:
     """The flagship plan: WGS84+year prefilter (pushed to the scan)
@@ -892,14 +880,10 @@ def tiles_to_patches(images: DataFrame, grid: OutputGrid,
     return reproject_patches(
         spread_input(wgs84_prefilter(images, grid, row_range=row_range),
                      "image_id", factor=1),
-        grid, row_range=row_range, approx_px=approx_px,
+        grid, row_range=row_range,
         skip_bad_tiles=skip_bad_tiles, bad_tile_acc=bad_tile_acc)
 
 
-def mosaic(images: DataFrame, grid: OutputGrid, mode: str = "mean",
-           approx_px: float | None = None) -> DataFrame:
-    """images -> chunk DataFrame (the full flagship DAG, lazily).
-    approx_px: opt-in approximate reprojection budget in source pixels
-    (None = exact per-pixel transform, the default)."""
-    return composite_chunks(
-        tiles_to_patches(images, grid, approx_px=approx_px), grid, mode=mode)
+def mosaic(images: DataFrame, grid: OutputGrid, mode: str = "mean") -> DataFrame:
+    """images -> chunk DataFrame (the full flagship DAG, lazily)."""
+    return composite_chunks(tiles_to_patches(images, grid), grid, mode=mode)

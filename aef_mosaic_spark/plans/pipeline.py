@@ -26,38 +26,32 @@ from aef_mosaic_spark.sources.icelite import Icelite
 KEYS = ["time_idx", "row_idx", "col_idx"]
 
 
-def config_hash(grid: OutputGrid, mode: str,
-                approx_px: float | None = None) -> str:
+def config_hash(grid: OutputGrid, mode: str) -> str:
     """SHA-256 over output-affecting config, like the reference's
     checkpoint guard (src/checkpoint.rs:284-306): resuming with a
     different grid/mode must be refused, not silently mixed.
-    approx_px participates when set (approximate-reprojection output
-    may differ within the budget — mixing it with exact chunks in one
-    table would be silent drift); None keeps round-1 hashes stable."""
-    cfg = {"grid": grid.to_dict(), "mode": mode}
-    if approx_px is not None:
-        cfg["approx_px"] = approx_px
-    payload = json.dumps(cfg, sort_keys=True)
+    The payload is exactly {"grid", "mode"}, so every table written by
+    the exact transform keeps its hash and still resumes. Tables
+    committed by the removed approximate reprojection also hashed its
+    pixel budget; their hash never matches, so resume keeps refusing
+    them (their chunks may differ from the exact ones)."""
+    payload = json.dumps({"grid": grid.to_dict(), "mode": mode},
+                         sort_keys=True)
     return hashlib.sha256(payload.encode()).hexdigest()
 
 
 class MosaicJob:
     def __init__(self, grid: OutputGrid, mode: str = "mean",
                  cluster_output: bool = False, composite_salt: int = 0,
-                 approx_px: float | None = None,
                  skip_bad_tiles: bool = False):
         self.grid = grid
         self.mode = mode
         self.cluster_output = cluster_output
         # >1 enables the two-level skew-splitting compositor (bit-exact)
         self.composite_salt = composite_salt
-        # opt-in approximate reprojection budget in source pixels
-        # (reference default 0.75, src/transform/reproject.rs:23-24);
-        # None = exact per-pixel transform
-        self.approx_px = approx_px
         # tolerate corrupt tiles (skip + count) instead of failing the job
         self.skip_bad_tiles = skip_bad_tiles
-        self.hash = config_hash(grid, mode, approx_px)
+        self.hash = config_hash(grid, mode)
 
     def _with_hilbert(self, chunks: DataFrame) -> DataFrame:
         import pandas as pd
@@ -178,7 +172,6 @@ class MosaicJob:
         bad_acc = spark.sparkContext.accumulator(0) \
             if self.skip_bad_tiles else None
         patches = M.tiles_to_patches(pre, self.grid, row_range=row_range,
-                                     approx_px=self.approx_px,
                                      skip_bad_tiles=self.skip_bad_tiles,
                                      bad_tile_acc=bad_acc)
         obs_patches = Observation("patches")

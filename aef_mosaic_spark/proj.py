@@ -224,66 +224,6 @@ def transform_grid(tx: np.ndarray, ty: np.ndarray, src_crs: str,
                   np.tile(sin_lam, (shape[0], 1)), dsouth)
 
 
-def transform_grid_approx(tx: np.ndarray, ty: np.ndarray, src_crs: str,
-                          dst_crs: str, err_limit: float,
-                          step: int = 16):
-    """Approximate window transform: the reference's adaptive-grid
-    reprojection (src/transform/reproject.rs:189-358) re-expressed as
-    one coarse lattice + bilinear interpolation with a measured error
-    budget (reproject.rs:23-31 uses <=0.75 source pixels; err_limit is
-    that budget converted to source-CRS units by the caller).
-
-    tx (w,) / ty (h,) are the window's pixel-center coordinates (each
-    affine in its index, so index-space interpolation == coordinate-
-    space). Only every `step`-th row/column (plus the last) is
-    transformed exactly; every lattice-cell center is then checked
-    against the exact transform and `step` halves until the max error
-    fits the budget (falling back to the exact transform below step 2).
-    Returns (sx, sy) of shape (h, w).
-    """
-    h, w = len(ty), len(tx)
-    if src_crs == dst_crs or h < 4 or w < 4:
-        return transform_grid(tx, ty, src_crs, dst_crs)
-    step = int(step)
-    while step >= 2:
-        xi = np.unique(np.concatenate([np.arange(0, w, step), [w - 1]]))
-        yi = np.unique(np.concatenate([np.arange(0, h, step), [h - 1]]))
-        if len(xi) < 2 or len(yi) < 2:
-            break
-        gx, gy = transform_grid(tx[xi], ty[yi], src_crs, dst_crs)
-        # bilinear value at every cell center is the 4-corner mean;
-        # compare with the exact transform there (the reference's
-        # subdivision test, reproject.rs:276-331)
-        cx = (tx[xi][:-1] + tx[xi][1:]) / 2.0
-        cy = (ty[yi][:-1] + ty[yi][1:]) / 2.0
-        ex, ey = transform_grid(cx, cy, src_crs, dst_crs)
-        ix = (gx[:-1, :-1] + gx[:-1, 1:] + gx[1:, :-1] + gx[1:, 1:]) / 4.0
-        iy = (gy[:-1, :-1] + gy[:-1, 1:] + gy[1:, :-1] + gy[1:, 1:]) / 4.0
-        err = max(np.abs(ix - ex).max(), np.abs(iy - ey).max())
-        if err <= err_limit:
-            def _w(n, idx):
-                k = np.clip(np.searchsorted(idx, np.arange(n), side="right") - 1,
-                            0, len(idx) - 2)
-                return k, (np.arange(n) - idx[k]) / (idx[k + 1] - idx[k])
-
-            kx, wx = _w(w, xi)
-            ky, wy = _w(h, yi)
-            wx = wx[None, :]
-            wy = wy[:, None]
-            KY, KX = ky[:, None], kx[None, :]
-            sx = ((1 - wy) * (1 - wx) * gx[KY, KX]
-                  + (1 - wy) * wx * gx[KY, KX + 1]
-                  + wy * (1 - wx) * gx[KY + 1, KX]
-                  + wy * wx * gx[KY + 1, KX + 1])
-            sy = ((1 - wy) * (1 - wx) * gy[KY, KX]
-                  + (1 - wy) * wx * gy[KY, KX + 1]
-                  + wy * (1 - wx) * gy[KY + 1, KX]
-                  + wy * wx * gy[KY + 1, KX + 1])
-            return sx, sy
-        step //= 2
-    return transform_grid(tx, ty, src_crs, dst_crs)
-
-
 def transform_bounds(bounds, src_crs: str, dst_crs: str, densify: int = 21):
     """Bounds [min_x,min_y,max_x,max_y] -> dst CRS via edge densification.
 

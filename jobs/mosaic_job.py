@@ -39,7 +39,6 @@ CONFIG_TEMPLATE = {
     "resolution": 10.0,
     "years": "2023,2024",
     "commit_groups": 1,
-    "approx_px": None,
     "composite_salt": 0,
     "cluster_output": False,
 }
@@ -75,8 +74,6 @@ def validate_config(args) -> list[str]:
         issues.append(f"years unparseable: {e}")
     if args.commit_groups < 1:
         issues.append("commit-groups must be >= 1")
-    if args.approx_px is not None and args.approx_px <= 0:
-        issues.append("approx-px must be > 0 when given")
     if args.images_dir:
         import glob as g
 
@@ -149,10 +146,6 @@ def main(argv=None):
     ap.add_argument("--progress-interval", type=float, default=None,
                     help="print active-stage task progress every N "
                          "seconds and report per-stage time in metrics")
-    ap.add_argument("--approx-px", type=float, default=None,
-                    help="opt-in approximate reprojection budget in "
-                         "source pixels (reference uses 0.75); default "
-                         "= exact per-pixel transform")
     ap.add_argument("--skip-bad-tiles", action="store_true",
                     help="skip (and count) tiles whose decode/reproject "
                          "fails instead of failing the job")
@@ -247,7 +240,6 @@ def main(argv=None):
 
     job = MosaicJob(grid, mode=args.mode, cluster_output=args.cluster_output,
                     composite_salt=args.composite_salt,
-                    approx_px=args.approx_px,
                     skip_bad_tiles=args.skip_bad_tiles)
     if args.analyze:
         print(json.dumps(job.analyze(spark, images)))

@@ -48,9 +48,6 @@ def main(argv=None):
                     help="focal: mean|max|min|grad|slope|hillshade|aspect; "
                          "temporal: latest_valid|mean|median")
     ap.add_argument("--radius", type=int, default=1, help="focal radius")
-    ap.add_argument("--strategy", default="halo",
-                    choices=("halo", "replicate"),
-                    help="focal shuffle strategy (replicate = A/B twin)")
     ap.add_argument("--iters", type=int, default=8,
                     help="flowacc/disttrans round count (fronts move 1 px/round)")
     ap.add_argument("--levels", type=int, default=1,
@@ -123,19 +120,15 @@ def main(argv=None):
     if args.stage == "focal":
         from aef_mosaic_spark.operators.focal import focal_chunks
         out_df = focal_chunks(chunks, grid, op=args.op,
-                              radius=args.radius, chunk_col="chunk",
-                              strategy=args.strategy)
+                              radius=args.radius, chunk_col="chunk")
         partition_by = ["time_idx"]
-        stage_cfg.update(op=args.op, radius=args.radius,
-                         strategy=args.strategy)
+        stage_cfg.update(op=args.op, radius=args.radius)
     elif args.stage == "morpho":
         from aef_mosaic_spark.operators.focal import morphology
         out_df = morphology(chunks, grid, op=args.op,
-                            radius=args.radius, chunk_col="chunk",
-                            strategy=args.strategy)
+                            radius=args.radius, chunk_col="chunk")
         partition_by = ["time_idx"]
-        stage_cfg.update(op=args.op, radius=args.radius,
-                         strategy=args.strategy)
+        stage_cfg.update(op=args.op, radius=args.radius)
     elif args.stage == "histmatch":
         from pyspark.sql import functions as F
 
@@ -327,9 +320,11 @@ def _run_incremental(args):
             f"{args.output} has no snapshots; run the full --stage "
             "focal derivation first")
     dprops = dst.properties()
-    want = {"stage": "focal", "op": args.op, "radius": args.radius,
-            "strategy": args.strategy}
+    want = {"stage": "focal", "op": args.op, "radius": args.radius}
     have = _json.loads(dprops.get("stage_config", "{}"))
+    # tables derived while a 9x-replicate focal plan existed also
+    # record "strategy"; both plans gave bit-identical chunks
+    have.pop("strategy", None)
     if dprops.get("derived_from") != args.table or have != want:
         raise ValueError(
             f"incremental refused: {args.output} was derived with "
@@ -361,7 +356,7 @@ def _run_incremental(args):
                                       "col_idx": (bb[2], bb[3])})
     inputs = chunks.join(ring2, keys, "leftsemi")
     out = focal_chunks(inputs, grid, op=args.op, radius=args.radius,
-                       chunk_col="chunk", strategy=args.strategy) \
+                       chunk_col="chunk") \
         .join(ring1, keys, "leftsemi").persist()
     n_aff = out.count()   # materializes; merge reuses, not recomputes
     # the same bbox prunes the merge's affected-file DISCOVERY scan

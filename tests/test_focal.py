@@ -1,6 +1,6 @@
 """Focal (neighborhood) ops with halo exchange: the distributed
-halo-strip plan must equal (bit-for-bit) both the naive 9x-replicate
-plan and the NumPy golden computed on the fully stitched raster."""
+halo-strip plan must equal (bit-for-bit) the NumPy golden computed on
+the fully stitched raster."""
 
 import numpy as np
 import pandas as pd
@@ -68,17 +68,16 @@ def test_halo_matches_stitched_golden(spark, grid, op):
         assert n_parts == 1 + n_nb
 
 
-def test_halo_equals_replicate_and_radius2(spark, grid):
+def test_halo_matches_golden_at_larger_radii(spark, grid):
+    """r > 1: r-pixel-wide edge and corner strips still stitch to the
+    golden raster."""
     rows, canvas = _make_chunks(sparse=False)
     sdf = spark.createDataFrame(pd.DataFrame(rows))
     for op, r in (("mean", 2), ("max", 3), ("median", 2)):
         halo = _collect(focal_chunks(sdf, grid, op=op, radius=r))
-        rep = _collect(focal_chunks(sdf, grid, op=op, radius=r,
-                                    strategy="replicate"))
         golden = focal_oracle_np(canvas, op, r)
-        assert halo.keys() == rep.keys()
+        assert len(halo) == N_ROWS * N_COLS
         for k, (arr, _) in halo.items():
-            assert np.array_equal(arr, rep[k][0]), (op, r, k)
             _, ri, ci = k
             exp = golden[:, ri * CHH:(ri + 1) * CHH,
                          ci * CHW:(ci + 1) * CHW]
@@ -105,12 +104,10 @@ def test_validation_errors(spark, grid):
         focal_chunks(sdf, grid, op="mode")
     with pytest.raises(ValueError, match="radius must be 1"):
         focal_chunks(sdf, grid, op="grad", radius=2)
-    with pytest.raises(ValueError, match="strategy"):
-        focal_chunks(sdf, grid, op="mean", strategy="broadcast")
 
 
 def test_halo_shuffle_bytes_fraction():
-    """The halo plan ships a small fraction of the replicate plan's
+    """The halo plan ships a small fraction of a 9x-replicate plan's
     bytes through the shuffle (the whole point): center once + r-wide
     strips vs up-to-9 full-chunk copies."""
     chunk_b = NB * CHH * CHW

@@ -115,8 +115,13 @@ def test_resume_is_idempotent_and_guarded(spark, tmp_path, grid):
 
 
 def test_config_hash_stability(grid):
-    assert config_hash(grid, "mean") == config_hash(grid, "mean")
-    assert config_hash(grid, "mean") != config_hash(grid, "last")
+    """Pinned digests: resume compares this hash with the one a table
+    was committed with, so any change to the payload orphans every
+    existing table."""
+    assert config_hash(grid, "mean") == (
+        "fdb1a6deffd6d93b9bd0297c3f5488e93f268b3a54f127af0102b384a44229f4")
+    assert config_hash(grid, "last") == (
+        "c9a3cd98d6f20ccf10ee90075a7611400f86694307854620e6bb667d088572cc")
 
 
 def test_analyze(spark, grid):

@@ -341,26 +341,6 @@ def test_lossy_codec_mosaic_psnr_invariant(spark, grid):
         assert psnr >= 40.0, (k, psnr)
 
 
-def test_approx_reprojection_parity(spark, images_sdf, grid):
-    """Opt-in approximate reprojection (corner lattice + bilinear,
-    <=0.75 src px budget — reference reproject.rs:23-31, 189-358) must
-    match the exact path to PSNR >= 40 dB per chunk (same bar as the
-    lossy-codec invariant). Its speed-up depends on whether the exact
-    transform is separable (see README, `--approx-px`)."""
-    exact = {(r.time_idx, r.row_idx, r.col_idx): np.frombuffer(
-        bytes(r.chunk), np.uint8) for r in
-        M.mosaic(images_sdf, grid, mode="mean").collect()}
-    approx = {(r.time_idx, r.row_idx, r.col_idx): np.frombuffer(
-        bytes(r.chunk), np.uint8) for r in
-        M.mosaic(images_sdf, grid, mode="mean", approx_px=0.75).collect()}
-    assert set(exact) == set(approx)
-    for k in exact:
-        diff = exact[k].astype(float) - approx[k].astype(float)
-        mse = (diff ** 2).mean()
-        psnr = float("inf") if mse == 0 else 10 * np.log10(255.0 ** 2 / mse)
-        assert psnr >= 40.0, (k, psnr)
-
-
 def test_skip_bad_tiles(spark, images_pdf, grid, tmp_path):
     """A corrupt tile fails the job by default; with skip_bad_tiles the
     run completes, counts it, and every chunk untouched by the bad tile

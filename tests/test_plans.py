@@ -150,6 +150,29 @@ def test_apply_config_explicit_flag_wins_and_unknown_key_rejected():
         apply_config(ap, args, {"bogus": 1}, argv)
 
 
+def test_generated_config_loads_through_config_flag(tmp_path, capsys):
+    """--generate-config output must load through --config: every
+    CONFIG_TEMPLATE key is a flag apply_config accepts (a template key
+    that outlives its flag fails here as "unknown config key")."""
+    import json
+    import sys
+
+    sys.path.insert(0, "jobs")
+    import mosaic_job
+
+    assert mosaic_job.main(["--generate-config"]) == 0
+    cfg = json.loads(capsys.readouterr().out)
+    assert cfg == mosaic_job.CONFIG_TEMPLATE
+    path = tmp_path / "cfg.json"
+    path.write_text(json.dumps(cfg))
+    # the template's images_dir is a placeholder with no parquet files:
+    # that is the one issue --validate may report
+    assert mosaic_job.main(["--config", str(path), "--validate"]) == 1
+    assert json.loads(capsys.readouterr().out) == {
+        "valid": False,
+        "issues": [f"no parquet files under {cfg['images_dir']}"]}
+
+
 def test_dedup_job_cli_keep_list(spark, tmp_path):
     """jobs/dedup_job.py end-to-end in-process: keep-list equals the
     library-level cluster recompute, keep = exactly one per cluster."""
@@ -423,6 +446,55 @@ def test_raster_job_incremental_focal_matches_full(spark, tmp_path):
         raster_main(["--table", src, "--output", dinc,
                      "--stage", "focal", "--op", "mean",
                      "--incremental"])
+
+
+def test_raster_job_incremental_accepts_recorded_strategy(spark, tmp_path):
+    """A derived focal table whose stage_config still records
+    "strategy": "halo" (written while a replicate focal plan existed;
+    both plans gave bit-identical chunks) is maintained by
+    --incremental, not refused, and ends bit-identical to a full
+    re-derivation."""
+    import json
+
+    from aef_mosaic_spark.operators.focal import focal_chunks
+    from aef_mosaic_spark.plans.pipeline import MosaicJob
+    from aef_mosaic_spark.sources.icelite import Icelite
+    from jobs.raster_job import main as raster_main
+
+    images = spark.createDataFrame(generator.images_pdf(40))
+    src = str(tmp_path / "mosaic")
+    job = MosaicJob(GRID, mode="mean")
+    job.run(spark, images, src, row_range=(0, GRID.chunk_rows // 2 - 1))
+    src_t = Icelite(src)
+    props = src_t.properties()
+    dinc = str(tmp_path / "mean_inc")
+    Icelite(dinc).append(
+        focal_chunks(src_t.read(spark), GRID, op="mean", radius=1),
+        partition_by=["time_idx"],
+        properties={
+            "derived_from": src,
+            "source_snapshot": str(src_t.current_snapshot_id()),
+            "source_config_hash": props.get("config_hash", ""),
+            "grid": props["grid"],
+            "stage_config": json.dumps(
+                {"op": "mean", "radius": 1, "stage": "focal",
+                 "strategy": "halo"}, sort_keys=True),
+        },
+        summary={"operation": "derive-focal"})
+
+    job.run(spark, images, src, resume=True)
+    raster_main(["--table", src, "--output", dinc,
+                 "--stage", "focal", "--op", "mean", "--incremental"])
+    dfull = str(tmp_path / "mean_full")
+    raster_main(["--table", src, "--output", dfull,
+                 "--stage", "focal", "--op", "mean"])
+    got = {(r.time_idx, r.row_idx, r.col_idx): (bytes(r.chunk), r.n_parts)
+           for r in Icelite(dinc).read(spark).collect()}
+    exp = {(r.time_idx, r.row_idx, r.col_idx): (bytes(r.chunk), r.n_parts)
+           for r in Icelite(dfull).read(spark).collect()}
+    assert got == exp and len(got) > 0
+    assert Icelite(dinc).properties()["source_snapshot"] == str(
+        src_t.current_snapshot_id())
 
 
 def test_raster_job_incremental_otsu_matches_full(spark, tmp_path,

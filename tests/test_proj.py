@@ -75,37 +75,6 @@ def test_parse_epsg():
     assert proj.parse_epsg("EPSG:6933")[0] == "cea"
 
 
-def test_transform_grid_approx_within_budget():
-    """Approximate window transform stays inside the error budget vs
-    the exact per-pixel transform (reference <=0.75 src px,
-    reproject.rs:23-31), on a realistic 256x256 cross-CRS window."""
-    res, budget = 10.0, 0.75
-    tx = 499000.0 + (np.arange(256) + 0.5) * res
-    ty = 4105240.0 - (np.arange(256) + 0.5) * res
-    for dst in ("EPSG:32611", "EPSG:4326", "EPSG:6933"):
-        ax, ay = proj.transform_grid_approx(tx, ty, "EPSG:32610", dst,
-                                            err_limit=budget * res)
-        TX, TY = np.meshgrid(tx, ty)
-        ex, ey = proj.transform_points(TX.ravel(), TY.ravel(),
-                                       "EPSG:32610", dst)
-        # budget is in dst units only for metric CRS; for 4326 compare
-        # against the same err_limit the caller passed (degenerate but
-        # consistent: the function's contract is its own mid-point test)
-        err = max(np.abs(ax.ravel() - ex).max(), np.abs(ay.ravel() - ey).max())
-        assert err <= budget * res, (dst, err)
-
-
-def test_transform_grid_approx_small_window_falls_back_exact():
-    tx = 499000.0 + (np.arange(3) + 0.5) * 10.0
-    ty = 4105240.0 - (np.arange(3) + 0.5) * 10.0
-    ax, ay = proj.transform_grid_approx(tx, ty, "EPSG:32610", "EPSG:32611",
-                                        err_limit=7.5)
-    TX, TY = np.meshgrid(tx, ty)
-    ex, ey = proj.transform_points(TX.ravel(), TY.ravel(),
-                                   "EPSG:32610", "EPSG:32611")
-    assert np.array_equal(ax.ravel(), ex) and np.array_equal(ay.ravel(), ey)
-
-
 def test_great_circle_known_values(spark):
     """Haversine + bearing vs published values: London (-0.1278,
     51.5074) -> New York (-74.0060, 40.7128) ~ 5570 km, initial
