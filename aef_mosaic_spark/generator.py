@@ -160,9 +160,11 @@ def images_df(spark, n: int):
     # adaptive, not a constant) — the old n//512 heuristic gave a
     # 4800-tile bench run only 10 tasks on 32 cores, serializing the
     # generation kernel to a third of the machine. A >=64-tiles-per-
-    # task ceiling keeps tiny jobs from paying python-worker spin-up
-    # per near-empty task (the 300-tile CLI probe regressed without
-    # it).
+    # task ceiling keeps tiny jobs from paying the fixed per-task
+    # Python set-up per near-empty task (the 300-tile CLI probe
+    # regressed without it; ~0.1 s a task on local[4] with the
+    # session's worker daemon, ~0.3 s before, see
+    # partitioning.spread_input).
     dp = spark.sparkContext.defaultParallelism
     target = max(min(1024, n // 512 + 1), dp * 2)
     parts = max(2, min(1024, target, n // 64 + 1))

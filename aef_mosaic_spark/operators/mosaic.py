@@ -12,9 +12,9 @@ write over bounded channels) as ONE declarative DAG:
          reference output_grid.rs:315-384 / J2), decode ONCE per tile,
          emit one *patch* per intersecting (or, on resume, pending)
          chunk
-      -> groupBy(time_idx,row_idx,col_idx).applyInPandas: accumulate
-         patches into the chunk canvas (mean / last-on-top / weighted,
-         reference mosaic.rs:233-291 / R2+R3)
+      -> groupBy(time_idx,row_idx,col_idx).applyInArrow: accumulate
+         patches into the chunk canvas (mean / last-on-top / weighted /
+         median, reference mosaic.rs:233-291 / R2+R3)
 
 Scale notes (100 TB design):
 - The shuffle carries *reprojected overlap patches*, not whole tiles:
@@ -36,6 +36,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,6 +53,13 @@ CHUNK_SCHEMA = (
     "time_idx int, row_idx int, col_idx int, chunk binary, "
     "n_tiles int, valid_px long, bands int, chunk_h int, chunk_w int"
 )
+
+_ARROW_TYPES = {"int": pa.int32(), "long": pa.int64(), "binary": pa.binary()}
+
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """The pyarrow schema of a flat DDL string of _ARROW_TYPES columns."""
+    return pa.schema([(n, _ARROW_TYPES[t]) for n, t in (f.split() for f in ddl.split(", "))])
 
 
 def _grid_bounds_np(pdf: pd.DataFrame, dst: str):
@@ -337,12 +345,18 @@ MEAN_PATCH_CAP = (2**31 - 1) // 256
 _NO_KEY = np.iinfo(np.int64).min  # `last` canvas: pixel never written
 
 
-def _patch_pixels(p, nb: int) -> tuple[np.ndarray, np.ndarray]:
-    """One PATCH_SCHEMA row -> (uint8 (nb, ph, pw) patch, bool mask)."""
-    patch = np.frombuffer(zlib.decompress(p.patch), np.uint8).reshape(nb, p.ph, p.pw)
-    mask = np.unpackbits(np.frombuffer(zlib.decompress(p.mask), np.uint8),
-                         count=p.ph * p.pw).reshape(p.ph, p.pw).astype(bool)
-    return patch, mask
+def _patch_pixels(patch: bytes, mask: bytes, ph: int, pw: int,
+                  nb: int) -> tuple[np.ndarray, np.ndarray]:
+    """One PATCH_SCHEMA row's payloads -> (uint8 (nb, ph, pw) patch,
+    bool mask)."""
+    pixels = np.frombuffer(zlib.decompress(patch), np.uint8).reshape(nb, ph, pw)
+    valid = np.unpackbits(np.frombuffer(zlib.decompress(mask), np.uint8),
+                          count=ph * pw).reshape(ph, pw).astype(bool)
+    return pixels, valid
+
+
+# the PATCH_SCHEMA columns _Canvas.add_rows reads, in add()'s order
+_ROW_COLS = ("patch", "mask", "ph", "pw", "y0", "x0", "weight", "sort_key")
 
 
 class _Canvas:
@@ -389,10 +403,13 @@ class _Canvas:
         else:
             self.merge(patch, np.where(mask, sort_key, _NO_KEY), y0, x0)
 
-    def add_rows(self, pdf: pd.DataFrame) -> None:
-        """add() every PATCH_SCHEMA row of `pdf`."""
-        for p in pdf.itertuples(index=False):
-            self.add(*_patch_pixels(p, self.nb), p.y0, p.x0, p.weight, p.sort_key)
+    def add_rows(self, cols) -> None:
+        """add() every PATCH_SCHEMA row of `cols`, a mapping of column
+        name -> values (an Arrow Table.to_pydict(), or a pandas batch)."""
+        for patch, mask, ph, pw, y0, x0, weight, sort_key in zip(
+                *(cols[k] for k in _ROW_COLS)):
+            self.add(*_patch_pixels(patch, mask, ph, pw, self.nb),
+                     y0, x0, weight, sort_key)
 
     def merge(self, a: np.ndarray, b: np.ndarray, y0: int, x0: int) -> None:
         """Fold in a cropped (a, b) state whose corner is (y0, x0)."""
@@ -451,26 +468,31 @@ class _Canvas:
         return np.take_along_axis(stack, k[None, None], axis=0)[0]
 
 
-def _chunk_frame(pdf: pd.DataFrame, cv: _Canvas, n_tiles: int) -> pd.DataFrame:
-    """The CHUNK_SCHEMA row of the group `pdf` composited into `cv`."""
+_KEYS = ("time_idx", "row_idx", "col_idx")
+_CHUNK_ARROW = _arrow_schema(CHUNK_SCHEMA)
+
+
+def _chunk_frame(cols, cv: _Canvas, n_tiles: int) -> pa.Table:
+    """The CHUNK_SCHEMA row of the group `cols` composited into `cv`."""
     canvas, valid = cv.finish()
-    return pd.DataFrame([{
-        **{k: int(pdf[k].iat[0]) for k in ("time_idx", "row_idx", "col_idx")},
-        "chunk": canvas.tobytes(), "n_tiles": int(n_tiles), "valid_px": valid,
-        "bands": cv.nb, "chunk_h": canvas.shape[1], "chunk_w": canvas.shape[2],
-    }])
+    return pa.table({
+        **{k: [cols[k][0]] for k in _KEYS},
+        "chunk": [canvas.tobytes()], "n_tiles": [n_tiles], "valid_px": [valid],
+        "bands": [cv.nb], "chunk_h": [canvas.shape[1]], "chunk_w": [canvas.shape[2]],
+    }, schema=_CHUNK_ARROW)
 
 
-def _composite(pdf: pd.DataFrame, mode: str, nb: int, chh: int, chw: int) -> pd.DataFrame:
-    """One chunk's PATCH_SCHEMA rows -> its CHUNK_SCHEMA row."""
+def _composite(cols, mode: str, nb: int, chh: int, chw: int) -> pa.Table:
+    """One chunk's PATCH_SCHEMA rows (columns, as _Canvas.add_rows
+    takes them) -> its CHUNK_SCHEMA row."""
     cv = _Canvas(mode, nb, chh, chw)
-    cv.add_rows(pdf)
-    return _chunk_frame(pdf, cv, pdf["image_id"].nunique())
+    cv.add_rows(cols)
+    return _chunk_frame(cols, cv, len(set(cols["image_id"])))
 
 
 def composite_chunks(patches: DataFrame, grid: OutputGrid, mode: str = "mean") -> DataFrame:
-    """groupBy(chunk).applyInPandas — the A1/R2/R3 compositor, one
-    _Canvas per chunk.
+    """groupBy(chunk).applyInArrow — the A1/R2/R3 compositor, one
+    _Canvas per chunk, fed each group as plain columns.
 
     modes: 'mean' (reference parity), 'last' (last-on-top: each pixel
     comes from the patch with the largest sort_key — an md5 of
@@ -488,12 +510,14 @@ def composite_chunks(patches: DataFrame, grid: OutputGrid, mode: str = "mean") -
     # NOTE (r6): pinning the group exchange at the configured shuffle
     # partition count was tried and REVERTED — no bench gain (the
     # AQE-coalesced compositor was not the bottleneck at sf0.1) and a
-    # 3.2 s -> 9.0 s wall regression on the small CLI job (dozens of
-    # cold python-worker spin-ups for a 31-chunk output). AQE's
+    # 3.2 s -> 9.0 s wall regression on the small CLI job: dozens of
+    # Python tasks for a 31-chunk output, each paying the per-task
+    # set-up (then ~0.3 s, mostly pyspark.zip directory re-reads; ~0.1
+    # s with the session's worker daemon, see spread_input). AQE's
     # byte-based coalescing is the right default here because the
     # per-group python work tracks patch bytes closely.
-    return patches.groupBy("time_idx", "row_idx", "col_idx").applyInPandas(
-        lambda pdf: _composite(pdf, mode, nb, chh, chw), schema=CHUNK_SCHEMA
+    return patches.groupBy(*_KEYS).applyInArrow(
+        lambda t: _composite(t.to_pydict(), mode, nb, chh, chw), schema=CHUNK_SCHEMA
     )
 
 
@@ -501,6 +525,7 @@ PARTIAL_SCHEMA = (
     "time_idx int, row_idx int, col_idx int, y0 int, x0 int, ph int, pw int, "
     "a binary, b binary, n_tiles int"
 )
+_PARTIAL_ARROW = _arrow_schema(PARTIAL_SCHEMA)
 
 
 def composite_chunks_salted(patches: DataFrame, grid: OutputGrid,
@@ -531,39 +556,36 @@ def composite_chunks_salted(patches: DataFrame, grid: OutputGrid,
     nb, chh, chw = grid.num_bands, grid.chunk_h, grid.chunk_w
     level1 = _Canvas(mode, nb, 0, 0)  # the dtypes a partial is cropped in
 
-    def _partial(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _partial(table: pa.Table) -> pa.Table:
+        cols = table.to_pydict()
         cv = _Canvas(mode, nb, chh, chw)
-        cv.add_rows(pdf)
+        cv.add_rows(cols)
         part = cv.crop()
         if part is None:
-            return pd.DataFrame(columns=[f.split()[0] for f in
-                                         PARTIAL_SCHEMA.split(", ")])
+            return _PARTIAL_ARROW.empty_table()
         y0, x0, a, b = part
-        return pd.DataFrame([{
-            **{k: int(pdf[k].iat[0]) for k in ("time_idx", "row_idx", "col_idx")},
-            "y0": y0, "x0": x0, "ph": b.shape[0], "pw": b.shape[1],
-            "a": zlib.compress(np.ascontiguousarray(a).tobytes(), 1),
-            "b": zlib.compress(np.ascontiguousarray(b).tobytes(), 1),
-            "n_tiles": int(pdf["image_id"].nunique()),
-        }])
+        return pa.table({
+            **{k: [cols[k][0]] for k in _KEYS},
+            "y0": [y0], "x0": [x0], "ph": [b.shape[0]], "pw": [b.shape[1]],
+            "a": [zlib.compress(np.ascontiguousarray(a).tobytes(), 1)],
+            "b": [zlib.compress(np.ascontiguousarray(b).tobytes(), 1)],
+            "n_tiles": [len(set(cols["image_id"]))],
+        }, schema=_PARTIAL_ARROW)
 
-    def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _merge(table: pa.Table) -> pa.Table:
+        cols = table.to_pydict()
         cv = _Canvas(mode, nb, chh, chw, wide=True)
-        for p in pdf.itertuples(index=False):
-            cv.merge(np.frombuffer(zlib.decompress(p.a), level1.a.dtype
-                                   ).reshape(nb, p.ph, p.pw),
-                     np.frombuffer(zlib.decompress(p.b), level1.b.dtype
-                                   ).reshape(p.ph, p.pw),
-                     p.y0, p.x0)
+        for a, b, ph, pw, y0, x0 in zip(*(cols[k] for k in ("a", "b", "ph", "pw", "y0", "x0"))):
+            cv.merge(np.frombuffer(zlib.decompress(a), level1.a.dtype).reshape(nb, ph, pw),
+                     np.frombuffer(zlib.decompress(b), level1.b.dtype).reshape(ph, pw),
+                     y0, x0)
         # salts partition image_ids disjointly
-        return _chunk_frame(pdf, cv, pdf["n_tiles"].sum())
+        return _chunk_frame(cols, cv, sum(cols["n_tiles"]))
 
     salted = patches.withColumn(
         "_salt", F.pmod(F.xxhash64("image_id"), F.lit(salt)).cast("int"))
-    partials = salted.groupBy("time_idx", "row_idx", "col_idx", "_salt") \
-                     .applyInPandas(_partial, schema=PARTIAL_SCHEMA)
-    return partials.groupBy("time_idx", "row_idx", "col_idx").applyInPandas(
-        _merge, schema=CHUNK_SCHEMA)
+    partials = salted.groupBy(*_KEYS, "_salt").applyInArrow(_partial, schema=PARTIAL_SCHEMA)
+    return partials.groupBy(*_KEYS).applyInArrow(_merge, schema=CHUNK_SCHEMA)
 
 
 def overview_chunks(chunks: DataFrame, grid: OutputGrid,
@@ -868,6 +890,17 @@ def tiles_to_patches(images: DataFrame, grid: OutputGrid,
 
     row_range=(r0, r1): emit only chunks in that inclusive row band
     (the prefilter AND the kernel loop are both clipped)."""
+    return prefiltered_patches(wgs84_prefilter(images, grid, row_range=row_range),
+                               grid, row_range=row_range,
+                               skip_bad_tiles=skip_bad_tiles, bad_tile_acc=bad_tile_acc)
+
+
+def prefiltered_patches(tiles: DataFrame, grid: OutputGrid,
+                        row_range: tuple[int, int] | None = None,
+                        skip_bad_tiles: bool = False,
+                        bad_tile_acc=None) -> DataFrame:
+    """tiles_to_patches after its prefilter, for a caller that applied
+    (and observed) wgs84_prefilter itself: spread_input -> the kernel."""
     # spread_input (r6): a small bin-packed parquet scan (150 MB of
     # tile rows -> 2 splits at the 128 MB target) serializes the
     # decode+reproject kernel onto 2 cores; the conditional spread is
@@ -877,11 +910,9 @@ def tiles_to_patches(images: DataFrame, grid: OutputGrid,
     # fixed start-up cost (see spread_input).
     from aef_mosaic_spark.partitioning import spread_input
 
-    return reproject_patches(
-        spread_input(wgs84_prefilter(images, grid, row_range=row_range),
-                     "image_id", factor=1),
-        grid, row_range=row_range,
-        skip_bad_tiles=skip_bad_tiles, bad_tile_acc=bad_tile_acc)
+    return reproject_patches(spread_input(tiles, "image_id", factor=1),
+                             grid, row_range=row_range,
+                             skip_bad_tiles=skip_bad_tiles, bad_tile_acc=bad_tile_acc)
 
 
 def mosaic(images: DataFrame, grid: OutputGrid, mode: str = "mean") -> DataFrame:

@@ -46,11 +46,17 @@ def spread_input(df: DataFrame, *key_cols: str, factor: int = 2) -> DataFrame:
       downstream (tokenize/signature, band joins, dot products).
     - ``factor=1``: one task per core (``defaultParallelism``, no
       floor), for a Python stage that does all of its work in its one
-      UDF (the mosaic's patch kernel). Every Python task costs
-      ~0.2-0.3 s before its UDF body runs, even on a reused worker
-      (16 trivial mapInPandas tasks: 1.2-1.5 s wall on local[4],
-      against 0.15 s for a JVM-only stage), so more tasks than cores
-      buy no pipelining, only that cost again.
+      UDF (the mosaic's patch kernel). Every Python task pays a fixed
+      set-up before its UDF body runs, even on a reused worker. Most
+      of it was pyspark's per-task ``importlib.invalidate_caches()``
+      re-reading pyspark.zip's directory once per zip importer
+      (CPython < 3.13), which the session's worker daemon
+      (aef_mosaic_spark.pyworker) now skips for an unchanged zip: an
+      empty 16-task mapInPandas stage on local[4] takes ~0.5 s, down
+      from 1.35-1.40 s, against ~0.1 s for a JVM-only stage
+      (scripts/python_task_cost.py): ~0.1 s of task time per task
+      with 4 running at a time, against ~0.3 s before. More tasks
+      than cores still buy no pipelining, only that cost again.
 
     Hash-partitions by ``key_cols`` (deterministic keys — guide §2.5
     forbids rand-derived ones); results are identical, only placement

@@ -171,9 +171,9 @@ class MosaicJob:
         )
         bad_acc = spark.sparkContext.accumulator(0) \
             if self.skip_bad_tiles else None
-        patches = M.tiles_to_patches(pre, self.grid, row_range=row_range,
-                                     skip_bad_tiles=self.skip_bad_tiles,
-                                     bad_tile_acc=bad_acc)
+        patches = M.prefiltered_patches(pre, self.grid, row_range=row_range,
+                                        skip_bad_tiles=self.skip_bad_tiles,
+                                        bad_tile_acc=bad_acc)
         obs_patches = Observation("patches")
         patches = patches.observe(
             obs_patches,

@@ -27,9 +27,6 @@ _root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if os.path.isdir(os.path.join(_root, "aef_mosaic_spark")):
     sys.path.insert(0, _root)
 
-from pyspark.sql import SparkSession
-
-
 CONFIG_TEMPLATE = {
     "images_dir": "s3a://bucket/images/",
     "output": "/data/mosaic",
@@ -44,14 +41,19 @@ CONFIG_TEMPLATE = {
 }
 
 
-def validate_config(args) -> list[str]:
+def validate_config(args) -> tuple[list[str], list[str]]:
     """Plan-free config + input validation (reference `validate`
     command, src/main.rs:65-71, 255-343): every issue is reported, not
-    just the first."""
+    just the first. Returns (issues, unchecked): an --images-dir with a
+    URI scheme other than file:// (s3a://, gs://, hdfs://...) is not
+    listed without a Spark session, so it is reported as unchecked."""
+    from urllib.parse import urlparse
+
     from aef_mosaic_spark import proj
     from aef_mosaic_spark.operators.normalize import SYNONYMS
 
     issues: list[str] = []
+    unchecked: list[str] = []
     try:
         b = tuple(float(v) for v in args.bounds.split(","))
         if len(b) != 4:
@@ -74,11 +76,15 @@ def validate_config(args) -> list[str]:
         issues.append(f"years unparseable: {e}")
     if args.commit_groups < 1:
         issues.append("commit-groups must be >= 1")
-    if args.images_dir:
+    url = urlparse(args.images_dir or "")
+    if url.scheme not in ("", "file"):
+        unchecked.append(f"images-dir {args.images_dir}: {url.scheme}:// "
+                         "paths are listed only by the job's Spark session")
+    elif args.images_dir:
         import glob as g
 
         import pyarrow.parquet as papq
-        files = sorted(g.glob(os.path.join(args.images_dir, "**", "*.parquet"),
+        files = sorted(g.glob(os.path.join(url.path, "**", "*.parquet"),
                               recursive=True))
         if not files:
             issues.append(f"no parquet files under {args.images_dir}")
@@ -93,7 +99,18 @@ def validate_config(args) -> list[str]:
                     break
     elif not args.generate:
         issues.append("one of --images-dir / --generate is required")
-    return issues
+    return issues, unchecked
+
+
+def session_builder(args):
+    """The job's session: the package defaults (session._DEFAULT_CONF,
+    Python worker daemon included) with no master, so spark-submit's
+    --master wins; --shuffle-partitions overrides the default count."""
+    from aef_mosaic_spark import session
+
+    extra = ({"spark.sql.shuffle.partitions": str(args.shuffle_partitions)}
+             if args.shuffle_partitions else None)
+    return session.session_builder("aef-mosaic-run", extra)
 
 
 def apply_config(ap, args, cfg: dict, argv_list: list[str]) -> None:
@@ -172,8 +189,9 @@ def main(argv=None):
         apply_config(ap, args, cfg,
                      list(sys.argv[1:] if argv is None else argv))
     if args.validate:
-        issues = validate_config(args)
-        print(json.dumps({"valid": not issues, "issues": issues}))
+        issues, unchecked = validate_config(args)
+        print(json.dumps({"valid": not issues, "issues": issues,
+                          "unchecked": unchecked}))
         return 1 if issues else 0
     if not args.output:
         ap.error("--output is required (unless --validate/--generate-config)")
@@ -185,22 +203,7 @@ def main(argv=None):
     from aef_mosaic_spark.grid import OutputGrid
     from aef_mosaic_spark.plans.pipeline import MosaicJob
 
-    builder = SparkSession.builder.appName("aef-mosaic-run")
-    if args.shuffle_partitions:
-        builder = builder.config("spark.sql.shuffle.partitions",
-                                 str(args.shuffle_partitions))
-    builder = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # bound per-batch worker memory for wide binary rows (the 10000
-        # default makes ~270MB pandas batches -> allocation churn)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-        .config("spark.executorEnv.OMP_NUM_THREADS", "1")
-        .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
-        .config("spark.executorEnv.MKL_NUM_THREADS", "1")
-    )
-    spark = builder.getOrCreate()
+    spark = session_builder(args).getOrCreate()
 
     bounds = tuple(float(v) for v in args.bounds.split(","))
     if len(bounds) != 4:

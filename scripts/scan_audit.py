@@ -32,16 +32,19 @@ read a 0 as "cut applied", and account the build-time scans from the
 operator docstring, not this tool.
 
 Usage: python scripts/scan_audit.py [threshold]   (default 3)
-Prints one line per query at/above threshold; exit 0 always (it is a
-review tool, not a gate).
+Prints one line per query at/above threshold, with its count of Python
+UDF stages (pandas and Arrow map / grouped-map nodes); exit 0 always
+(it is a review tool, not a gate).
 """
 from __future__ import annotations
 
+import re
 import sys
 
 sys.path.insert(0, ".")
 
 THRESHOLD = int(sys.argv[1]) if len(sys.argv) > 1 else 3
+PYTHON_NODE = re.compile(r"\b(?:MapIn|FlatMapGroupsIn|FlatMapCoGroupsIn)(?:Pandas|Arrow)\b")
 
 
 def main():
@@ -57,14 +60,13 @@ def main():
                 ._jdf.queryExecution().executedPlan().toString()
             rows.append((name, plan.count("Scan parquet"),
                          plan.count("ReusedExchange"),
-                         plan.count("MapInPandas")
-                         + plan.count("FlatMapGroupsInPandas")))
+                         len(PYTHON_NODE.findall(plan))))
         except Exception as ex:                       # noqa: BLE001
             rows.append((name, -1, -1, str(ex)[:60]))
     rows.sort(key=lambda t: -(t[1] if isinstance(t[1], int) else 0))
     for name, s, r, p in rows:
         if isinstance(s, int) and s >= THRESHOLD or s == -1:
-            print(f"{name}: scans={s} reused_exchange={r} pandas={p}")
+            print(f"{name}: scans={s} reused_exchange={r} python={p}")
 
 
 if __name__ == "__main__":

@@ -205,17 +205,17 @@ def test_composite_is_order_independent(weighted_patches, grid, mode):
     nb, chh, chw = grid.num_bands, grid.chunk_h, grid.chunk_w
     overlapped = 0
     for _, rows in weighted_patches.groupby(["time_idx", "row_idx", "col_idx"]):
-        fwd, rev = (M._composite(r, mode, nb, chh, chw).iloc[0]
+        fwd, rev = (M._composite(r.to_dict("list"), mode, nb, chh, chw).to_pylist()[0]
                     for r in (rows, rows.iloc[::-1]))
-        assert (fwd.n_tiles, fwd.valid_px) == (rev.n_tiles, rev.valid_px)
+        assert (fwd["n_tiles"], fwd["valid_px"]) == (rev["n_tiles"], rev["valid_px"])
         overlapped += len(rows) > 1
         if mode != "weighted":
-            assert fwd.chunk == rev.chunk
+            assert fwd["chunk"] == rev["chunk"]
             continue
-        diff = (np.frombuffer(fwd.chunk, np.uint8).astype(int)
-                - np.frombuffer(rev.chunk, np.uint8).astype(int)).reshape(nb, chh, chw)
+        diff = (np.frombuffer(fwd["chunk"], np.uint8).astype(int)
+                - np.frombuffer(rev["chunk"], np.uint8).astype(int)).reshape(nb, chh, chw)
         cv = M._Canvas(mode, nb, chh, chw)
-        cv.add_rows(rows)
+        cv.add_rows(rows.to_dict("list"))
         q = cv.a / np.maximum(cv.b, 1e-12)
         tie = np.isclose(q - np.floor(q), 0.5, rtol=0, atol=1e-9)
         assert np.abs(diff).max() <= 1 and tie[diff != 0].all()

@@ -31,6 +31,20 @@ def test_prefilter_predicates_reach_parquet_scan(spark, tmp_path):
     assert "min_lon" in pushed and "year" in pushed, pushed
 
 
+def test_mosaic_job_builds_its_prefilter_once(spark, tmp_path, monkeypatch):
+    """MosaicJob.run builds wgs84_prefilter once: the observed prefilter
+    feeds the kernel, and the patch plan does not filter again."""
+    from aef_mosaic_spark.plans.pipeline import MosaicJob
+
+    builds = []
+    real = M.wgs84_prefilter
+    monkeypatch.setattr(M, "wgs84_prefilter",
+                        lambda *a, **k: builds.append(1) or real(*a, **k))
+    images = spark.createDataFrame(generator.images_pdf(12), generator.IMAGE_SCHEMA)
+    metrics = MosaicJob(GRID).run(spark, images, str(tmp_path / "out"))
+    assert len(builds) == 1 and metrics["tiles_in"] > 0
+
+
 def test_spatial_join_has_no_cartesian_product(spark, tmp_path):
     import __spark_entry__ as e
     qs = e.queries()
@@ -165,12 +179,40 @@ def test_generated_config_loads_through_config_flag(tmp_path, capsys):
     assert cfg == mosaic_job.CONFIG_TEMPLATE
     path = tmp_path / "cfg.json"
     path.write_text(json.dumps(cfg))
-    # the template's images_dir is a placeholder with no parquet files:
-    # that is the one issue --validate may report
-    assert mosaic_job.main(["--config", str(path), "--validate"]) == 1
+    # the template's images_dir is an s3a:// placeholder: not listed
+    # locally, so it is reported as unchecked, not as missing files
+    assert mosaic_job.main(["--config", str(path), "--validate"]) == 0
     assert json.loads(capsys.readouterr().out) == {
-        "valid": False,
-        "issues": [f"no parquet files under {cfg['images_dir']}"]}
+        "valid": True, "issues": [],
+        "unchecked": [f"images-dir {cfg['images_dir']}: s3a:// paths are "
+                      "listed only by the job's Spark session"]}
+    # a local (or file://) directory is still listed
+    for empty in (str(tmp_path), f"file://{tmp_path}"):
+        assert mosaic_job.main(["--config", str(path), "--validate",
+                                "--images-dir", empty]) == 1
+        assert json.loads(capsys.readouterr().out)["issues"] == [
+            f"no parquet files under {empty}"]
+
+
+def test_mosaic_cli_session_carries_package_defaults():
+    """jobs/mosaic_job.py builds its session from session._DEFAULT_CONF
+    (the Python worker daemon included) and sets no master, so
+    spark-submit's --master wins."""
+    import argparse
+    import sys
+
+    sys.path.insert(0, "jobs")
+    import mosaic_job
+
+    from aef_mosaic_spark.session import _DEFAULT_CONF
+
+    opts = mosaic_job.session_builder(
+        argparse.Namespace(shuffle_partitions=12))._options
+    assert opts["spark.python.daemon.module"] == "aef_mosaic_spark.pyworker"
+    assert "spark.master" not in opts
+    assert opts["spark.sql.shuffle.partitions"] == "12"
+    assert {k: opts[k] for k in _DEFAULT_CONF if k != "spark.sql.shuffle.partitions"} \
+        == {k: v for k, v in _DEFAULT_CONF.items() if k != "spark.sql.shuffle.partitions"}
 
 
 def test_dedup_job_cli_keep_list(spark, tmp_path):
