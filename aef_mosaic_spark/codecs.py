@@ -167,21 +167,67 @@ def encode_qdct(img: np.ndarray) -> bytes:
     return b"".join(out)
 
 
+def _idct_blocks(coef: np.ndarray) -> np.ndarray:
+    """The qdct decode law: the inverse 2-D DCT of a (n, 8, 8) stack of
+    dequantized coefficient blocks, summed as this einsum sums it.
+
+    The summation order is part of the codec's output: a DC-only block
+    decodes to exact .5 values, and the order decides which way `rint`
+    goes. Each block's values depend on that block alone, so the law
+    may run on any subset of a stack. `decode_qdct` reproduces this
+    function's bytes exactly; it is the codec's definition and the
+    reference its tests compare to."""
+    return np.einsum("ji,njk,kl->nil", _DCT_M, coef, _DCT_M)
+
+
+_DCT_ABS = np.abs(_DCT_M)
+_TIE_TOL = 256.0 * np.finfo(np.float64).eps
+
+
+def _near_tie(coef: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """(n,) mask of the blocks of x = M^T C M + 128 (BLAS) with some
+    value within tol = 256 eps (|M|^T |C| |M| + 256) of a .5 tie."""
+    tol = _TIE_TOL * (_DCT_ABS.T @ np.abs(coef) @ _DCT_ABS + 256.0)
+    return (np.abs(x - np.floor(x) - 0.5) <= tol).any(axis=(1, 2))
+
+
 def decode_qdct(data: bytes, w: int = 0, h: int = 0) -> np.ndarray:
+    """Decode every block as `_DCT_M.T @ C @ _DCT_M` (BLAS) and recompute
+    with `_idct_blocks` only the blocks where that could round
+    differently. The output equals `_idct_blocks`' on any BLAS.
+
+    Why: let r = sum_jk M[j,i] C[j,k] M[k,l] exactly, and
+    S = (|M|^T |C| |M|)[i,l] the sum of the 64 terms' magnitudes.
+    A floating-point sum of products in any order, with or without
+    FMA, stays within gamma_n * S of r, gamma_n = n*u/(1 - n*u),
+    u = eps/2 (Higham, Accuracy and Stability of Numerical
+    Algorithms, §3.1 and §3.5): the einsum's 64 three-factor products
+    and 63 adds give gamma_65, the two 8-term matmuls gamma_16, so the
+    two paths differ by at most gamma_81 * S < 41 eps * S. Adding 128
+    rounds once on each path, at most u * (|r| + 128) each. So
+    |x_blas - x_law| < 42 eps * S + 128 eps
+      <= tol = 256 eps * (S + 256),
+    a margin of more than 5x that also covers the rounding of S and
+    tol (x - floor(x) - 0.5 is exact near a tie). A value x_blas more
+    than tol from every .5 tie has x_law strictly between the same
+    two ties, so `rint` maps both to the same integer; a block with
+    any value within tol of a tie takes the law. On the benchmark's
+    tiles ~9% of blocks do: DC-only blocks, whose values are all exact
+    ties when the quantized DC is 2 mod 4, and blocks whose AC terms
+    cancel exactly on a tie."""
     bands, h_, w_ = struct.unpack(">BHH", data[:5])
     hb, wb = (h_ + _DCT_N - 1) // _DCT_N, (w_ + _DCT_N - 1) // _DCT_N
     coef = np.frombuffer(zlib.decompress(data[5:]), dtype=np.int16)
-    coef = coef.reshape(bands, hb, wb, _DCT_N, _DCT_N).astype(np.float64) * _Q_STEP
-    out = np.empty((bands, h_, w_), np.uint8)
-    for b in range(bands):
-        # the einsum's summation order is part of the codec's output:
-        # a DC-only block decodes to exact .5 values, so the order
-        # decides which way rint goes. Two matmuls are ~12x faster but
-        # changed the decoded bytes of 714 of 900 benchmark qdct tiles.
-        rec = np.einsum("ji,bcjk,kl->bcil", _DCT_M, coef[b], _DCT_M)
-        plane = rec.transpose(0, 2, 1, 3).reshape(hb * _DCT_N, wb * _DCT_N)
-        out[b] = np.clip(np.rint(plane + 128.0), 0, 255)[:h_, :w_]
-    return out
+    coef = coef.reshape(-1, _DCT_N, _DCT_N).astype(np.float64) * _Q_STEP
+    x = _DCT_M.T @ coef @ _DCT_M + 128.0
+    near = _near_tie(coef, x)
+    if near.any():
+        x[near] = _idct_blocks(coef[near]) + 128.0
+    np.rint(x, out=x)
+    np.clip(x, 0, 255, out=x)
+    px = x.astype(np.uint8).reshape(bands, hb, wb, _DCT_N, _DCT_N)
+    px = px.transpose(0, 1, 3, 2, 4).reshape(bands, hb * _DCT_N, wb * _DCT_N)
+    return np.ascontiguousarray(px[:, :h_, :w_])
 
 
 _ENCODERS = {"raw": encode_raw, "ppm": encode_ppm, "png": encode_png, "qdct": encode_qdct}

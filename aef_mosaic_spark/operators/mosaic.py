@@ -228,9 +228,10 @@ def _reproject_tile_to_chunk(img: np.ndarray, tile_crs: str, tmin_x: float,
     valid = (sc >= 0) & (sc < sw) & (sr >= 0) & (sr < sh)
     if not valid.any():
         return None
-    ys, xs = np.where(valid)
-    y0, y1 = int(ys.min()), int(ys.max()) + 1
-    x0, x1 = int(xs.min()), int(xs.max()) + 1
+    ys = np.flatnonzero(valid.any(axis=1))
+    xs = np.flatnonzero(valid.any(axis=0))
+    y0, y1 = int(ys[0]), int(ys[-1]) + 1
+    x0, x1 = int(xs[0]), int(xs[-1]) + 1
     v = valid[y0:y1, x0:x1]
     scc = np.clip(sc[y0:y1, x0:x1], 0, sw - 1)
     srr = np.clip(sr[y0:y1, x0:x1], 0, sh - 1)
@@ -312,8 +313,7 @@ def reproject_patches(tiles: DataFrame, grid: OutputGrid,
                         "time_idx": ti, "row_idx": r, "col_idx": c,
                         "y0": y0, "x0": x0,
                         "ph": patch.shape[1], "pw": patch.shape[2],
-                        "patch": zlib.compress(
-                            patch.astype(np.uint8).tobytes(), 1),
+                        "patch": zlib.compress(patch.tobytes(), 1),
                         "mask": zlib.compress(
                             np.packbits(mask.ravel()).tobytes(), 1),
                         "sort_key": sort_key,

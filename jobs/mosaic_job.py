@@ -113,6 +113,27 @@ def session_builder(args):
     return session.session_builder("aef-mosaic-run", extra)
 
 
+def warm_python_workers(spark) -> None:
+    """Start the Python worker pool and import numpy, pandas and the
+    codecs in every worker, so the measured run reflects steady-state
+    throughput, not one-time process start-up. One task per
+    defaultParallelism slot starts every worker the run can use; a
+    wider stage only queues more Python tasks behind the same workers,
+    each paying the per-task set-up again. The noop sink runs the
+    tasks in one stage with no shuffle."""
+
+    def _noop(it):
+        import numpy  # noqa: F401
+        import pandas  # noqa: F401
+
+        from aef_mosaic_spark import codecs, proj  # noqa: F401
+        yield from it
+
+    n = spark.sparkContext.defaultParallelism
+    (spark.range(n, numPartitions=n).mapInPandas(_noop, schema="id long")
+     .write.format("noop").mode("overwrite").save())
+
+
 def apply_config(ap, args, cfg: dict, argv_list: list[str]) -> None:
     """Merge a config file under the parsed args. An EXPLICIT flag
     always wins, even when its value equals the argparse default
@@ -226,20 +247,7 @@ def main(argv=None):
         n_in = None
 
     if not args.no_warmup:
-        # spawn + warm the python worker pool (imports numpy/pandas in
-        # every worker) so the measured run reflects steady-state
-        # throughput, not one-time process startup
-        import pandas as pd  # noqa: F401
-
-        def _noop(it):
-            import numpy  # noqa: F401
-            import pandas  # noqa: F401
-
-            from aef_mosaic_spark import codecs, proj  # noqa: F401
-            yield from it
-
-        spark.range(256, numPartitions=256).mapInPandas(
-            _noop, schema="id long").count()
+        warm_python_workers(spark)
 
     job = MosaicJob(grid, mode=args.mode, cluster_output=args.cluster_output,
                     composite_salt=args.composite_salt,

@@ -215,6 +215,27 @@ def test_mosaic_cli_session_carries_package_defaults():
         == {k: v for k, v in _DEFAULT_CONF.items() if k != "spark.sql.shuffle.partitions"}
 
 
+def test_cli_warmup_runs_one_python_task_per_slot(spark):
+    """The CLI warm-up starts at most defaultParallelism Python workers,
+    so it runs exactly that many tasks, in one stage."""
+    import sys
+
+    sys.path.insert(0, "jobs")
+    import mosaic_job
+
+    sc = spark.sparkContext
+    sc.setJobGroup("warmup-probe", "warm-up task count")
+    try:
+        mosaic_job.warm_python_workers(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    stages = [sid for jid in st.getJobIdsForGroup("warmup-probe")
+              for sid in st.getJobInfo(jid).stageIds]
+    assert len(stages) == 1
+    assert st.getStageInfo(stages[0]).numTasks == sc.defaultParallelism
+
+
 def test_dedup_job_cli_keep_list(spark, tmp_path):
     """jobs/dedup_job.py end-to-end in-process: keep-list equals the
     library-level cluster recompute, keep = exactly one per cluster."""

@@ -3,11 +3,14 @@ the reference's example-based suite (SURVEY §5: reference has no
 property testing; these pin the invariants its production bug class
 lived in: round-trips, top-down conventions, containment)."""
 
+import struct
+import zlib
+
 import numpy as np
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
-from aef_mosaic_spark import cells, proj
+from aef_mosaic_spark import cells, codecs, generator, proj
 from aef_mosaic_spark.grid import OutputGrid, hilbert_d, hilbert_order_for
 from aef_mosaic_spark.operators.mosaic import _finalize_mean
 
@@ -141,6 +144,85 @@ def test_mean_rounding_half_away(vals):
         0, rounding=decimal.ROUND_HALF_UP))
     assert got == want
     assert 0 <= got <= 255
+
+
+def _qdct_law_decode(data: bytes) -> np.ndarray:
+    """decode_qdct's definition: `_idct_blocks` on every block, then
+    rint, clip and crop."""
+    bands, h, w = struct.unpack(">BHH", data[:5])
+    hb, wb = -(-h // 8), -(-w // 8)
+    coef = np.frombuffer(zlib.decompress(data[5:]), np.int16)
+    rec = codecs._idct_blocks(coef.reshape(-1, 8, 8).astype(np.float64) * codecs._Q_STEP)
+    plane = rec.reshape(bands, hb, wb, 8, 8).transpose(0, 1, 3, 2, 4)
+    plane = plane.reshape(bands, hb * 8, wb * 8)
+    return np.clip(np.rint(plane + 128.0), 0, 255).astype(np.uint8)[:, :h, :w]
+
+
+# quantized DC values whose DC-only block decodes to exact .5 values
+# (128 + 6q/8 = k + 0.5 for q = 2 mod 4), from just below 0 to just
+# above 255
+_DC_TIES = np.array([q for q in range(-174, 175) if q % 4 == 2], np.int16)
+_ODD = (np.add.outer(np.arange(8), np.arange(8)) % 2).astype(bool)
+
+
+def _tie_blocks(rng, n: int) -> np.ndarray:
+    """n (8, 8) blocks at a DC tie value (every value once when n
+    allows). A third are DC-only; a third add an antisymmetric AC
+    pattern C - C^T, whose diagonal cancels exactly, and a third a
+    symmetric one on odd j+k, whose anti-diagonal cancels exactly. The
+    cancelled values are exact ties that each summation order misses
+    by a few ulps its own way, as in the generator's smooth tiles."""
+    ac = rng.integers(-3, 4, (n, 8, 8)) * (rng.random((n, 8, 8)) < 0.15)
+    ac[:, 0, 0] = 0
+    kind = rng.integers(0, 3, n)[:, None, None]
+    sym = np.where(_ODD, ac + ac.transpose(0, 2, 1), 0)
+    blocks = np.where(kind == 0, 0, np.where(kind == 1, ac - ac.transpose(0, 2, 1), sym))
+    blocks[:, 0, 0] = np.roll(np.resize(_DC_TIES, n), int(rng.integers(len(_DC_TIES))))
+    return blocks.reshape(n, 64).astype(np.int16)
+
+
+@settings(max_examples=300, deadline=None)
+@given(bands=st.sampled_from([1, 3]), h=st.integers(1, 72), w=st.integers(1, 72),
+       kind=st.sampled_from(["coef", "ties", "image"]),
+       scale=st.sampled_from([2, 40, 600, 32767]), seed=st.integers(0, 2**32 - 1))
+@example(bands=3, h=70, w=69, kind="ties", scale=2, seed=0)
+@example(bands=1, h=71, w=90, kind="ties", scale=2, seed=1)
+def test_qdct_decode_equals_idct_law(bands, h, w, kind, scale, seed):
+    """The BLAS decode with its rint-tie fallback is bit-identical to
+    the einsum law on random int16 coefficients (clipping below 0 and
+    above 255 at the larger scales), on blocks at exact .5 ties (half
+    the blocks of a tile with fewer blocks than DC tie values, else
+    all of them with every DC tie value, as at the 70x69 and 71x90
+    examples) and on encoded blocky images, whose h and w need not be
+    multiples of 8 (edge-padded)."""
+    rng = np.random.default_rng(seed)
+    n = bands * -(-h // 8) * -(-w // 8)
+    if kind == "image":
+        k = int(rng.integers(1, 17))
+        small = rng.integers(0, 256, (bands, -(-h // k), -(-w // k)), dtype=np.uint8)
+        img = small.repeat(k, axis=1).repeat(k, axis=2)[:, :h, :w]
+        data = codecs.encode_qdct(np.ascontiguousarray(img))
+    else:
+        coef = rng.integers(-scale, scale + 1, (n, 64)).astype(np.int16)
+        if kind == "ties":
+            at_tie = rng.random(n) < 0.5 if n < len(_DC_TIES) else np.ones(n, bool)
+            coef[at_tie] = _tie_blocks(rng, int(at_tie.sum()))
+        data = struct.pack(">BHH", bands, h, w) + zlib.compress(coef.tobytes())
+    got = codecs.decode_qdct(data)
+    want = _qdct_law_decode(data)
+    assert got.dtype == np.uint8 and got.shape == (bands, h, w)
+    assert np.array_equal(got, want)
+
+
+def test_qdct_generator_tiles_decode_as_the_law():
+    """Every qdct tile of a 720-tile generator run (the benchmark's
+    size) decodes bit for bit as the einsum law."""
+    n = 720
+    tiles = [i for i in range(n) if generator.FMTS[i % 4] == "qdct"]
+    assert len(tiles) == 180
+    for i in tiles:
+        data = codecs.encode_qdct(generator.tile_pixels(i, generator.tile_geometry(i, n)))
+        assert np.array_equal(codecs.decode_qdct(data), _qdct_law_decode(data)), i
 
 
 @settings(max_examples=100, deadline=None)
