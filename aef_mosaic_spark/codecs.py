@@ -84,8 +84,14 @@ def encode_png(img: np.ndarray) -> bytes:
     )
 
 
+_PNG_BANDS = {0: 1, 2: 3}  # color type -> bands: grayscale, RGB
+
+
 def decode_png(data: bytes, w: int = 0, h: int = 0) -> np.ndarray:
-    assert data[:8] == b"\x89PNG\r\n\x1a\n", "bad png signature"
+    """8-bit, non-interlaced grayscale or RGB PNG -> uint8 (bands, h, w).
+    Anything else raises ValueError naming the offending field."""
+    if data[:8] != b"\x89PNG\r\n\x1a\n":
+        raise ValueError("png signature: not a PNG stream")
     pos = 8
     idat = b""
     w_ = h_ = bands = 0
@@ -95,15 +101,33 @@ def decode_png(data: bytes, w: int = 0, h: int = 0) -> np.ndarray:
         payload = data[pos + 8 : pos + 8 + length]
         pos += 12 + length
         if tag == b"IHDR":
-            w_, h_, depth, color_type = struct.unpack(">IIBB", payload[:10])
-            assert depth == 8, "only 8-bit supported"
-            bands = {0: 1, 2: 3}[color_type]
+            if len(payload) != 13:
+                raise ValueError(f"png IHDR length {len(payload)}: expected 13")
+            w_, h_, depth, color_type, _, _, interlace = struct.unpack(
+                ">IIBBBBB", payload)
+            if depth != 8:
+                raise ValueError(f"png IHDR bit depth {depth}: only 8 is supported")
+            if color_type not in _PNG_BANDS:
+                raise ValueError(f"png IHDR color type {color_type}: only 0 "
+                                 "(grayscale) and 2 (RGB) are supported")
+            if interlace != 0:
+                raise ValueError(f"png IHDR interlace method {interlace}: "
+                                 "only 0 (none) is supported")
+            bands = _PNG_BANDS[color_type]
         elif tag == b"IDAT":
             idat += payload
         elif tag == b"IEND":
             break
-    raw = np.frombuffer(zlib.decompress(idat), dtype=np.uint8)
+    if not bands:
+        raise ValueError("png IHDR: missing")
     stride = w_ * bands
+    try:
+        raw = np.frombuffer(zlib.decompress(idat), dtype=np.uint8)
+    except zlib.error as e:
+        raise ValueError(f"png IDAT: {e}") from None
+    if raw.size != h_ * (stride + 1):
+        raise ValueError(f"png IDAT inflates to {raw.size} bytes, "
+                         f"expected {h_ * (stride + 1)} for {w_}x{h_}x{bands}")
     raw = raw.reshape(h_, stride + 1)
     filters, rows = raw[:, 0], raw[:, 1:].astype(np.int32)
     out = np.zeros((h_, stride), np.int32)
@@ -251,14 +275,6 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
     if mse == 0:
         return float("inf")
     return float(10.0 * np.log10(255.0**2 / mse))
-
-
-def signed_square(x: np.ndarray) -> np.ndarray:
-    """Quantization metadata formula of the reference Zarr attrs
-    (zarr_writer.rs:190-198): int8 value -> float via
-    (x/127.5)^2 * sign(x). Provided for float views of stored chunks."""
-    xf = np.asarray(x, dtype=np.float64)
-    return (xf / 127.5) ** 2 * np.sign(xf)
 
 
 def phash64(img: np.ndarray) -> int:

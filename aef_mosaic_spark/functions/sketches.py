@@ -83,17 +83,6 @@ def hll_registers(df: DataFrame, group_cols: list[str], value_col: str,
                .agg(F.max("rho").cast("int").alias("r")))
 
 
-def hll_merge(*register_tables: DataFrame) -> DataFrame:
-    """Union of sketches = same-shape register table (groupBy max).
-    This is the incremental-ingest path: sketch today's partition,
-    merge with the persisted registers, estimate — no history rescan."""
-    out = register_tables[0]
-    for t in register_tables[1:]:
-        out = out.unionByName(t)
-    keys = [c for c in out.columns if c not in ("r",)]
-    return out.groupBy(*keys).agg(F.max("r").cast("int").alias("r"))
-
-
 def hll_estimate(registers: DataFrame, group_cols: list[str],
                  p: int = 8) -> DataFrame:
     """(group_cols..., n_registers, approx_distinct) from a register

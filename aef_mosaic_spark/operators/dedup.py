@@ -504,9 +504,7 @@ def connected_components(edges: DataFrame, nodes: DataFrame,
 def minhash_band_rows(df: DataFrame, id_col: str, text_col: str,
                       k: int = 16, bands: int = 4) -> DataFrame:
     """LSH band rows -> (id, band_idx, band_val): the per-doc banding
-    shared by candidate generation and the incremental update path.
-    At corpus scale this IS the dedup index — persist it (icelite) and
-    append each increment's rows instead of recomputing O(corpus)."""
+    of the incremental update path."""
     sigs = minhash_signatures(df, id_col, text_col, k)
     return _band_rows(sigs, id_col, k, bands) \
         .select(F.col(id_col).alias("id"), "band_idx", "band_val")
@@ -516,9 +514,7 @@ def update_near_duplicate_clusters(df_all: DataFrame, new_ids: DataFrame,
                                    prior: DataFrame, id_col: str,
                                    text_col: str, threshold: float = 0.8,
                                    k: int = 16, bands: int = 4,
-                                   max_iter: int = 20,
-                                   band_rows_all: DataFrame | None = None
-                                   ) -> DataFrame:
+                                   max_iter: int = 20) -> DataFrame:
     """Batch-incremental cluster maintenance (the daily-crawl shape):
     given the corpus AFTER an increment (`df_all`), the increment's ids
     (`new_ids`, column `id`), and the PRIOR assignment (`prior`:
@@ -529,21 +525,17 @@ def update_near_duplicate_clusters(df_all: DataFrame, new_ids: DataFrame,
     - candidates: new docs' band rows joined against ALL band rows
       (asymmetric equi-join) — old×old pairs are never generated; text
       is immutable, so old×old connectivity is already encoded in
-      `prior`. Pass `band_rows_all` (a persisted band index covering
-      every doc incl. the increment — see minhash_band_rows and the
-      streaming sink's bands table) to make per-increment banding work
-      O(increment); when None they are recomputed from df_all.
+      `prior`;
     - exact-Jaccard verify on the new-touching candidates only;
     - connected components over (new verified edges) UNION (star edges
       id -> prior cluster_id): the prior components collapse to stars,
       so merges between old clusters via a new bridge doc — and
       canonical-id changes when a new doc has a smaller id — resolve
       correctly."""
-    banded = (band_rows_all if band_rows_all is not None
-              else minhash_band_rows(df_all, id_col, text_col, k, bands))
+    banded = minhash_band_rows(df_all, id_col, text_col, k, bands)
     b_new = banded.join(new_ids, "id", "left_semi")
-    # distinct(), not a first-match predicate: the persisted band index
-    # keeps only (id, band_idx, band_val), no earlier-band values
+    # distinct(), not a first-match predicate: the band rows carry
+    # only (id, band_idx, band_val), no earlier-band values
     cand = (b_new.alias("a")
             .join(banded.alias("b"), ["band_idx", "band_val"])
             .where(F.col("a.id") != F.col("b.id"))

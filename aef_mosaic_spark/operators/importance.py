@@ -37,19 +37,6 @@ from aef_mosaic_spark.functions.hashes import h32_col, h32_sql
 DSIR_BUCKETS = 512
 
 
-def _grams_col(text):
-    """Unigrams + bigrams of whitespace tokens (lowercased). Guard the
-    bigram sequence: Spark's sequence(1, 0) steps BACKWARD, so a
-    one-token doc must take the empty-array branch explicitly.
-
-    NOTE (perf): prefer ``_grams_from_tokens`` over a MATERIALIZED
-    token-array column — Spark does no common-subexpression
-    elimination inside lambda functions, so inlining the split here
-    re-evaluates the whole-regex split per bigram element (O(L^2)
-    splits per doc; the repo-wide no-CSE-in-lambdas law)."""
-    return _grams_from_tokens(F.split(F.lower(F.trim(text)), r"\s+"))
-
-
 def _grams_from_tokens(w):
     """Unigram+bigram array from a token-array column/expression.
     Callers on a hot path must pass a *projected column* (two-step

@@ -714,48 +714,6 @@ def probe_ivfpq_index(queries: DataFrame, table_path: str, k: int,
             .where(F.col("rank") <= k))
 
 
-def append_to_ivfpq_index(new_items: DataFrame, table_path: str,
-                          i_id: str = "item_id",
-                          vec: str = "embedding") -> int:
-    """Add vectors to a persisted IVF+PQ index WITHOUT retraining:
-    the stored codebooks/centroids are frozen (FAISS `add` semantics
-    — retraining is a separate, rarer event), new items are encoded
-    against them and appended as a new snapshot. Probes see old+new
-    immediately; the quantization error for drifted data grows until
-    the owner rebuilds, which is the documented trade of every
-    incremental ANN index."""
-    import json as _json
-
-    from aef_mosaic_spark.sources.icelite import Icelite
-
-    t = Icelite(table_path)
-    props = t.properties()
-    if props.get("index") != "ivfpq":
-        raise ValueError(f"{table_path} is not an ivfpq index table")
-    dim, m = int(props["dim"]), int(props["m"])
-    dsub = dim // m
-    centroids = _json.loads(props["centroids"])
-    books = _json.loads(props["codebooks"])
-
-    it_u = unit_normalized(new_items.select(F.col(i_id), F.col(vec)),
-                           vec, "_uv")
-    il = _assign_lists(new_items.select(F.col(i_id),
-                                        F.col(vec).alias("_cv")),
-                       "_cv", centroids, "_il", 1)
-    il = il.select(i_id, F.element_at("_il", 1).alias("list"))
-    enc = it_u.select(i_id, *[F.slice("_uv", j * dsub + 1, dsub)
-                              .alias(f"_s{j}") for j in range(m)])
-    codes = []
-    for j in range(m):
-        dists = F.array(*[_l2_to_lit(F.col(f"_s{j}"), c) for c in books[j]])
-        codes.append((F.array_position(dists, F.array_min(dists)) - 1)
-                     .cast("int").alias(f"c{j}"))
-    idx = enc.select(i_id, *codes).join(il, i_id) \
-        .select(i_id, "list", *[f"c{j}" for j in range(m)])
-    return t.append(idx.repartition("list"), partition_by=["list"],
-                    summary={"operation": "append-ivfpq-index"})
-
-
 def make_rotation(dim: int, seed: int = 7) -> list[list[float]]:
     """Deterministic orthonormal rotation (OPQ's R, Ge et al. 2013,
     public): QR of a seeded Gaussian matrix, sign-fixed so R is unique,

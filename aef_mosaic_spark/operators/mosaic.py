@@ -361,8 +361,9 @@ _ROW_COLS = ("patch", "mask", "ph", "pw", "y0", "x0", "weight", "sort_key")
 
 class _Canvas:
     """One chunk's compositing state (A1/R2/R3, reference
-    mosaic.rs:233-291) — the single accumulator behind composite_chunks,
-    both levels of composite_chunks_salted and streaming_mosaic_mean.
+    mosaic.rs:233-291) — the single accumulator behind composite_chunks
+    (and so the streamed path's compact_chunks) and both levels of
+    composite_chunks_salted.
 
     State is (a, b), the PARTIAL_SCHEMA pair: mean/weighted = (sums,
     counts), last = (uint8 canvas, per-pixel max sort_key), median =

@@ -30,11 +30,6 @@ def sample_bucket_col(id_col: str, salt: str):
                   F.lit(BUCKETS)).cast("int")
 
 
-def sample_bucket_sql(id_expr: str, salt: str) -> str:
-    keyed = f"('{salt}:' || {id_expr}::VARCHAR)"
-    return f"({h32_sql(keyed)} % {BUCKETS})::INT"
-
-
 def sharded_keyed_rank(df: DataFrame, key_cols: list[str],
                        hb_col: str, id_col: str,
                        sum_col: str | None = None,

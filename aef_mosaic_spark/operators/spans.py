@@ -80,7 +80,24 @@ def duplicated_span_stats(df: DataFrame, id_col: str, text_col: str,
         .where(F.col("_nd") >= min_docs)
         .select("h")
     )
-    return _doc_stats(g, dup_hashes, id_col)
+    marked = g.join(dup_hashes.withColumn("_dup", F.lit(1)), "h", "left")
+    return (
+        marked.groupBy(id_col)
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_grams"),
+            F.sum(F.when(F.col("_dup").isNotNull(), 1).otherwise(0))
+            .cast("long").alias("n_dup"),
+            F.coalesce(
+                F.min(F.when(F.col("_dup").isNotNull(), F.col("pos"))),
+                F.lit(-1),
+            ).cast("int").alias("first_dup_pos"),
+        )
+        .withColumn(
+            "dup_ratio",
+            F.round(F.col("n_dup") / F.greatest(F.col("n_grams"), F.lit(1)), 6),
+        )
+        .select(id_col, "n_grams", "n_dup", "dup_ratio", "first_dup_pos")
+    )
 
 
 def duplicated_span_stats_sql(table: str, id_col: str, text_col: str,
@@ -240,71 +257,3 @@ def remove_duplicated_spans_sql(table: str, id_col: str, text_col: str,
            (len(d.ts) - coalesce(k.n_kept, 0))::BIGINT AS n_removed
     FROM d LEFT JOIN kept k USING ({id_col})
     """
-
-
-def _doc_stats(g: DataFrame, dup_hashes: DataFrame, id_col: str) -> DataFrame:
-    """Per-doc stats from gram rows + the corpus dup-hash set (the
-    shared tail of the batch and incremental paths)."""
-    marked = g.join(dup_hashes.withColumn("_dup", F.lit(1)), "h", "left")
-    return (
-        marked.groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_grams"),
-            F.sum(F.when(F.col("_dup").isNotNull(), 1).otherwise(0))
-            .cast("long").alias("n_dup"),
-            F.coalesce(
-                F.min(F.when(F.col("_dup").isNotNull(), F.col("pos"))),
-                F.lit(-1),
-            ).cast("int").alias("first_dup_pos"),
-        )
-        .withColumn(
-            "dup_ratio",
-            F.round(F.col("n_dup") / F.greatest(F.col("n_grams"), F.lit(1)), 6),
-        )
-        .select(id_col, "n_grams", "n_dup", "dup_ratio", "first_dup_pos")
-    )
-
-
-def update_span_index(spark, index_path: str, new_docs: DataFrame,
-                      id_col: str, text_col: str, n: int = 8,
-                      summary: dict | None = None) -> DataFrame:
-    """Incremental substring-dedup: a persisted gram index (icelite
-    table `h -> (owner, nd)` = min doc id and distinct-doc count per
-    n-gram hash) absorbs each new document batch via a copy-on-write
-    MERGE, and the batch's span stats are computed against the
-    UPDATED corpus-wide index — per-batch work is O(batch grams), not
-    O(corpus), the same incremental pattern as the minhash band index
-    (dedup.update_near_duplicate_clusters).
-
-    Returns the new docs' (id, n_grams, n_dup, dup_ratio,
-    first_dup_pos), identical to what a full recompute over the
-    grown corpus would report for those docs (batches must carry
-    disjoint doc ids). Every index version time-travels.
-    """
-    from aef_mosaic_spark.sources.icelite import Icelite
-
-    g = _gram_rows(new_docs, id_col, text_col, n)
-    batch = g.groupBy("h").agg(
-        F.min(id_col).alias("owner"),
-        F.countDistinct(id_col).cast("long").alias("nd"))
-    t = Icelite(index_path)
-    if t.exists():
-        old = t.read(spark)
-        upsert = (
-            batch.alias("b")
-            .join(old.alias("o"), "h", "left")
-            .select(
-                "h",
-                F.least(F.col("b.owner"),
-                        F.coalesce(F.col("o.owner"), F.col("b.owner"))
-                        ).alias("owner"),
-                (F.col("b.nd") + F.coalesce(F.col("o.nd"), F.lit(0)))
-                .alias("nd"),
-            )
-        )
-        t.merge(spark, upsert, ["h"], summary=summary)
-    else:
-        t.append(batch.select("h", "owner", "nd"),
-                 summary=summary)
-    dup = t.read(spark).where(F.col("nd") >= 2).select("h")
-    return _doc_stats(g, dup, id_col)

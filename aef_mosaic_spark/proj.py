@@ -253,12 +253,3 @@ def transform_bounds(bounds, src_crs: str, dst_crs: str, densify: int = 21):
     ok = np.isfinite(tx) & np.isfinite(ty)
     tx, ty = tx[ok], ty[ok]
     return (float(tx.min()), float(ty.min()), float(tx.max()), float(ty.max()))
-
-
-def intersect_bounds(a, b):
-    """[max(minx),max(miny),min(maxx),min(maxy)] or None if disjoint
-    (reference /root/reference/src/crs.rs:222-233)."""
-    out = (max(a[0], b[0]), max(a[1], b[1]), min(a[2], b[2]), min(a[3], b[3]))
-    if out[0] >= out[2] or out[1] >= out[3]:
-        return None
-    return out

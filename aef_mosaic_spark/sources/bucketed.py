@@ -32,12 +32,6 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
     w.saveAsTable(table)
 
 
-def joined_bucketed(spark: SparkSession, left: str, right: str,
-                    on: list[str]) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key."""
-    return spark.table(left).join(spark.table(right), on)
-
-
 def plan_has_shuffle(df: DataFrame) -> bool:
     plan = df._jdf.queryExecution().executedPlan().toString()
     return "Exchange hashpartitioning" in plan or "ShuffleExchange" in plan

@@ -16,9 +16,10 @@ whose snapshot already exists in the chain is skipped. Stream
 checkpoint (no replays lost) + atomic snapshot commit (no partial
 appends) + batch_id dedup (no double appends) = exactly-once.
 
-  compact_chunks(): composite all patches per chunk key on demand —
-  mean/last/weighted are associative over patches, so late tiles only
-  re-touch the chunks they overlap.
+  compact_chunks(): composite the accumulated patch table into chunk
+  rows on demand — the compositors are order-independent over patches,
+  so the result equals the one-shot batch mosaic whatever the
+  microbatch split.
 
 This keeps per-microbatch work O(new tiles) while preserving
 bit-exact parity with the one-shot batch mosaic (test-verified).
@@ -26,11 +27,7 @@ bit-exact parity with the one-shot batch mosaic (test-verified).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from aef_mosaic_spark.generator import IMAGE_SCHEMA
 from aef_mosaic_spark.grid import OutputGrid
@@ -77,7 +74,9 @@ def stream_patches_to_table(images_stream: DataFrame, grid: OutputGrid,
     """Run the stateless prefix (the reproject_patches kernel: grid
     bounds, chunk ranges, decode-once patch reprojection) on the
     stream; each microbatch commits one icelite snapshot of patch
-    rows."""
+    rows. If the stream has not drained within timeout_s, stops the
+    query and raises TimeoutError (snapshots already committed stay
+    in the table)."""
     table = Icelite(table_path)
     _sink = make_patch_sink(table, grid)
 
@@ -87,7 +86,10 @@ def stream_patches_to_table(images_stream: DataFrame, grid: OutputGrid,
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"patch stream into {table_path} did not drain in {timeout_s} s")
     return table
 
 
@@ -96,60 +98,3 @@ def compact_chunks(spark: SparkSession, patches_table: str, grid: OutputGrid,
     """Composite the accumulated patch table into chunk rows."""
     patches = Icelite(patches_table).read(spark)
     return M.composite_chunks(patches, grid, mode=mode)
-
-
-def refresh_chunks(spark: SparkSession, patches_table: str, chunks_table: str,
-                   grid: OutputGrid, mode: str = "mean") -> dict:
-    """Incremental materialized-view maintenance of the chunk table:
-    recomposite ONLY chunks touched by patch snapshots committed since
-    the last refresh (late tiles re-touch the chunks they overlap,
-    nothing else — the streaming analog of the batch resume anti-join).
-
-    Mechanics: the chunk table's `compacted_through` property records
-    the last patch snapshot folded in. A refresh reads only the NEWER
-    patch manifests to find touched chunk keys, recomposites those keys
-    from the FULL patch history (compositors are associative over
-    patches, so this equals a from-scratch composite for those keys),
-    and appends the new chunk versions stamped with `updated_snap`.
-    `latest_chunks` resolves each key to its newest version.
-    """
-    pt = Icelite(patches_table)
-    ct = Icelite(chunks_table)
-    latest = pt.current_snapshot_id() or 0
-    done_through = int(ct.properties().get("compacted_through", 0)) \
-        if ct.exists() else 0
-    if latest <= done_through:
-        return {"refreshed_chunks": 0, "compacted_through": done_through}
-    snap = pt.snapshot()
-    new_files = []
-    for m in snap["manifests"]:
-        man = json.loads(open(os.path.join(pt.meta, m)).read())
-        if man["snapshot_id"] > done_through:
-            new_files.extend(os.path.join(pt.path, e["path"])
-                             for e in man["entries"])
-    keys = ["time_idx", "row_idx", "col_idx"]
-    touched = (spark.read.option("basePath", pt.path).parquet(*new_files)
-               .select(*keys).distinct()) if new_files else None
-    if touched is None:
-        ref_count = 0
-    else:
-        all_patches = pt.read(spark)
-        todo = all_patches.join(F.broadcast(touched), on=keys, how="left_semi")
-        chunks = M.composite_chunks(todo, grid, mode=mode) \
-            .withColumn("updated_snap", F.lit(latest))
-        ct.append(chunks, partition_by=["time_idx"],
-                  properties={"compacted_through": str(latest)},
-                  summary={"operation": "refresh-chunks",
-                           "patch_snapshots": [done_through + 1, latest]})
-        ref_count = touched.count()
-    return {"refreshed_chunks": ref_count, "compacted_through": latest}
-
-
-def latest_chunks(spark: SparkSession, chunks_table: str) -> DataFrame:
-    """Current materialized view: newest version of every chunk key."""
-    from pyspark.sql import Window
-    ct = Icelite(chunks_table).read(spark)
-    w = Window.partitionBy("time_idx", "row_idx", "col_idx") \
-        .orderBy(F.desc("updated_snap"))
-    return (ct.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") == 1).drop("_rk", "updated_snap"))

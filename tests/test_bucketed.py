@@ -4,22 +4,7 @@ table at 100 TB)."""
 
 from pyspark.sql import functions as F
 
-from aef_mosaic_spark.sources.bucketed import (
-    joined_bucketed, plan_has_shuffle, write_bucketed,
-)
-
-
-def test_joined_bucketed_helper(spark, tmp_path):
-    docs = spark.range(50).selectExpr("CAST(id AS STRING) AS k", "id AS v")
-    write_bucketed(docs, "jb_a", ["k"], 4, path=str(tmp_path / "a"))
-    write_bucketed(docs.selectExpr("k", "v * 2 AS w"), "jb_b", ["k"], 4,
-                   path=str(tmp_path / "b"))
-    try:
-        j = joined_bucketed(spark, "jb_a", "jb_b", ["k"])
-        assert j.count() == 50
-    finally:
-        spark.sql("DROP TABLE IF EXISTS jb_a")
-        spark.sql("DROP TABLE IF EXISTS jb_b")
+from aef_mosaic_spark.sources.bucketed import plan_has_shuffle, write_bucketed
 
 
 def test_bucketed_join_is_exchange_free(spark, tmp_path):

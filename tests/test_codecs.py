@@ -1,3 +1,6 @@
+import struct
+import zlib
+
 import numpy as np
 import pytest
 
@@ -20,6 +23,34 @@ def test_lossless_roundtrip(img, fmt):
 def test_png_grayscale():
     img = (np.arange(32 * 32, dtype=np.uint8)).reshape(1, 32, 32)
     assert np.array_equal(codecs.decode(codecs.encode(img, "png"), "png", 32, 32), img)
+
+
+# a 4x3 RGB image: 3 rows of (filter byte 0 + 4 * 3 samples)
+_PNG_IDAT = zlib.compress(bytes(3 * (1 + 4 * 3)))
+
+
+def _png(depth=8, color_type=2, interlace=0, idat=_PNG_IDAT,
+         sig=b"\x89PNG\r\n\x1a\n", ihdr_len=13):
+    """A 4x3 PNG with the given signature, IHDR fields and IDAT."""
+    ihdr = struct.pack(">IIBBBBB", 4, 3, depth, color_type, 0, 0,
+                       interlace)[:ihdr_len]
+    return (sig + codecs._png_chunk(b"IHDR", ihdr)
+            + codecs._png_chunk(b"IDAT", idat) + codecs._png_chunk(b"IEND", b""))
+
+
+@pytest.mark.parametrize("data, field", [
+    (_png(sig=b"\x89PNX\r\n\x1a\n"), "signature"),
+    (_png(ihdr_len=10), "IHDR length 10"),
+    (_png(depth=16), "bit depth 16"),
+    (_png(color_type=3), "color type 3"),
+    (_png(interlace=1), "interlace method 1"),
+    (_png(idat=_PNG_IDAT[:-6]), "IDAT"),            # zlib stream cut short
+    (_png(idat=zlib.compress(bytes(3 * 13 - 5))), "IDAT inflates"),
+], ids=["signature", "ihdr_short", "depth16", "palette", "adam7", "idat_cut", "idat_short"])
+def test_decode_png_rejects_bad_input(data, field):
+    assert codecs.decode_png(_png()).shape == (3, 3, 4)
+    with pytest.raises(ValueError, match=field):
+        codecs.decode_png(data)
 
 
 def test_qdct_psnr_budget(img):

@@ -293,35 +293,6 @@ def test_curation_job_analyze_and_bad_budget(spark, tmp_path):
               "--budget", "A=notanumber"])
 
 
-def test_incremental_span_index_equals_full_recompute(spark, tmp_path):
-    shared = " ".join(f"s{i}" for i in range(8))
-    b1 = [(1, "a b c d " + shared), (2, "p q r s t u v w x y")]
-    b2 = [(10, "m n o k " + shared),     # duplicates batch-1's span
-          (11, "fresh words only here now there")]
-    from aef_mosaic_spark.operators.spans import (duplicated_span_stats,
-                                                  update_span_index)
-    idx = str(tmp_path / "gram_idx")
-    schema = "doc_id long, text string"
-    s1 = update_span_index(spark, idx, spark.createDataFrame(b1, schema),
-                           "doc_id", "text", n=4)
-    assert all(r["n_dup"] == 0 for r in s1.collect())  # nothing dup yet
-    s2 = {r["doc_id"]: r for r in update_span_index(
-        spark, idx, spark.createDataFrame(b2, schema),
-        "doc_id", "text", n=4).collect()}
-    # full recompute over the union, restricted to batch-2 docs
-    full = {r["doc_id"]: r for r in duplicated_span_stats(
-        spark.createDataFrame(b1 + b2, schema), "doc_id", "text",
-        n=4).collect() if r["doc_id"] >= 10}
-    for k in full:
-        assert s2[k].asDict() == full[k].asDict()
-    assert s2[10]["n_dup"] > 0 and s2[11]["n_dup"] == 0
-    # the index time-travels: version 1 predates batch 2
-    from aef_mosaic_spark.sources.icelite import Icelite
-    t = Icelite(idx)
-    v1 = t.read(spark, snapshot_id=1)
-    assert v1.where("nd >= 2").count() == 0
-
-
 def test_dedup_job_semdedup_mode(spark, tmp_path):
     import contextlib, io, json
 

@@ -63,11 +63,6 @@ def test_densification_contains_corners():
     assert dense[1] <= y.min() and dense[3] >= y.max()
 
 
-def test_intersect_bounds():
-    assert proj.intersect_bounds((0, 0, 2, 2), (1, 1, 3, 3)) == (1, 1, 2, 2)
-    assert proj.intersect_bounds((0, 0, 1, 1), (2, 2, 3, 3)) is None
-
-
 def test_parse_epsg():
     assert proj.parse_epsg("EPSG:32610") == ("utm", 10, False)
     assert proj.parse_epsg("EPSG:32719") == ("utm", 19, True)

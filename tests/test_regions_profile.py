@@ -138,47 +138,7 @@ def test_stay_points_short_dwell_dropped(spark):
     assert stay_points(df, ts_col="es").count() == 0
 
 
-# ------------------------------------------------- streaming anomaly
-
-def test_streaming_anomalies_match_batch(spark, tmp_path):
-    """Reconciliation: with in-order arrival (contiguous time slices
-    as microbatches), the streaming flags == the batch operator's."""
-    import time
-
-    from aef_mosaic_spark.operators.anomaly import rolling_anomalies
-    from aef_mosaic_spark.streaming.stateful import streaming_anomalies
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    want = sorted(
-        (r.user_id, r.event_id, r.es, r.vcents, r.win_n)
-        for r in rolling_anomalies(ev).collect())
-    assert want, "fixture should flag something"
-
-    quant = ev.selectExpr(
-        "user_id", "event_id",
-        "unix_timestamp(ts) AS es",
-        "CAST(floor(value * 100 + 0.5) AS LONG) AS vcents")
-    cut = quant.approxQuantile("es", [0.5], 0.0)[0]
-    src = str(tmp_path / "in")
-    quant.where(F.col("es") < cut).coalesce(1) \
-        .write.mode("append").parquet(src)
-    time.sleep(1.5)  # file-source order = mtime: slice 2 after slice 1
-    quant.where(F.col("es") >= cut).coalesce(1) \
-        .write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(
-        "user_id long, event_id long, es long, vcents long") \
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    q = (streaming_anomalies(stream)
-         .writeStream.format("memory").queryName("anom_t")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = sorted(
-        (r.user_id, r.event_id, r.es, r.vcents, r.win_n)
-        for r in spark.sql("SELECT * FROM anom_t").collect())
-    q.stop()
-    assert got == want
-
+# -------------------------------------------------- flagship regions
 
 def test_label_regions_flagship_numpy_parity(spark):
     """q136's exact recipe vs the stitched-raster golden labeler,
@@ -421,56 +381,3 @@ def test_monotone_chain_known_square():
     hull = _monotone_chain(pts)
     assert set(hull) == {(0, 0), (4, 0), (4, 4), (0, 4)}
     assert _area2(hull) == 32  # 2 * 16
-
-
-def test_streaming_stay_points_match_batch(spark, tmp_path):
-    """Reconciliation: streaming closed-run stays == batch stays
-    minus each user's final (still-open) run, under in-order
-    arrival."""
-    import time
-
-    from aef_mosaic_spark.operators.sessions import (
-        event_fixes, stay_points)
-    from aef_mosaic_spark.streaming.stateful import streaming_stay_points
-
-    fixes = event_fixes(
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
-    batch = stay_points(fixes).collect()
-    assert batch
-    want = sorted(
-        (r.user_id, r.cell_x, r.cell_y, r.n_fixes, r.start_es,
-         r.end_es, r.dwell_sec)
-        for r in batch)
-
-    cut = fixes.approxQuantile("es", [0.5], 0.0)[0]
-    src = str(tmp_path / "in")
-    fixes.where(F.col("es") < cut).coalesce(1) \
-        .write.mode("append").parquet(src)
-    time.sleep(1.5)
-    fixes.where(F.col("es") >= cut).coalesce(1) \
-        .write.mode("append").parquet(src)
-    stream = spark.readStream.schema(
-        "user_id long, event_id long, es long, xm long, ym long") \
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    q = (streaming_stay_points(stream)
-         .writeStream.format("memory").queryName("stays_t")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = sorted(
-        (r.user_id, r.cell_x, r.cell_y, r.n_fixes, r.start_es,
-         r.end_es, r.dwell_sec)
-        for r in spark.sql("SELECT * FROM stays_t").collect())
-    q.stop()
-    # stream = batch minus final open runs: every streamed stay is a
-    # batch stay, and the only batch stays missing from the stream
-    # are each user's LAST one
-    got_set = set(got)
-    want_set = set(want)
-    assert got_set <= want_set
-    missing = want_set - got_set
-    by_user_last = {}
-    for r in want:
-        if r[0] not in by_user_last or r[4] > by_user_last[r[0]][4]:
-            by_user_last[r[0]] = r
-    assert missing <= set(by_user_last.values())
-    assert len(got_set) >= len(want_set) - len(by_user_last)

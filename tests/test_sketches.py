@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from aef_mosaic_spark.functions.sketches import (
     cms_heavy_hitters, cms_heavy_hitters_sql, hll_distinct,
-    hll_distinct_sql, hll_estimate, hll_merge, hll_registers)
+    hll_distinct_sql)
 
 SF = "/root/testdata/sf0.01"
 
@@ -42,23 +42,6 @@ def test_hll_grouped_linear_counting_branch(spark, events):
                         .agg(F.countDistinct("v").alias("n")).collect()}
     for t, n in exact.items():
         assert abs(est[t] - n) / n < 0.15, (t, est[t], n)
-
-
-def test_hll_merge_equals_full_sketch(spark, events):
-    """sketch(A union B) must equal merge(sketch(A), sketch(B))
-    REGISTER-FOR-REGISTER — the property that lets daily deltas merge
-    into a persisted sketch without rescanning history."""
-    df = events.selectExpr("CAST(event_id AS STRING) AS v")
-    a = df.where(F.crc32(F.col("v")) % 2 == 0)
-    b = df.where(F.crc32(F.col("v")) % 2 == 1)
-    merged = hll_merge(hll_registers(a, [], "v"), hll_registers(b, [], "v"))
-    full = hll_registers(df, [], "v")
-    assert sorted(map(tuple, merged.collect())) == \
-        sorted(map(tuple, full.collect()))
-    # and the estimate path over the merged registers agrees too
-    e1 = hll_estimate(merged, []).collect()[0]["approx_distinct"]
-    e2 = hll_distinct(df, [], "v").collect()[0]["approx_distinct"]
-    assert e1 == e2
 
 
 def test_hll_duckdb_twin_parity(spark, events):

@@ -474,42 +474,6 @@ def test_persisted_ivfpq_index_probe_matches_direct(spark, tmp_path):
     assert set(idx.columns) == {"item_id", "list", "c0", "c1", "c2", "c3"}
 
 
-def test_ivfpq_index_incremental_append(spark, tmp_path):
-    """FAISS-add semantics: new vectors encode against the FROZEN
-    codebooks and become visible to probes; the codebook properties
-    are untouched and old codes never rewritten."""
-    rng = np.random.RandomState(23)
-    centers = rng.randn(8, 16) * 3
-    vecs = np.vstack([c + rng.randn(15, 16) * 0.05 for c in centers])
-    items = pd.DataFrame({"item_id": np.arange(120),
-                          "embedding": [v.tolist() for v in vecs]})
-    first, second = items.iloc[:80], items.iloc[80:]
-    path = str(tmp_path / "idx")
-    K.build_ivfpq_index(spark.createDataFrame(first), path, dim=16,
-                        n_lists=4, m=4, ksub=8)
-    from aef_mosaic_spark.sources.icelite import Icelite
-    t = Icelite(path)
-    props_before = t.properties()
-    files_before = {e["path"] for e in t.data_files()}
-    K.append_to_ivfpq_index(spark.createDataFrame(second), path)
-    # codebooks frozen, old files untouched, rows extended
-    assert t.properties()["codebooks"] == props_before["codebooks"]
-    assert files_before <= {e["path"] for e in t.data_files()}
-    assert t.read(spark).count() == 120
-    # a query near a second-batch item finds it
-    probe_vec = second.iloc[0]["embedding"]
-    qs = spark.createDataFrame(
-        pd.DataFrame({"query_id": [999], "embedding": [probe_vec]}))
-    got = K.probe_ivfpq_index(qs, path, k=15, n_probe=4).collect()
-    found = {r.item_id for r in got}
-    # compressed-domain ties rank by LOWER id inside the identical-
-    # reconstruction cluster (the q80 recall convention): the 5
-    # first-batch cluster-mates (75-79) lead, but k=15 MUST surface
-    # appended second-batch ids — proof the new snapshot is probed
-    assert found & set(range(80, 90))
-    assert found <= set(range(75, 90))  # and it's the right cluster
-
-
 def test_opq_rotation_orthonormal_and_recall(spark):
     R = np.asarray(K.make_rotation(16, seed=7))
     assert np.abs(R @ R.T - np.eye(16)).max() < 1e-4   # 6dp literals
