@@ -362,26 +362,23 @@ _ROW_COLS = ("patch", "mask", "ph", "pw", "y0", "x0", "weight", "sort_key")
 class _Canvas:
     """One chunk's compositing state (A1/R2/R3, reference
     mosaic.rs:233-291) — the single accumulator behind composite_chunks
-    (and so the streamed path's compact_chunks) and both levels of
-    composite_chunks_salted.
+    (and so the streamed path's compact_chunks).
 
-    State is (a, b), the PARTIAL_SCHEMA pair: mean/weighted = (sums,
-    counts), last = (uint8 canvas, per-pixel max sort_key), median =
-    (staged patches, counts). Every mode is order-independent: sums
-    are exact integers (mean) and `last` keeps, per pixel, the patch
-    with the largest sort_key. An int32 mean canvas refuses its
-    MEAN_PATCH_CAP+1-th patch; wide=True (the salted merge) sums in
-    int64."""
+    State is (a, b): mean/weighted = (sums, counts), last = (uint8
+    canvas, per-pixel max sort_key), median = (staged patches,
+    counts). Every mode is order-independent: sums are exact integers
+    (mean) and `last` keeps, per pixel, the patch with the largest
+    sort_key. A mean canvas sums in int32 and refuses its
+    MEAN_PATCH_CAP+1-th patch."""
 
-    def __init__(self, mode: str, nb: int, chh: int, chw: int, wide: bool = False):
+    def __init__(self, mode: str, nb: int, chh: int, chw: int):
         self.mode, self.nb, self.n = mode, nb, 0
-        self.cap = MEAN_PATCH_CAP if mode == "mean" and not wide else None
+        self.cap = MEAN_PATCH_CAP if mode == "mean" else None
         if mode == "last":
             self.a = np.zeros((nb, chh, chw), np.uint8)
             self.b = np.full((chh, chw), _NO_KEY, np.int64)
         else:
-            dt = {"mean": np.int64 if wide else np.int32, "weighted": np.float64,
-                  "median": np.int32}[mode]
+            dt = {"mean": np.int32, "weighted": np.float64, "median": np.int32}[mode]
             self.a = [] if mode == "median" else np.zeros((nb, chh, chw), dt)
             self.b = np.zeros((chh, chw), dt)
 
@@ -402,7 +399,10 @@ class _Canvas:
             self.a.append((patch, mask, y0, x0))
             self.b[ys, xs] += mask
         else:
-            self.merge(patch, np.where(mask, sort_key, _NO_KEY), y0, x0)
+            best = self.b[ys, xs]
+            take = mask & (sort_key > best)
+            self.a[:, ys, xs][:, take] = patch[:, take]
+            best[take] = sort_key
 
     def add_rows(self, cols) -> None:
         """add() every PATCH_SCHEMA row of `cols`, a mapping of column
@@ -412,29 +412,8 @@ class _Canvas:
             self.add(*_patch_pixels(patch, mask, ph, pw, self.nb),
                      y0, x0, weight, sort_key)
 
-    def merge(self, a: np.ndarray, b: np.ndarray, y0: int, x0: int) -> None:
-        """Fold in a cropped (a, b) state whose corner is (y0, x0)."""
-        ys, xs = slice(y0, y0 + b.shape[0]), slice(x0, x0 + b.shape[1])
-        if self.mode == "last":
-            best = self.b[ys, xs]
-            take = b > best
-            sub = self.a[:, ys, xs]
-            sub[:, take] = a[:, take]
-            best[take] = b[take]
-        else:
-            self.a[:, ys, xs] += a
-            self.b[ys, xs] += b
-
     def _touched(self) -> np.ndarray:
         return self.b > (_NO_KEY if self.mode == "last" else 0)
-
-    def crop(self):
-        """(y0, x0, a, b) over the touched bounding box, or None."""
-        ys, xs = np.nonzero(self._touched())
-        if not len(ys):
-            return None
-        y0, y1, x0, x1 = int(ys.min()), int(ys.max()) + 1, int(xs.min()), int(xs.max()) + 1
-        return y0, x0, self.a[:, y0:y1, x0:x1], self.b[y0:y1, x0:x1]
 
     def finish(self) -> tuple[np.ndarray, int]:
         """-> (uint8 (nb, chh, chw) canvas, valid_px); never-touched
@@ -473,22 +452,17 @@ _KEYS = ("time_idx", "row_idx", "col_idx")
 _CHUNK_ARROW = _arrow_schema(CHUNK_SCHEMA)
 
 
-def _chunk_frame(cols, cv: _Canvas, n_tiles: int) -> pa.Table:
-    """The CHUNK_SCHEMA row of the group `cols` composited into `cv`."""
-    canvas, valid = cv.finish()
-    return pa.table({
-        **{k: [cols[k][0]] for k in _KEYS},
-        "chunk": [canvas.tobytes()], "n_tiles": [n_tiles], "valid_px": [valid],
-        "bands": [cv.nb], "chunk_h": [canvas.shape[1]], "chunk_w": [canvas.shape[2]],
-    }, schema=_CHUNK_ARROW)
-
-
 def _composite(cols, mode: str, nb: int, chh: int, chw: int) -> pa.Table:
     """One chunk's PATCH_SCHEMA rows (columns, as _Canvas.add_rows
     takes them) -> its CHUNK_SCHEMA row."""
     cv = _Canvas(mode, nb, chh, chw)
     cv.add_rows(cols)
-    return _chunk_frame(cols, cv, len(set(cols["image_id"])))
+    canvas, valid = cv.finish()
+    return pa.table({
+        **{k: [cols[k][0]] for k in _KEYS},
+        "chunk": [canvas.tobytes()], "n_tiles": [len(set(cols["image_id"]))],
+        "valid_px": [valid], "bands": [nb], "chunk_h": [chh], "chunk_w": [chw],
+    }, schema=_CHUNK_ARROW)
 
 
 def composite_chunks(patches: DataFrame, grid: OutputGrid, mode: str = "mean") -> DataFrame:
@@ -520,73 +494,6 @@ def composite_chunks(patches: DataFrame, grid: OutputGrid, mode: str = "mean") -
     return patches.groupBy(*_KEYS).applyInArrow(
         lambda t: _composite(t.to_pydict(), mode, nb, chh, chw), schema=CHUNK_SCHEMA
     )
-
-
-PARTIAL_SCHEMA = (
-    "time_idx int, row_idx int, col_idx int, y0 int, x0 int, ph int, pw int, "
-    "a binary, b binary, n_tiles int"
-)
-_PARTIAL_ARROW = _arrow_schema(PARTIAL_SCHEMA)
-
-
-def composite_chunks_salted(patches: DataFrame, grid: OutputGrid,
-                            mode: str = "mean", salt: int = 8) -> DataFrame:
-    """Two-level compositor for skewed chunks (a dense spatial cluster
-    puts thousands of patches in ONE chunk group, which a single-level
-    groupBy cannot split — the agg-side analog of join skew).
-
-    Level 1: groupBy(chunk, salt(image_id)) -> per-salt PARTIAL state
-    (the bbox-cropped _Canvas), so the hot group's work spreads over
-    `salt` tasks. Level 2: groupBy(chunk) merges the <=salt partials
-    into an int64 canvas and finalizes. Bit-exact vs composite_chunks
-    for 'mean' (integer accumulators — addition order irrelevant) and
-    'last' (per-pixel max sort_key is order-independent); for
-    'weighted' the float64 sums accumulate per salt before merging, so
-    addition order differs from the single-level path and np.rint at
-    an exact .5 boundary could flip a pixel by 1 (tested equal on the
-    fixture data; treat weighted parity as allclose-within-1, not
-    bitwise). 'median' is NOT offered here: an exact median partial
-    is a per-pixel 256-bin histogram (~100 MB per salt partial at
-    256x256x3) — for a median composite the skew unit is the chunk
-    itself and overlap depth is bounded by tiles-per-chunk, so use
-    composite_chunks(mode='median')."""
-    if mode == "median":
-        raise ValueError(
-            "median is not salt-decomposable (needs per-pixel value "
-            "histograms); use composite_chunks(mode='median')")
-    nb, chh, chw = grid.num_bands, grid.chunk_h, grid.chunk_w
-    level1 = _Canvas(mode, nb, 0, 0)  # the dtypes a partial is cropped in
-
-    def _partial(table: pa.Table) -> pa.Table:
-        cols = table.to_pydict()
-        cv = _Canvas(mode, nb, chh, chw)
-        cv.add_rows(cols)
-        part = cv.crop()
-        if part is None:
-            return _PARTIAL_ARROW.empty_table()
-        y0, x0, a, b = part
-        return pa.table({
-            **{k: [cols[k][0]] for k in _KEYS},
-            "y0": [y0], "x0": [x0], "ph": [b.shape[0]], "pw": [b.shape[1]],
-            "a": [zlib.compress(np.ascontiguousarray(a).tobytes(), 1)],
-            "b": [zlib.compress(np.ascontiguousarray(b).tobytes(), 1)],
-            "n_tiles": [len(set(cols["image_id"]))],
-        }, schema=_PARTIAL_ARROW)
-
-    def _merge(table: pa.Table) -> pa.Table:
-        cols = table.to_pydict()
-        cv = _Canvas(mode, nb, chh, chw, wide=True)
-        for a, b, ph, pw, y0, x0 in zip(*(cols[k] for k in ("a", "b", "ph", "pw", "y0", "x0"))):
-            cv.merge(np.frombuffer(zlib.decompress(a), level1.a.dtype).reshape(nb, ph, pw),
-                     np.frombuffer(zlib.decompress(b), level1.b.dtype).reshape(ph, pw),
-                     y0, x0)
-        # salts partition image_ids disjointly
-        return _chunk_frame(cols, cv, sum(cols["n_tiles"]))
-
-    salted = patches.withColumn(
-        "_salt", F.pmod(F.xxhash64("image_id"), F.lit(salt)).cast("int"))
-    partials = salted.groupBy(*_KEYS, "_salt").applyInArrow(_partial, schema=PARTIAL_SCHEMA)
-    return partials.groupBy(*_KEYS).applyInArrow(_merge, schema=CHUNK_SCHEMA)
 
 
 def overview_chunks(chunks: DataFrame, grid: OutputGrid,

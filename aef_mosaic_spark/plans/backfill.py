@@ -1,28 +1,23 @@
-"""Rate-limited backfill driver over MosaicJob's incremental bands.
+"""Token bucket that paces a rate-limited backfill.
 
 A backfill reprocesses history against a shared upstream (object
 store / tile service): run flat-out and you starve production
 traffic. The reference throttles with an HTTP-fetch semaphore +
 bounded channels (src/pipeline/stages.rs:387-410); the Spark-shaped
-equivalent is BETWEEN-COMMIT throttling: the keyspace is split into
-row bands (run_incremental's unit of checkpointing) and a token
-bucket paces band submissions so the AVERAGE input-byte rate stays
-under the budget. Burst is bounded by one band's bytes — shrink it by
+equivalent is BETWEEN-COMMIT throttling: MosaicJob.run_incremental
+splits the keyspace into row bands and, given a bucket, charges each
+band's input bytes to it so the AVERAGE input-byte rate stays under
+the budget. Burst is bounded by one band's bytes — shrink it by
 raising `groups`.
 
 Every band is a durable icelite snapshot, so a kill at any point
 loses at most one band and `resume=True` continues from committed
-keys (same invariant as run_incremental, kill -9 verified there).
+keys.
 """
 
 from __future__ import annotations
 
 import time
-
-from pyspark.sql import DataFrame, SparkSession
-
-from aef_mosaic_spark.plans.pipeline import MosaicJob
-from aef_mosaic_spark.sources.icelite import Icelite
 
 
 class TokenBucket:
@@ -62,83 +57,3 @@ class TokenBucket:
             slept = wait
             self._refill()
         return slept
-
-
-class BackfillDriver:
-    """Paced band-by-band backfill with progress + ETA.
-
-    rate_bytes_per_sec limits the average INPUT byte rate (the bytes
-    the workers fetch+decode, metrics `tile_bytes_in`) — the quantity
-    a shared upstream cares about. on_progress (if set) receives one
-    dict per band: {band, bands, chunks_written, tile_bytes_in,
-    slept_s, eta_s, done_frac}.
-    """
-
-    def __init__(self, job: MosaicJob, groups: int = 8,
-                 rate_bytes_per_sec: float | None = None,
-                 bucket: TokenBucket | None = None,
-                 on_progress=None):
-        self.job = job
-        self.groups = groups
-        self.bucket = bucket or (
-            TokenBucket(rate_bytes_per_sec,
-                        capacity=rate_bytes_per_sec)
-            if rate_bytes_per_sec else None)
-        self.on_progress = on_progress
-
-    def run(self, spark: SparkSession, images: DataFrame,
-            output_path: str, resume: bool = False,
-            process_years: tuple[int, ...] | None = None) -> dict:
-        rows = self.job.grid.chunk_rows
-        groups = max(1, min(self.groups, rows))
-        edges = [round(i * rows / groups) for i in range(groups + 1)]
-        table = Icelite(output_path)
-        if not resume and table.exists():
-            raise FileExistsError(f"{output_path} exists; pass resume=True")
-        t0 = time.time()
-        per_band: list[dict] = []
-        total_slept = 0.0
-        for i in range(groups):
-            r0, r1 = edges[i], edges[i + 1] - 1
-            if r1 < r0:
-                continue
-            m = self.job.run(spark, images, output_path,
-                             resume=resume or table.exists(),
-                             row_range=(r0, r1),
-                             process_years=process_years)
-            m["band"] = i
-            slept = 0.0
-            if self.bucket is not None and i < groups - 1:
-                # charge the band's actual input bytes; pacing before
-                # the NEXT band starts its upstream reads
-                slept = self.bucket.acquire(float(m["tile_bytes_in"] or 0))
-            m["slept_s"] = round(slept, 3)
-            total_slept += slept
-            per_band.append(m)
-            if self.on_progress is not None:
-                done = i + 1
-                elapsed = time.time() - t0
-                avg = elapsed / done
-                self.on_progress({
-                    "band": i, "bands": groups,
-                    "chunks_written": m["chunks_written"],
-                    "tile_bytes_in": m["tile_bytes_in"],
-                    "slept_s": m["slept_s"],
-                    "eta_s": round(avg * (groups - done), 1),
-                    "done_frac": round(done / groups, 4),
-                })
-        total_bytes = sum(b["tile_bytes_in"] or 0 for b in per_band)
-        wall = time.time() - t0
-        return {
-            "snapshot_id": per_band[-1]["snapshot_id"] if per_band else None,
-            "wall_s": round(wall, 3),
-            "bands": len(per_band),
-            "tiles_in": sum(b["tiles_in"] for b in per_band),
-            "tile_bytes_in": total_bytes,
-            "chunks_written": sum(b["chunks_written"] for b in per_band),
-            "previously_completed": sum(b["previously_completed"]
-                                        for b in per_band),
-            "slept_s": round(total_slept, 3),
-            "avg_input_mb_per_sec": round(total_bytes / wall / 1e6, 3),
-            "per_band": per_band,
-        }

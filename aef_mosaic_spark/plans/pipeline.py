@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from aef_mosaic_spark.grid import OutputGrid
 from aef_mosaic_spark.operators import mosaic as M
+from aef_mosaic_spark.plans.backfill import TokenBucket
 from aef_mosaic_spark.sources.icelite import Icelite
 
 KEYS = ["time_idx", "row_idx", "col_idx"]
@@ -42,32 +43,12 @@ def config_hash(grid: OutputGrid, mode: str) -> str:
 
 class MosaicJob:
     def __init__(self, grid: OutputGrid, mode: str = "mean",
-                 cluster_output: bool = False, composite_salt: int = 0,
                  skip_bad_tiles: bool = False):
         self.grid = grid
         self.mode = mode
-        self.cluster_output = cluster_output
-        # >1 enables the two-level skew-splitting compositor (bit-exact)
-        self.composite_salt = composite_salt
         # tolerate corrupt tiles (skip + count) instead of failing the job
         self.skip_bad_tiles = skip_bad_tiles
         self.hash = config_hash(grid, mode)
-
-    def _with_hilbert(self, chunks: DataFrame) -> DataFrame:
-        import pandas as pd
-
-        from aef_mosaic_spark.grid import hilbert_d, hilbert_order_for
-        order = hilbert_order_for(max(self.grid.chunk_rows, self.grid.chunk_cols))
-
-        def _h(it):
-            for pdf in it:
-                pdf["hilbert"] = hilbert_d(pdf["col_idx"].to_numpy(),
-                                           pdf["row_idx"].to_numpy(), order)
-                yield pdf
-
-        schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                           for f in chunks.schema.fields) + ", hilbert long"
-        return chunks.mapInPandas(_h, schema=schema)
 
     # ------------------------------------------------------------ plan
     def pending_tiles(self, images: DataFrame, done: DataFrame,
@@ -180,21 +161,7 @@ class MosaicJob:
             F.count(F.lit(1)).alias("n_patches"),
             F.sum(F.length("patch")).alias("patch_bytes"),
         )
-        if self.composite_salt > 1 and self.mode != "median":
-            # median has no salt-decomposable partial (see
-            # composite_chunks_salted docstring) — always single-level
-            chunks = M.composite_chunks_salted(patches, self.grid,
-                                               mode=self.mode,
-                                               salt=self.composite_salt)
-        else:
-            chunks = M.composite_chunks(patches, self.grid, mode=self.mode)
-        if self.cluster_output:
-            # Hilbert clustering of chunk rows within the sink
-            # (reference O1, output_grid.rs:221-244): spatially adjacent
-            # chunks land in the same files -> better compression and
-            # locality for windowed readers
-            chunks = self._with_hilbert(chunks).repartitionByRange(
-                "time_idx", "hilbert").drop("hilbert")
+        chunks = M.composite_chunks(patches, self.grid, mode=self.mode)
 
         reporter = None
         if progress_interval_s:
@@ -222,13 +189,9 @@ class MosaicJob:
         wall = time.time() - t0
 
         def _get(obs: Observation, keys: list[str]) -> dict:
-            # an all-complete resume plans to an empty relation; its
-            # observation never fires — report zeros instead of failing
-            try:
-                m = obs.get
-                return {k: (m.get(k) or 0) for k in keys}
-            except Exception:
-                return dict.fromkeys(keys, 0)
+            # an all-complete resume fires with zero rows: null sums
+            m = obs.get
+            return {k: (m.get(k) or 0) for k in keys}
 
         tile_m = _get(obs_tiles, ["n_tiles", "tile_bytes"])
         patch_m = _get(obs_patches, ["n_patches", "patch_bytes"])
@@ -266,7 +229,9 @@ class MosaicJob:
     def run_incremental(self, spark: SparkSession, images: DataFrame,
                         output_path: str, groups: int = 4,
                         resume: bool = False,
-                        process_years: tuple[int, ...] | None = None) -> dict:
+                        process_years: tuple[int, ...] | None = None,
+                        bucket: TokenBucket | None = None,
+                        on_progress=None) -> dict:
         """Mid-run incremental checkpointing: split the chunk keyspace
         into `groups` contiguous row bands and commit each band as its
         own snapshot — a crash loses at most ONE band's work, matching
@@ -280,7 +245,13 @@ class MosaicJob:
         boundary only). Resume reuses the normal done-keys anti-join
         per band: completed bands skip at metadata cost, the interrupted
         band resumes at pending-chunk granularity, untouched bands skip
-        the pending-tiles anti-join."""
+        the pending-tiles anti-join.
+
+        bucket, a plans.backfill.TokenBucket over input bytes, paces a
+        backfill: each band's actual `tile_bytes_in` is charged after
+        its commit. on_progress, if set, receives one dict per band:
+        {group, groups, chunks_written, tile_bytes_in, slept_s, eta_s,
+        done_frac}."""
         rows = self.grid.chunk_rows
         groups = max(1, min(groups, rows))
         edges = [round(i * rows / groups) for i in range(groups + 1)]
@@ -297,22 +268,36 @@ class MosaicJob:
                          resume=resume or table.exists(),
                          row_range=(r0, r1),
                          process_years=process_years)
-            m["group"] = i
-            m["row_range"] = [r0, r1]
+            slept = 0.0
+            if bucket is not None and i < groups - 1:
+                # paces the NEXT band's reads, so the last is never charged
+                slept = bucket.acquire(float(m["tile_bytes_in"]))
+            m.update(group=i, row_range=[r0, r1], slept_s=round(slept, 3))
             per_group.append(m)
-        agg = {
-            "snapshot_id": per_group[-1]["snapshot_id"],
-            "wall_s": round(time.time() - t0, 3),
+            if on_progress is not None:
+                done = i + 1
+                on_progress({
+                    "group": i, "groups": groups,
+                    "chunks_written": m["chunks_written"],
+                    "tile_bytes_in": m["tile_bytes_in"],
+                    "slept_s": m["slept_s"],
+                    "eta_s": round((time.time() - t0) / done * (groups - done), 1),
+                    "done_frac": round(done / groups, 4),
+                })
+        wall = time.time() - t0
+        tile_bytes = sum(m["tile_bytes_in"] for m in per_group)
+        return {
+            "snapshot_id": per_group[-1]["snapshot_id"] if per_group else None,
+            "wall_s": round(wall, 3),
             "groups": len(per_group),
-            "tiles_in": sum(m["tiles_in"] for m in per_group),
-            "patches": sum(m["patches"] for m in per_group),
-            "chunks_written": sum(m["chunks_written"] for m in per_group),
-            "bytes_written": sum(m["bytes_written"] for m in per_group),
-            "previously_completed": sum(m["previously_completed"]
-                                        for m in per_group),
+            **{k: sum(m[k] for m in per_group)
+               for k in ("tiles_in", "patches", "chunks_written",
+                         "bytes_written", "previously_completed")},
+            "tile_bytes_in": tile_bytes,
+            "slept_s": round(sum(m["slept_s"] for m in per_group), 3),
+            "avg_input_mb_per_sec": round(tile_bytes / wall / 1e6, 3),
             "per_group": per_group,
         }
-        return agg
 
     def _write_coordinate_tables(self, spark: SparkSession, output_path: str):
         """Dimension/coordinate tables for xarray-style consumers

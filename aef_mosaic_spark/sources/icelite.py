@@ -672,7 +672,7 @@ class Icelite:
         [min, max] stats in the new manifest make read(filters=) prune
         most files — the data-layout half of scan planning. For 2-D
         spatial keys pass a space-filling-curve column (grid.hilbert_d)
-        as the cluster key, as the write path does for chunks."""
+        as the cluster key."""
         df = self.read(spark)
         if cluster_by:
             n = target_files or df.rdd.getNumPartitions()

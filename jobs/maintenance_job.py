@@ -10,7 +10,7 @@ surviving snapshot). Prints ONE metrics JSON line.
     spark-submit --master local[16] --driver-memory 16g \
       --py-files dist/engine.zip jobs/maintenance_job.py \
       --table /data/images --compact --target-files 64 \
-      --cluster-by hilbert --tag weekly-2026-08 \
+      --cluster-by year,min_lat --tag weekly-2026-08 \
       --expire-keep-last 3 --remove-orphans
 """
 

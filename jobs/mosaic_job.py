@@ -36,8 +36,6 @@ CONFIG_TEMPLATE = {
     "resolution": 10.0,
     "years": "2023,2024",
     "commit_groups": 1,
-    "composite_salt": 0,
-    "cluster_output": False,
 }
 
 
@@ -177,10 +175,6 @@ def main(argv=None):
     ap.add_argument("--shuffle-partitions", type=int, default=0)
     ap.add_argument("--no-warmup", action="store_true",
                     help="skip the python-worker warmup before timing")
-    ap.add_argument("--composite-salt", type=int, default=0,
-                    help=">1 enables the two-level skew-splitting compositor")
-    ap.add_argument("--cluster-output", action="store_true",
-                    help="Hilbert-cluster chunk rows in the sink")
     ap.add_argument("--progress-interval", type=float, default=None,
                     help="print active-stage task progress every N "
                          "seconds and report per-stage time in metrics")
@@ -249,29 +243,21 @@ def main(argv=None):
     if not args.no_warmup:
         warm_python_workers(spark)
 
-    job = MosaicJob(grid, mode=args.mode, cluster_output=args.cluster_output,
-                    composite_salt=args.composite_salt,
-                    skip_bad_tiles=args.skip_bad_tiles)
+    job = MosaicJob(grid, mode=args.mode, skip_bad_tiles=args.skip_bad_tiles)
     if args.analyze:
         print(json.dumps(job.analyze(spark, images)))
         return 0
     t0 = time.time()
     process_years = (tuple(int(y) for y in args.process_years.split(","))
                      if args.process_years else None)
-    if args.commit_groups > 1 and args.rate_mbps:
-        from aef_mosaic_spark.plans.backfill import BackfillDriver
-        drv = BackfillDriver(
-            job, groups=args.commit_groups,
-            rate_bytes_per_sec=args.rate_mbps * 1e6,
+    if args.commit_groups > 1:
+        from aef_mosaic_spark.plans.backfill import TokenBucket
+        metrics = job.run_incremental(
+            spark, images, args.output, groups=args.commit_groups,
+            resume=args.resume, process_years=process_years,
+            bucket=TokenBucket(args.rate_mbps * 1e6) if args.rate_mbps else None,
             on_progress=lambda p: print(json.dumps({"progress": p}),
                                         file=sys.stderr))
-        metrics = drv.run(spark, images, args.output, resume=args.resume,
-                          process_years=process_years)
-    elif args.commit_groups > 1:
-        metrics = job.run_incremental(spark, images, args.output,
-                                      groups=args.commit_groups,
-                                      resume=args.resume,
-                                      process_years=process_years)
     else:
         metrics = job.run(spark, images, args.output, resume=args.resume,
                           process_years=process_years,

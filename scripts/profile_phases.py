@@ -41,11 +41,6 @@ def main():
     out["n_chunks"] = M.composite_chunks(
         M.tiles_to_patches(imgs, grid), grid).count()
     out["t_full"] = round(time.time() - t0, 2)
-
-    t0 = time.time()
-    out["n_chunks_salted"] = M.composite_chunks_salted(
-        M.tiles_to_patches(imgs, grid), grid, salt=8).count()
-    out["t_full_salted"] = round(time.time() - t0, 2)
     print(json.dumps(out))
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from aef_mosaic_spark import generator
 from aef_mosaic_spark.grid import OutputGrid
+from aef_mosaic_spark.plans.backfill import TokenBucket
 from aef_mosaic_spark.plans.pipeline import KEYS, MosaicJob, config_hash
 from aef_mosaic_spark.sources.icelite import Icelite
 
@@ -232,6 +233,15 @@ def test_incremental_commits_and_crash_resume(spark, tmp_path, grid):
             for r in Icelite(out_inc2).read(spark).collect()}
     assert got2 == full
     assert len(Icelite(out_inc2).history()) == 2
+
+    # a paced, all-complete resume reports the unpaced run's keys; the
+    # unpaced run slept 0 s
+    paced = job.run_incremental(
+        spark, images, out_inc2, groups=2, resume=True,
+        bucket=TokenBucket(1e12, sleep=lambda s: None))
+    assert paced.keys() == m2.keys() and m2["slept_s"] == 0
+    assert paced["chunks_written"] == 0
+    assert paced["previously_completed"] == len(full)
 
 
 def test_progress_reporter_and_write_rate(spark, tmp_path, grid):

@@ -144,7 +144,7 @@ def test_mean_rounding_reference_vector():
     assert M._finalize_mean(np.array([7]), np.array([3]))[0] == 2
     # random sums of both signs, counts including zero, in the callers'
     # dtypes: int32 (the compositor, |s| + c//2 < 2**31 up to its
-    # patch-count bound) and int64 (overview, temporal, salted merge)
+    # patch-count bound) and int64 (overview, temporal)
     rng = np.random.default_rng(7)
     for dtype, max_c, max_per in ((np.int32, (2**31 - 1) // 256, 255),
                                   (np.int64, 2**31, 2**30)):
@@ -166,23 +166,6 @@ def test_caption_passthrough(spark, images_pdf, images_sdf, grid):
     got = {(r.image_id, r.caption) for r in joined.collect()}
     want_caps = dict(zip(images_pdf.image_id, images_pdf.caption))
     assert all(cap == want_caps[i] for i, cap in got)
-
-
-def test_salted_composite_matches_single_level(spark, images_pdf, images_sdf, grid):
-    # two-level (skew-splitting) compositor is bit-exact vs single-level
-    from aef_mosaic_spark.operators.mosaic import (
-        composite_chunks, composite_chunks_salted, tiles_to_patches)
-    patches = tiles_to_patches(images_sdf, grid)
-    for mode in ("mean", "last", "weighted"):
-        single = {
-            (r.time_idx, r.row_idx, r.col_idx): (bytes(r.chunk), r.n_tiles, r.valid_px)
-            for r in composite_chunks(patches, grid, mode=mode).collect()
-        }
-        salted = {
-            (r.time_idx, r.row_idx, r.col_idx): (bytes(r.chunk), r.n_tiles, r.valid_px)
-            for r in composite_chunks_salted(patches, grid, mode=mode, salt=4).collect()
-        }
-        assert single == salted, mode
 
 
 MODES = ("mean", "last", "weighted", "median")
@@ -223,10 +206,9 @@ def test_composite_is_order_independent(weighted_patches, grid, mode):
 
 
 def test_mean_canvas_refuses_patch_past_cap():
-    """An int32 mean canvas (batch, salted partial and streaming state)
-    holds MEAN_PATCH_CAP patches: full-value sums at the cap still
-    finalize, and one more patch raises instead of wrapping. The int64
-    salted-merge canvas has no cap."""
+    """An int32 mean canvas (batch and streaming state) holds
+    MEAN_PATCH_CAP patches: full-value sums at the cap still finalize,
+    and one more patch raises instead of wrapping."""
     patch, mask = np.full((1, 2, 2), 255, np.uint8), np.ones((2, 2), bool)
     cv = M._Canvas("mean", 1, 2, 2)
     cv.n = M.MEAN_PATCH_CAP - 1
@@ -237,9 +219,6 @@ def test_mean_canvas_refuses_patch_past_cap():
     with pytest.raises(OverflowError):
         cv.add(patch, mask, 0, 0)
     assert cv.n == M.MEAN_PATCH_CAP
-    wide = M._Canvas("mean", 1, 2, 2, wide=True)
-    wide.n = M.MEAN_PATCH_CAP
-    wide.add(patch, mask, 0, 0)
 
 
 @pytest.mark.parametrize("case", ["empty", "other_year"])
@@ -258,11 +237,8 @@ def test_degenerate_tiles_give_empty_results(spark, images_sdf, grid, case):
     patches = M.reproject_patches(tiles, grid)
     assert patches.columns == cols(M.PATCH_SCHEMA) and patches.collect() == []
     for mode in MODES:
-        out = [M.composite_chunks(patches, grid, mode=mode)]
-        if mode != "median":
-            out.append(M.composite_chunks_salted(patches, grid, mode=mode))
-        for c in out:
-            assert c.columns == cols(M.CHUNK_SCHEMA) and c.collect() == [], mode
+        c = M.composite_chunks(patches, grid, mode=mode)
+        assert c.columns == cols(M.CHUNK_SCHEMA) and c.collect() == [], mode
 
 
 def test_weighted_mosaic_matches_oracle(spark, images_pdf, grid):
@@ -286,9 +262,7 @@ def test_weighted_mosaic_matches_oracle(spark, images_pdf, grid):
 def test_median_mosaic_matches_oracle(spark, images_pdf, images_sdf, grid):
     # per-pixel LOWER median composite (order-independent,
     # outlier-robust): exact parity vs the naive per-pixel oracle,
-    # plus n_tiles/valid_px equality; salted path refuses median
-    import pytest
-
+    # plus n_tiles/valid_px equality
     chunks = {
         (r.time_idx, r.row_idx, r.col_idx): r
         for r in M.mosaic(images_sdf, grid, mode="median").collect()
@@ -301,9 +275,6 @@ def test_median_mosaic_matches_oracle(spark, images_pdf, images_sdf, grid):
         assert np.array_equal(got, w["canvas"]), key
         assert chunks[key].n_tiles == w["n_tiles"]
         assert chunks[key].valid_px == w["valid_px"]
-    with pytest.raises(ValueError, match="median"):
-        M.composite_chunks_salted(
-            M.tiles_to_patches(images_sdf, grid), grid, mode="median")
 
 
 def test_lossy_codec_mosaic_psnr_invariant(spark, grid):

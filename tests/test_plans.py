@@ -94,12 +94,12 @@ def test_token_bucket_paces_deterministically():
     assert sum(slept) == 0.5
 
 
-def test_backfill_driver_rate_limit_and_kill_resume(spark, tmp_path):
-    """BackfillDriver: (a) the paced run's table is identical to the
-    unpaced full run, (b) the limiter actually sleeps (average input
-    rate respected), (c) a kill between bands resumes to the same
-    table, (d) progress callbacks carry ETA."""
-    from aef_mosaic_spark.plans.backfill import BackfillDriver, TokenBucket
+def test_paced_incremental_rate_limit_and_kill_resume(spark, tmp_path):
+    """run_incremental with a token bucket: (a) the paced run's table
+    is identical to the unpaced full run, (b) the limiter actually
+    sleeps (average input rate respected), (c) a kill between bands
+    resumes to the same table, (d) progress callbacks carry ETA."""
+    from aef_mosaic_spark.plans.backfill import TokenBucket
     from aef_mosaic_spark.plans.pipeline import MosaicJob
     from aef_mosaic_spark.sources.icelite import Icelite
 
@@ -115,25 +115,25 @@ def test_backfill_driver_rate_limit_and_kill_resume(spark, tmp_path):
     bucket = TokenBucket(rate=50_000.0, capacity=50_000.0,
                          sleep=lambda s: slept.append(s))
     prog = []
-    drv = BackfillDriver(job, groups=2, bucket=bucket,
-                         on_progress=prog.append)
     out = str(tmp_path / "paced")
-    m = drv.run(spark, images, out)
-    assert m["bands"] == 2 and m["chunks_written"] == len(full)
+    m = job.run_incremental(spark, images, out, groups=2, bucket=bucket,
+                            on_progress=prog.append)
+    assert m["groups"] == 2 and m["chunks_written"] == len(full)
     got = {(r.time_idx, r.row_idx, r.col_idx): bytes(r.chunk)
            for r in Icelite(out).read(spark).collect()}
     assert got == full
-    # band 0 reads ~MBs at a 50 kB/s budget -> the limiter must sleep
-    assert slept and m["slept_s"] > 1.0
+    # band 0 reads ~MBs at a 50 kB/s budget -> the limiter must sleep,
+    # once: the last band is never charged
+    assert len(slept) == 1 and m["slept_s"] > 1.0
+    assert m["per_group"][-1]["slept_s"] == 0.0
     assert len(prog) == 2 and prog[0]["eta_s"] >= 0
     assert prog[-1]["done_frac"] == 1.0
 
-    # kill after band 0: fresh driver, resume completes the rest
+    # kill after band 0: resume completes the rest
     out2 = str(tmp_path / "killed")
-    drv2 = BackfillDriver(job, groups=2,
-                          bucket=TokenBucket(1e12, sleep=lambda s: None))
     job.run(spark, images, out2, row_range=(0, GRID.chunk_rows // 2 - 1))
-    m2 = drv2.run(spark, images, out2, resume=True)
+    m2 = job.run_incremental(spark, images, out2, groups=2, resume=True,
+                             bucket=TokenBucket(1e12, sleep=lambda s: None))
     assert m2["previously_completed"] > 0
     got2 = {(r.time_idx, r.row_idx, r.col_idx): bytes(r.chunk)
             for r in Icelite(out2).read(spark).collect()}
