@@ -39,6 +39,8 @@ from ..grid import OutputGrid
 
 FOCAL_OPS = ("mean", "max", "min", "median", "grad", "slope", "hillshade",
              "aspect", "d8", "tri")
+# ops whose kernel reads exactly the 8 neighbors: radius must be 1
+FIXED_3X3_OPS = ("grad", "slope", "hillshade", "aspect", "d8", "tri")
 
 # terrain-op constants (treating each band as an elevation surface):
 # classic 45-degree sun altitude / 315-degree (NW) azimuth defaults,
@@ -50,41 +52,36 @@ TERRAIN_Z_FACTOR = 1.0
 HILLSHADE_ALTITUDE_DEG = 45.0
 HILLSHADE_AZIMUTH_DEG = 315.0
 
+_KEYS = ("time_idx", "row_idx", "col_idx")
 _OUT_SCHEMA = ("time_idx int, row_idx int, col_idx int, "
                "chunk binary, n_parts int")
 
 
-def _sobel(pad: np.ndarray, chh: int, chw: int) -> np.ndarray:
-    """|gx|+|gy| Sobel over the padded (nb, chh+2, chw+2) array,
-    all int32, clipped to uint8."""
+def _sobel_xy(pad: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The 3x3 Sobel sums (gx, gy), int32, over a padded
+    (nb, H+2, W+2) array, y increasing downward (raster row order)."""
     p = pad.astype(np.int32)
-    c = p[:, 1:-1, 1:-1]  # noqa: F841 — center slice kept for clarity
-    tl = p[:, :-2, :-2]
-    tc = p[:, :-2, 1:-1]
-    tr = p[:, :-2, 2:]
-    ml = p[:, 1:-1, :-2]
-    mr = p[:, 1:-1, 2:]
-    bl = p[:, 2:, :-2]
-    bc = p[:, 2:, 1:-1]
-    br = p[:, 2:, 2:]
-    gx = (tr + 2 * mr + br) - (tl + 2 * ml + bl)
-    gy = (bl + 2 * bc + br) - (tl + 2 * tc + tr)
-    mag = np.abs(gx) + np.abs(gy)
-    return np.minimum(mag, 255).astype(np.uint8)
-
-
-def _horn_gradients(pad: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Horn 1981 3x3 weighted gradients dz/dx, dz/dy (float64) over a
-    zero-padded (nb, H+2, W+2) elevation array, y increasing downward
-    (raster row order)."""
-    p = pad.astype(np.float64)
     tl, tc, tr = p[:, :-2, :-2], p[:, :-2, 1:-1], p[:, :-2, 2:]
     ml, mr = p[:, 1:-1, :-2], p[:, 1:-1, 2:]
     bl, bc, br = p[:, 2:, :-2], p[:, 2:, 1:-1], p[:, 2:, 2:]
+    gx = (tr + 2 * mr + br) - (tl + 2 * ml + bl)
+    gy = (bl + 2 * bc + br) - (tl + 2 * tc + tr)
+    return gx, gy
+
+
+def _sobel(pad: np.ndarray) -> np.ndarray:
+    """|gx|+|gy| Sobel, all int32, clipped to uint8."""
+    gx, gy = _sobel_xy(pad)
+    return np.minimum(np.abs(gx) + np.abs(gy), 255).astype(np.uint8)
+
+
+def _horn_gradients(pad: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Horn 1981 3x3 weighted gradients dz/dx, dz/dy (float64): the
+    Sobel sums over 8 cell sizes.  Sums of uint8 values are exact
+    integers, so taking them in int32 changes no bit."""
+    gx, gy = _sobel_xy(pad)
     den = 8.0 * TERRAIN_CELLSIZE
-    dzdx = ((tr + 2.0 * mr + br) - (tl + 2.0 * ml + bl)) / den
-    dzdy = ((bl + 2.0 * bc + br) - (tl + 2.0 * tc + tr)) / den
-    return dzdx, dzdy
+    return gx / den, gy / den
 
 
 def _slope(pad: np.ndarray) -> np.ndarray:
@@ -173,10 +170,9 @@ def _tri(pad: np.ndarray) -> np.ndarray:
     return np.minimum(s // 8, 255).astype(np.uint8)
 
 
-def _apply_kernel(pad: np.ndarray, op: str, r: int,
-                  chh: int, chw: int) -> np.ndarray:
+def _apply_kernel(pad: np.ndarray, op: str, r: int) -> np.ndarray:
     if op == "grad":
-        return _sobel(pad, chh, chw)
+        return _sobel(pad)
     if op == "tri":
         return _tri(pad)
     if op == "d8":
@@ -224,33 +220,25 @@ def focal_chunks(chunks: DataFrame, grid: OutputGrid, op: str = "mean",
     """
     if op not in FOCAL_OPS:
         raise ValueError(f"op must be one of {FOCAL_OPS}, got {op!r}")
-    if op in ("grad", "slope", "hillshade", "aspect",
-              "tri") and radius != 1:
+    if op in FIXED_3X3_OPS and radius != 1:
         raise ValueError(f"{op} is a fixed 3x3 kernel; radius must be 1")
     if radius < 1 or radius > min(grid.chunk_h, grid.chunk_w):
         raise ValueError("radius must be in [1, chunk size]")
-
-    chh, chw, nb = grid.chunk_h, grid.chunk_w, grid.num_bands
-    r = radius
-
-    src = chunks.select("time_idx", "row_idx", "col_idx",
-                        F.col(chunk_col).alias("chunk"))
-    return _halo_pass(src, n_rows=grid.chunk_rows, n_cols=grid.chunk_cols,
-                      nbands=nb, chh=chh, chw=chw, r=r,
-                      kernel=lambda pad: _apply_kernel(pad, op, r, chh, chw))
+    src = chunks.select(*_KEYS, F.col(chunk_col).alias("chunk"))
+    return _halo_pass(src, grid, grid.num_bands, radius,
+                      lambda pad: _apply_kernel(pad, op, radius))
 
 
-def _halo_pass(src: DataFrame, *, n_rows: int, n_cols: int, nbands: int,
-               chh: int, chw: int, r: int, kernel) -> DataFrame:
-    """The halo-exchange machinery shared by focal_chunks and
-    flow_accumulation: emit each chunk once plus r-wide edge strips to
-    its <=8 existing neighbor keys, assemble the padded canvas per
-    key, apply `kernel(pad) -> (nbands_out, chh, chw) uint8`.  nbands
-    is the INPUT band count (may differ from grid.num_bands — the
-    flow-accumulation state packs 2x)."""
+def _halo_parts(src: DataFrame, grid: OutputGrid, nb: int,
+                r: int) -> DataFrame:
+    """The halo emit: each (time_idx, row_idx, col_idx, chunk) row of
+    `nb` (chh, chw) uint8 bands goes once to its own key (sy = sx = 0)
+    and as r-wide edge strips to its <=8 in-grid neighbor keys; (sy,
+    sx) is the sender's offset as the receiver sees it."""
     import pandas as pd
 
-    nb = nbands
+    chh, chw = grid.chunk_h, grid.chunk_w
+    n_rows, n_cols = grid.chunk_rows, grid.chunk_cols
 
     def _emit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -271,40 +259,83 @@ def _halo_pass(src: DataFrame, *, n_rows: int, n_cols: int, nbands: int,
                         xs = (slice(chw - r, chw) if dx == 1 else
                               slice(0, r) if dx == -1 else slice(0, chw))
                         strip = np.ascontiguousarray(arr[:, ys, xs])
-                        # from the receiver's view the sender sits at
-                        # offset (-dy, -dx)
-                        rows.append((ti, nr, nc, -dy, -dx,
-                                     strip.tobytes()))
-            yield pd.DataFrame(rows, columns=[
-                "time_idx", "row_idx", "col_idx", "sy", "sx", "part"])
-    parts = src.mapInPandas(_emit, schema="time_idx int, row_idx int, "
-                            "col_idx int, sy int, sx int, part binary")
+                        rows.append((ti, nr, nc, -dy, -dx, strip.tobytes()))
+            yield pd.DataFrame(rows, columns=[*_KEYS, "sy", "sx", "part"])
+    return src.mapInPandas(_emit, schema="time_idx int, row_idx int, "
+                           "col_idx int, sy int, sx int, part binary")
+
+
+def _halo_canvas(pdf, grid: OutputGrid, nb: int, r: int):
+    """One key's group of _halo_parts rows -> the zero-padded
+    (nb, chh+2r, chw+2r) canvas, or None at a hole (no center part:
+    the key has no chunk of its own)."""
+    if not ((pdf["sy"] == 0) & (pdf["sx"] == 0)).any():
+        return None
+    chh, chw = grid.chunk_h, grid.chunk_w
+    pad = np.zeros((nb, chh + 2 * r, chw + 2 * r), np.uint8)
+    for sy, sx, part in zip(pdf["sy"], pdf["sx"], pdf["part"]):
+        ph = r if sy != 0 else chh
+        pw = r if sx != 0 else chw
+        py = 0 if sy == -1 else r if sy == 0 else r + chh
+        px = 0 if sx == -1 else r if sx == 0 else r + chw
+        pad[:, py:py + ph, px:px + pw] = np.frombuffer(
+            part, np.uint8).reshape(nb, ph, pw)
+    return pad
+
+
+def _halo_pass(src: DataFrame, grid: OutputGrid, nb: int, r: int,
+               kernel) -> DataFrame:
+    """One halo exchange: _halo_parts, a groupBy per key, then
+    `kernel(pad) -> (nb_out, chh, chw) uint8` on each _halo_canvas ->
+    _OUT_SCHEMA rows (n_parts = parts received).  nb is the INPUT band
+    count, which the iterated stencils' packed states widen."""
+    import pandas as pd
 
     def _assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        has_center = ((pdf["sy"] == 0) & (pdf["sx"] == 0)).any()
-        if not has_center:
-            return pd.DataFrame(columns=[
-                "time_idx", "row_idx", "col_idx", "chunk", "n_parts"])
-        pad = np.zeros((nb, chh + 2 * r, chw + 2 * r), np.uint8)
-        for t in pdf.itertuples(index=False):
-            sy, sx = int(t.sy), int(t.sx)
-            ph = r if sy != 0 else chh
-            pw = r if sx != 0 else chw
-            arr = np.frombuffer(t.part, np.uint8).reshape(nb, ph, pw)
-            py = (0 if sy == -1 else r if sy == 0 else r + chh)
-            px = (0 if sx == -1 else r if sx == 0 else r + chw)
-            pad[:, py:py + arr.shape[1], px:px + arr.shape[2]] = arr
-        out = kernel(pad)
-        return pd.DataFrame([{
-            "time_idx": int(pdf["time_idx"].iloc[0]),
-            "row_idx": int(pdf["row_idx"].iloc[0]),
-            "col_idx": int(pdf["col_idx"].iloc[0]),
-            "chunk": np.ascontiguousarray(out).tobytes(),
-            "n_parts": len(pdf),
-        }])
+        pad = _halo_canvas(pdf, grid, nb, r)
+        if pad is None:
+            return pd.DataFrame(columns=[*_KEYS, "chunk", "n_parts"])
+        out = np.ascontiguousarray(kernel(pad))
+        return pd.DataFrame([(*(int(pdf[k].iloc[0]) for k in _KEYS),
+                              out.tobytes(), len(pdf))],
+                            columns=[*_KEYS, "chunk", "n_parts"])
 
-    return parts.groupBy("time_idx", "row_idx", "col_idx").applyInPandas(
+    return _halo_parts(src, grid, nb, r).groupBy(*_KEYS).applyInPandas(
         _assemble, schema=_OUT_SCHEMA)
+
+
+def _map_pixels(df: DataFrame, grid: OutputGrid, nb: int, fn,
+                chunk_col: str = "chunk") -> DataFrame:
+    """The one per-chunk pixel rewrite: a narrow mapInPandas that
+    replaces every row's `chunk_col` bytes with
+    `fn(pixels (nb, chh, chw) uint8, row_idx, col_idx) -> uint8 array`
+    and keeps the input schema (every other column passes through)."""
+    chh, chw = grid.chunk_h, grid.chunk_w
+
+    def _apply(it):
+        for pdf in it:
+            pdf = pdf.copy()
+            pdf[chunk_col] = [
+                np.ascontiguousarray(fn(np.frombuffer(buf, np.uint8)
+                                        .reshape(nb, chh, chw),
+                                        int(ri), int(ci))).tobytes()
+                for buf, ri, ci in zip(pdf[chunk_col], pdf["row_idx"],
+                                       pdf["col_idx"])]
+            yield pdf
+
+    return df.mapInPandas(_apply, schema=", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields))
+
+
+def _iterate(state: DataFrame, grid: OutputGrid, nb: int, kernel,
+             iters: int) -> DataFrame:
+    """`iters` chained radius-1 halo passes of an nb-band state: the
+    loop behind flow accumulation, the distance transform and basins.
+    The chain is linear (each round consumed once), so the whole loop
+    is one lazy plan with no checkpoint."""
+    for _ in range(iters):
+        state = _halo_pass(state, grid, nb, 1, kernel)
+    return state
 
 
 def focal_oracle_np(canvas: np.ndarray, op: str, radius: int) -> np.ndarray:
@@ -315,7 +346,7 @@ def focal_oracle_np(canvas: np.ndarray, op: str, radius: int) -> np.ndarray:
     r = radius
     pad = np.zeros((nb, H + 2 * r, W + 2 * r), np.uint8)
     pad[:, r:r + H, r:r + W] = canvas
-    return _apply_kernel(pad, op, r, H, W)
+    return _apply_kernel(pad, op, r)
 
 
 # ------------------------------------------------------------------ #
@@ -367,45 +398,13 @@ def flow_accumulation(chunks: DataFrame, grid: OutputGrid,
     strips of the 2*nb-band state, never full-chunk 9x replication;
     the chain is linear (each round consumed exactly once) so no
     checkpoint is needed and the whole loop is one lazy plan."""
-    import pandas as pd
-
-    nb, chh, chw = grid.num_bands, grid.chunk_h, grid.chunk_w
+    nb = grid.num_bands
     d8 = focal_chunks(chunks, grid, op="d8", radius=1,
                       chunk_col=chunk_col)
-
-    def _pack(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for t in pdf.itertuples(index=False):
-                d = np.frombuffer(t.chunk, np.uint8).reshape(nb, chh, chw)
-                state = np.concatenate([d, np.ones_like(d)], axis=0)
-                rows.append((int(t.time_idx), int(t.row_idx),
-                             int(t.col_idx), state.tobytes(),
-                             int(t.n_parts)))
-            yield pd.DataFrame(rows, columns=[
-                "time_idx", "row_idx", "col_idx", "chunk", "n_parts"])
-
-    state = d8.mapInPandas(_pack, schema=_OUT_SCHEMA)
-    kernel = _flowacc_kernel(nb)
-    for _ in range(iters):
-        state = _halo_pass(state, n_rows=grid.chunk_rows,
-                           n_cols=grid.chunk_cols, nbands=2 * nb,
-                           chh=chh, chw=chw, r=1, kernel=kernel)
-
-    def _strip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for t in pdf.itertuples(index=False):
-                s = np.frombuffer(t.chunk, np.uint8).reshape(
-                    2 * nb, chh, chw)
-                rows.append((int(t.time_idx), int(t.row_idx),
-                             int(t.col_idx),
-                             np.ascontiguousarray(s[nb:]).tobytes(),
-                             int(t.n_parts)))
-            yield pd.DataFrame(rows, columns=[
-                "time_idx", "row_idx", "col_idx", "chunk", "n_parts"])
-
-    return state.mapInPandas(_strip, schema=_OUT_SCHEMA)
+    state = _map_pixels(
+        d8, grid, nb, lambda d, ri, ci: np.concatenate([d, np.ones_like(d)]))
+    state = _iterate(state, grid, 2 * nb, _flowacc_kernel(nb), iters)
+    return _map_pixels(state, grid, 2 * nb, lambda s, ri, ci: s[nb:])
 
 
 def flowacc_oracle_np(canvas: np.ndarray,
@@ -476,42 +475,13 @@ def distance_transform(chunks: DataFrame, grid: OutputGrid,
     flow-accumulation machinery, one lazy linear plan, no
     checkpoints).  Internally the state is s = 255 - d so the halo's
     zero padding is the min-plus identity (see _chamfer_kernel)."""
-    import pandas as pd
-
-    nb, chh, chw = grid.num_bands, grid.chunk_h, grid.chunk_w
-
-    def _init(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for t in pdf.itertuples(index=False):
-                arr = np.frombuffer(t.chunk, np.uint8).reshape(nb, chh, chw)
-                s = np.where(arr >= threshold, np.uint8(255), np.uint8(0))
-                rows.append((int(t.time_idx), int(t.row_idx),
-                             int(t.col_idx), s.tobytes(), 1))
-            yield pd.DataFrame(rows, columns=[
-                "time_idx", "row_idx", "col_idx", "chunk", "n_parts"])
-
-    state = chunks.select("time_idx", "row_idx", "col_idx",
-                          F.col(chunk_col).alias("chunk")) \
-        .mapInPandas(_init, schema=_OUT_SCHEMA)
-    for _ in range(iters):
-        state = _halo_pass(state, n_rows=grid.chunk_rows,
-                           n_cols=grid.chunk_cols, nbands=nb,
-                           chh=chh, chw=chw, r=1, kernel=_chamfer_kernel)
-
-    def _flip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for t in pdf.itertuples(index=False):
-                s = np.frombuffer(t.chunk, np.uint8).reshape(nb, chh, chw)
-                rows.append((int(t.time_idx), int(t.row_idx),
-                             int(t.col_idx),
-                             (np.uint8(255) - s).tobytes(),
-                             int(t.n_parts)))
-            yield pd.DataFrame(rows, columns=[
-                "time_idx", "row_idx", "col_idx", "chunk", "n_parts"])
-
-    return state.mapInPandas(_flip, schema=_OUT_SCHEMA)
+    nb = grid.num_bands
+    src = chunks.select(*_KEYS, F.col(chunk_col).alias("chunk"),
+                        F.lit(1).alias("n_parts"))
+    state = _map_pixels(src, grid, nb, lambda a, ri, ci: np.where(
+        a >= threshold, np.uint8(255), np.uint8(0)))
+    state = _iterate(state, grid, nb, _chamfer_kernel, iters)
+    return _map_pixels(state, grid, nb, lambda s, ri, ci: np.uint8(255) - s)
 
 
 def disttrans_oracle_np(canvas: np.ndarray,
@@ -560,18 +530,37 @@ def global_histogram(chunks: DataFrame, grid: OutputGrid,
             .agg(F.sum("cnt").cast("long").alias("cnt")))
 
 
+def _hist_array(hist_rows, num_bands: int) -> np.ndarray:
+    """global_histogram() rows -> the (num_bands, 256) int64 array."""
+    h = np.zeros((num_bands, 256), np.int64)
+    for r in hist_rows:
+        h[int(r["band"]), int(r["bin"])] = int(r["cnt"])
+    return h
+
+
+def _apply_luts(chunks: DataFrame, grid: OutputGrid, luts: np.ndarray,
+                chunk_col: str) -> DataFrame:
+    """Map every pixel of band b through luts[b] (uint8 (nb, 256)); the
+    LUT rides the closure, so the pass is narrow."""
+    bands = np.arange(grid.num_bands)[:, None, None]
+    return _map_pixels(chunks, grid, grid.num_bands,
+                       lambda a, ri, ci: luts[bands, a], chunk_col)
+
+
 def stretch_luts(hist_rows, num_bands: int, p_low: float = 2.0,
                  p_high: float = 98.0) -> tuple[np.ndarray, list]:
     """Build per-band contrast-stretch LUTs from collected histogram
     rows.  Percentiles are over NON-ZERO pixels only (0 = the
     mosaic's NODATA, which must stay 0); cut = lowest bin whose
-    cumulative count reaches ceil(p% of nonzero).  The LUT maps
-    [lo, hi] linearly onto [1, 255] with half-up integer rounding —
-    all-integer, bit-stable.  Returns (luts uint8 [nb,256],
-    [(lo, hi), ...])."""
-    hist = np.zeros((num_bands, 256), np.int64)
-    for r in hist_rows:
-        hist[int(r["band"]), int(r["bin"])] = int(r["cnt"])
+    cumulative count reaches ceil(p% of nonzero), with p taken in
+    whole basis points (round(p * 100)).  The LUT maps [lo, hi]
+    linearly onto [1, 255] with half-up integer rounding — all-integer,
+    bit-stable.  Requires 0 <= p_low < p_high <= 100.  Returns (luts
+    uint8 [nb,256], [(lo, hi), ...])."""
+    if not 0 <= p_low < p_high <= 100:
+        raise ValueError("percentiles must satisfy 0 <= p_low < p_high "
+                         f"<= 100, got p_low={p_low}, p_high={p_high}")
+    hist = _hist_array(hist_rows, num_bands)
     luts = np.zeros((num_bands, 256), np.uint8)
     cuts = []
     vals = np.arange(256, dtype=np.int64)
@@ -583,8 +572,8 @@ def stretch_luts(hist_rows, num_bands: int, p_low: float = 2.0,
             cuts.append((1, 255))
             continue
         cum = np.cumsum(nz)
-        need_lo = -(-total * int(p_low * 100) // 10000)   # ceil, integer
-        need_hi = -(-total * int(p_high * 100) // 10000)
+        need_lo = -(-total * round(p_low * 100) // 10000)   # ceil, integer
+        need_hi = -(-total * round(p_high * 100) // 10000)
         lo = int(np.searchsorted(cum, max(need_lo, 1)) + 1)
         hi = int(np.searchsorted(cum, max(need_hi, 1)) + 1)
         den = max(hi - lo, 1)
@@ -608,35 +597,14 @@ def histogram_stretch(chunks: DataFrame, grid: OutputGrid,
     (nb*256 bytes) rides the mapInPandas closure back over the scan —
     ZERO additional shuffle, no join. The two-pass global-statistic +
     broadcast-apply pattern at its smallest."""
-    import pandas as pd
-
-    nb = grid.num_bands
-    chh, chw = grid.chunk_h, grid.chunk_w
     rows = global_histogram(chunks, grid, chunk_col=chunk_col).collect()
-    luts, cuts = stretch_luts(rows, nb, p_low=p_low, p_high=p_high)
-
-    # keep the input schema, replacing chunk bytes in place
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in chunks.schema.fields
-    ) + ", stretch_lo string, stretch_hi string"
-    lo_s = ",".join(str(lo) for lo, _ in cuts)
-    hi_s = ",".join(str(hi) for _, hi in cuts)
-
-    def _apply(it):
-        for pdf in it:
-            outs = []
-            for buf in pdf[chunk_col]:
-                arr = np.frombuffer(buf, np.uint8).reshape(nb, chh, chw)
-                st = np.stack([luts[b][arr[b]] for b in range(nb)])
-                outs.append(st.tobytes())
-            pdf = pdf.copy()
-            pdf[chunk_col] = outs
-            pdf["stretch_lo"] = lo_s
-            pdf["stretch_hi"] = hi_s
-            yield pdf
-
-    return chunks.mapInPandas(_apply, schema=out_schema)
+    luts, cuts = stretch_luts(rows, grid.num_bands, p_low=p_low,
+                              p_high=p_high)
+    return (_apply_luts(chunks, grid, luts, chunk_col)
+            .withColumn("stretch_lo",
+                        F.lit(",".join(str(lo) for lo, _ in cuts)))
+            .withColumn("stretch_hi",
+                        F.lit(",".join(str(hi) for _, hi in cuts))))
 
 
 def expand_neighbor_keys(keys: DataFrame, grid: OutputGrid,
@@ -753,66 +721,26 @@ def contour_segments(chunks: DataFrame, grid: OutputGrid,
     so every 2x2 cell sees its right/bottom neighbors; per chunk the
     kernel is vectorized numpy over the case table; output is the
     segment set, grouped nowhere (downstream polygonization is a
-    CC-style stitch, the q136 machinery)."""
+    CC-style stitch, the q136 machinery).  The band is cut out on the
+    JVM (a binary substring), so the exchange ships one band."""
     import pandas as pd
 
     nb, chh, chw = grid.num_bands, grid.chunk_h, grid.chunk_w
     if not (0 <= band < nb):
         raise ValueError(f"band must be in [0, {nb})")
-
-    src = chunks.select("time_idx", "row_idx", "col_idx",
-                        F.col(chunk_col).alias("chunk"))
-
-    def _emit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for t in pdf.itertuples(index=False):
-                ti, ri, ci = int(t.time_idx), int(t.row_idx), int(t.col_idx)
-                arr = np.frombuffer(t.chunk, np.uint8).reshape(
-                    nb, chh, chw)[band]
-                rows.append((ti, ri, ci, 0, 0, arr.tobytes()))
-                for dy in (-1, 0, 1):
-                    for dx in (-1, 0, 1):
-                        if dy == 0 and dx == 0:
-                            continue
-                        nr, nc = ri + dy, ci + dx
-                        if not (0 <= nr < grid.chunk_rows
-                                and 0 <= nc < grid.chunk_cols):
-                            continue
-                        ys = (slice(chh - 1, chh) if dy == 1 else
-                              slice(0, 1) if dy == -1 else slice(0, chh))
-                        xs = (slice(chw - 1, chw) if dx == 1 else
-                              slice(0, 1) if dx == -1 else slice(0, chw))
-                        strip = np.ascontiguousarray(arr[ys, xs])
-                        rows.append((ti, nr, nc, -dy, -dx, strip.tobytes()))
-            yield pd.DataFrame(rows, columns=[
-                "time_idx", "row_idx", "col_idx", "sy", "sx", "part"])
-
-    parts = src.mapInPandas(_emit, schema="time_idx int, row_idx int, "
-                            "col_idx int, sy int, sx int, part binary")
+    src = chunks.select(*_KEYS, F.substring(
+        chunk_col, band * chh * chw + 1, chh * chw).alias("chunk"))
+    cols = ["time_idx", "x1q", "y1q", "x2q", "y2q"]
 
     def _cells(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not ((pdf["sy"] == 0) & (pdf["sx"] == 0)).any():
-            return pd.DataFrame(columns=["time_idx", "x1q", "y1q",
-                                         "x2q", "y2q"])
-        pad = np.zeros((chh + 2, chw + 2), np.uint8)
-        for t in pdf.itertuples(index=False):
-            sy, sx = int(t.sy), int(t.sx)
-            ph = 1 if sy != 0 else chh
-            pw = 1 if sx != 0 else chw
-            arr = np.frombuffer(t.part, np.uint8).reshape(ph, pw)
-            py = 0 if sy == -1 else 1 if sy == 0 else 1 + chh
-            px = 0 if sx == -1 else 1 if sx == 0 else 1 + chw
-            pad[py:py + ph, px:px + pw] = arr
-        ri = int(pdf["row_idx"].iloc[0])
-        ci = int(pdf["col_idx"].iloc[0])
-        segs = _ms_segments_np(pad, level, ci * chw, ri * chh, chh, chw)
-        ti = int(pdf["time_idx"].iloc[0])
-        return pd.DataFrame(
-            [(ti, *s) for s in segs],
-            columns=["time_idx", "x1q", "y1q", "x2q", "y2q"])
+        pad = _halo_canvas(pdf, grid, 1, 1)
+        if pad is None:
+            return pd.DataFrame(columns=cols)
+        ti, ri, ci = (int(pdf[k].iloc[0]) for k in _KEYS)
+        segs = _ms_segments_np(pad[0], level, ci * chw, ri * chh, chh, chw)
+        return pd.DataFrame([(ti, *sg) for sg in segs], columns=cols)
 
-    return parts.groupBy("time_idx", "row_idx", "col_idx").applyInPandas(
+    return _halo_parts(src, grid, 1, 1).groupBy(*_KEYS).applyInPandas(
         _cells, schema=_SEG_SCHEMA)
 
 
@@ -883,12 +811,8 @@ def match_luts(src_rows, ref_rows, num_bands: int) -> np.ndarray:
     CDF-inverse map with the division cross-multiplied away, so the
     LUT is a pure integer function of the two histograms (no float,
     no ties)."""
-    hs = np.zeros((num_bands, 256), np.int64)
-    hr = np.zeros((num_bands, 256), np.int64)
-    for r in src_rows:
-        hs[r["band"], r["bin"]] = r["cnt"]
-    for r in ref_rows:
-        hr[r["band"], r["bin"]] = r["cnt"]
+    hs = _hist_array(src_rows, num_bands)
+    hr = _hist_array(ref_rows, num_bands)
     luts = np.zeros((num_bands, 256), np.uint8)
     for b in range(num_bands):
         cs, cr = hs[b].cumsum(), hr[b].cumsum()
@@ -917,32 +841,12 @@ def histogram_match(chunks_src: DataFrame, chunks_ref: DataFrame,
     closure back over the source scan — zero joins, zero extra
     shuffles, and the source is scanned exactly twice (histogram +
     apply)."""
-    import pandas as pd
-
-    nb = grid.num_bands
-    chh, chw = grid.chunk_h, grid.chunk_w
     src_rows = global_histogram(chunks_src, grid,
                                 chunk_col=chunk_col).collect()
     ref_rows = global_histogram(chunks_ref, grid,
                                 chunk_col=chunk_col).collect()
-    luts = match_luts(src_rows, ref_rows, nb)
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in chunks_src.schema.fields)
-
-    def _apply(it):
-        for pdf in it:
-            outs = []
-            for buf in pdf[chunk_col]:
-                arr = np.frombuffer(buf, np.uint8).reshape(nb, chh, chw)
-                outs.append(np.stack([luts[b][arr[b]]
-                                      for b in range(nb)]).tobytes())
-            pdf = pdf.copy()
-            pdf[chunk_col] = outs
-            yield pdf
-
-    return chunks_src.mapInPandas(_apply, schema=out_schema)
+    luts = match_luts(src_rows, ref_rows, grid.num_bands)
+    return _apply_luts(chunks_src, grid, luts, chunk_col)
 
 
 # ------------------------------------------------------------------ #
@@ -958,9 +862,7 @@ def otsu_thresholds(hist_rows, num_bands: int) -> list[int]:
     far past 2^63 at corpus scale), driver-side on the bounded 256-row
     histogram, so the result is exact and engine-independent.  Ties
     take the SMALLEST t.  Foreground = pixels > t."""
-    h = np.zeros((num_bands, 256), np.int64)
-    for r in hist_rows:
-        h[r["band"], r["bin"]] = r["cnt"]
+    h = _hist_array(hist_rows, num_bands)
     out = []
     for b in range(num_bands):
         hb = [int(v) for v in h[b]]
@@ -992,30 +894,9 @@ def otsu_mask(chunks: DataFrame, grid: OutputGrid,
     one bounded nb*256 histogram pass, exact integer argmax on the
     driver, then the 2*nb-byte threshold vector rides the mapInPandas
     closure back over the scan."""
-    import pandas as pd
-
-    nb = grid.num_bands
-    chh, chw = grid.chunk_h, grid.chunk_w
     rows = global_histogram(chunks, grid, chunk_col=chunk_col).collect()
-    ths = otsu_thresholds(rows, nb)
-    th_arr = np.array(ths, np.uint8).reshape(nb, 1, 1)
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in chunks.schema.fields)
-
-    def _apply(it):
-        for pdf in it:
-            outs = []
-            for buf in pdf[chunk_col]:
-                arr = np.frombuffer(buf, np.uint8).reshape(nb, chh, chw)
-                outs.append(((arr > th_arr).astype(np.uint8) * 255)
-                            .tobytes())
-            pdf = pdf.copy()
-            pdf[chunk_col] = outs
-            yield pdf
-
-    return chunks.mapInPandas(_apply, schema=out_schema), ths
+    ths = otsu_thresholds(rows, grid.num_bands)
+    return apply_thresholds(chunks, grid, ths, chunk_col=chunk_col), ths
 
 
 # ------------------------------------------------------------------ #
@@ -1070,55 +951,23 @@ def basin_labels(d8_chunks: DataFrame, grid: OutputGrid,
     one lazy plan, no checkpoint.  32-bit labels cap the raster at
     2^32 cells; a 100 TB DEM widens the state to 8 label bands, same
     kernel."""
-    import pandas as pd
-
-    nb, chh, chw = grid.num_bands, grid.chunk_h, grid.chunk_w
+    chh, chw = grid.chunk_h, grid.chunk_w
     wtot = grid.chunk_cols * chw
+    rr, cc = np.mgrid[0:chh, 0:chw]
 
-    def _pack(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for t in pdf.itertuples(index=False):
-                d = np.frombuffer(getattr(t, chunk_col), np.uint8) \
-                    .reshape(nb, chh, chw)[band]
-                oy = int(t.row_idx) * chh
-                ox = int(t.col_idx) * chw
-                rr, cc = np.mgrid[0:chh, 0:chw]
-                lab = ((oy + rr).astype(np.uint32) * wtot
-                       + (ox + cc) + 1)
-                state = np.stack([d,
-                                  (lab >> 24) & 255, (lab >> 16) & 255,
-                                  (lab >> 8) & 255, lab & 255]) \
-                    .astype(np.uint8)
-                rows.append((int(t.time_idx), int(t.row_idx),
-                             int(t.col_idx), state.tobytes(), 1))
-            yield pd.DataFrame(rows, columns=[
-                "time_idx", "row_idx", "col_idx", "chunk", "n_parts"])
+    def _pack(d8, ri, ci):
+        lab = (ri * chh + rr).astype(np.uint32) * wtot + (ci * chw + cc) + 1
+        return np.stack([d8[band], (lab >> 24) & 255, (lab >> 16) & 255,
+                         (lab >> 8) & 255, lab & 255]).astype(np.uint8)
 
     tcol = (F.col("time_idx") if "time_idx" in d8_chunks.columns
             else F.lit(0)).cast("int").alias("time_idx")
-    src = d8_chunks.select(tcol, "row_idx", "col_idx", chunk_col)
-    state = src.mapInPandas(_pack, schema=_OUT_SCHEMA)
-    kernel = _basin_kernel()
-    for _ in range(iters):
-        state = _halo_pass(state, n_rows=grid.chunk_rows,
-                           n_cols=grid.chunk_cols, nbands=5,
-                           chh=chh, chw=chw, r=1, kernel=kernel)
-
-    def _strip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for t in pdf.itertuples(index=False):
-                s = np.frombuffer(t.chunk, np.uint8).reshape(
-                    5, chh, chw)
-                rows.append((int(t.time_idx), int(t.row_idx),
-                             int(t.col_idx),
-                             np.ascontiguousarray(s[1:]).tobytes(),
-                             int(t.n_parts)))
-            yield pd.DataFrame(rows, columns=[
-                "time_idx", "row_idx", "col_idx", "chunk", "n_parts"])
-
-    return state.mapInPandas(_strip, schema=_OUT_SCHEMA)
+    src = d8_chunks.select(tcol, "row_idx", "col_idx",
+                           F.col(chunk_col).alias("chunk"),
+                           F.lit(1).alias("n_parts"))
+    state = _map_pixels(src, grid, grid.num_bands, _pack)
+    state = _iterate(state, grid, 5, _basin_kernel(), iters)
+    return _map_pixels(state, grid, 5, lambda s, ri, ci: s[1:])
 
 
 def basins_oracle_np(d8_plane: np.ndarray,
@@ -1239,28 +1088,10 @@ def apply_thresholds(chunks: DataFrame, grid: OutputGrid,
     pixel > t, mask uint8 0/255) — the apply half of otsu_mask,
     reusable when the thresholds come from a maintained histogram
     table instead of a fresh corpus pass."""
-    import pandas as pd
-
-    nb = grid.num_bands
-    chh, chw = grid.chunk_h, grid.chunk_w
-    th_arr = np.array(list(thresholds), np.uint8).reshape(nb, 1, 1)
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in chunks.schema.fields)
-
-    def _apply(it):
-        for pdf in it:
-            outs = []
-            for buf in pdf[chunk_col]:
-                arr = np.frombuffer(buf, np.uint8).reshape(nb, chh, chw)
-                outs.append(((arr > th_arr).astype(np.uint8) * 255)
-                            .tobytes())
-            pdf = pdf.copy()
-            pdf[chunk_col] = outs
-            yield pdf
-
-    return chunks.mapInPandas(_apply, schema=out_schema)
+    th = np.array(list(thresholds), np.uint8).reshape(grid.num_bands, 1, 1)
+    return _map_pixels(chunks, grid, grid.num_bands,
+                       lambda a, ri, ci: (a > th).astype(np.uint8) * 255,
+                       chunk_col)
 
 
 # ------------------------------------------------------------------ #
@@ -1441,13 +1272,9 @@ def orientation_histogram(chunks: DataFrame, grid: OutputGrid,
                     nb, chh, chw)[band]
                 pad = np.zeros((1, chh + 2, chw + 2), np.uint8)
                 pad[0, 1:-1, 1:-1] = arr
-                p = pad.astype(np.int32)
-                tl, tc, tr = p[:, :-2, :-2], p[:, :-2, 1:-1], p[:, :-2, 2:]
-                ml, mr = p[:, 1:-1, :-2], p[:, 1:-1, 2:]
-                bl, bc, br = p[:, 2:, :-2], p[:, 2:, 1:-1], p[:, 2:, 2:]
-                gx = ((tr + 2 * mr + br) - (tl + 2 * ml + bl))[0]
+                gx, gy = _sobel_xy(pad)
                 # y-up: row index grows downward, so negate
-                gy = -((bl + 2 * bc + br) - (tl + 2 * tc + tr))[0]
+                gx, gy = gx[0], -gy[0]
                 live = (gx != 0) | (gy != 0)
                 o = _octant(gx, gy)[live]
                 h = np.bincount(o, minlength=8)

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # the directory holding this package (a checkout, site-packages or a
@@ -77,4 +78,10 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
+    # pyspark keeps the gateway of a JVM that has exited (a stopped
+    # session whose gateway was shut down); dropping it lets
+    # getOrCreate launch a fresh JVM instead of refusing to connect
+    gw = SparkContext._gateway
+    if getattr(gw, "proc", None) is not None and gw.proc.poll() is not None:
+        SparkContext._gateway = SparkContext._jvm = None
     return session_builder(app_name, extra_conf).master(master).getOrCreate()

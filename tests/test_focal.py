@@ -8,8 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from aef_mosaic_spark.grid import OutputGrid
-from aef_mosaic_spark.operators.focal import (FOCAL_OPS, focal_chunks,
-                                              focal_oracle_np)
+from aef_mosaic_spark.operators.focal import (FIXED_3X3_OPS, FOCAL_OPS,
+                                              focal_chunks, focal_oracle_np)
 
 CHH = CHW = 32
 NB = 2
@@ -104,6 +104,16 @@ def test_validation_errors(spark, grid):
         focal_chunks(sdf, grid, op="mode")
     with pytest.raises(ValueError, match="radius must be 1"):
         focal_chunks(sdf, grid, op="grad", radius=2)
+
+
+@pytest.mark.parametrize("op", FIXED_3X3_OPS)
+def test_fixed_3x3_ops_refuse_larger_radius(spark, grid, op):
+    """Every fixed 3x3 kernel refuses r=2 (d8 at r=2 would emit
+    (nb, chh+2, chw+2) chunks)."""
+    rows, _ = _make_chunks(sparse=False)
+    sdf = spark.createDataFrame(pd.DataFrame(rows))
+    with pytest.raises(ValueError, match="radius must be 1"):
+        focal_chunks(sdf, grid, op=op, radius=2)
 
 
 def test_halo_shuffle_bytes_fraction():
@@ -220,6 +230,30 @@ def test_global_histogram_and_stretch(spark, grid):
         assert (np.diff(luts[b][1:].astype(int)) >= 0).all()
         lo, hi = cuts[b]
         assert luts[b][lo] == 1 and luts[b][hi] == 255
+
+
+def test_stretch_luts_whole_basis_points():
+    """p is taken as round(p * 100) basis points: 2.3% is 230, not
+    the 229 that int(2.3 * 100) truncates to.  10,000 nonzero pixels
+    whose cumulative count is 229 at bin 1 and 230 at bin 2 put the
+    low cut on bin 2."""
+    from aef_mosaic_spark.operators.focal import stretch_luts
+    rows = [{"band": 0, "bin": 1, "cnt": 229},
+            {"band": 0, "bin": 2, "cnt": 1},
+            {"band": 0, "bin": 200, "cnt": 10000 - 230}]
+    assert int(2.3 * 100) == 229
+    _, cuts = stretch_luts(rows, 1, p_low=2.3, p_high=98.0)
+    assert cuts[0][0] == 2
+    _, cuts = stretch_luts(rows, 1, p_low=2.29, p_high=98.0)
+    assert cuts[0][0] == 1
+
+
+@pytest.mark.parametrize("p_low,p_high", [(-1.0, 98.0), (2.0, 100.5),
+                                          (50.0, 50.0), (60.0, 40.0)])
+def test_stretch_luts_rejects_bad_percentiles(p_low, p_high):
+    from aef_mosaic_spark.operators.focal import stretch_luts
+    with pytest.raises(ValueError, match="p_low < p_high"):
+        stretch_luts([], NB, p_low=p_low, p_high=p_high)
 
 
 def test_terrain_ops_analytic():
@@ -447,6 +481,22 @@ def test_contour_segments_match_stitched_golden(spark, grid):
            for r in contour_segments(sdf, grid, level=128,
                                      band=0).collect()}
     assert got == want and got
+
+
+def test_contour_segments_last_band(spark, grid):
+    """The band cut out before the halo exchange is the one asked
+    for: band NB-1 matches the golden run on that band of the
+    stitched raster, and differs from band 0's contours."""
+    from aef_mosaic_spark.operators.focal import (contour_oracle_np,
+                                                  contour_segments)
+    rows, canvas = _make_chunks(sparse=False)
+    sdf = spark.createDataFrame(pd.DataFrame(rows))
+    want = contour_oracle_np(canvas[NB - 1], level=128)
+    got = {(r.x1q, r.y1q, r.x2q, r.y2q)
+           for r in contour_segments(sdf, grid, level=128,
+                                     band=NB - 1).collect()}
+    assert got == want and got
+    assert want != contour_oracle_np(canvas[0], level=128)
 
 
 def test_contour_square_analytic():
