@@ -705,6 +705,14 @@ def _ms_segments_np(pad: np.ndarray, level: int, gx0: int, gy0: int,
     return segs
 
 
+def _check_band(band: int, grid: OutputGrid) -> None:
+    """Refuse a band the grid does not have while the plan is built; it
+    would otherwise fail in a worker, as an IndexError at collect()."""
+    if not 0 <= band < grid.num_bands:
+        raise ValueError(f"band {band} is not in [0, {grid.num_bands}) "
+                         f"(num_bands={grid.num_bands})")
+
+
 def contour_segments(chunks: DataFrame, grid: OutputGrid,
                      level: int = CONTOUR_LEVEL, band: int = 0,
                      chunk_col: str = "chunk") -> DataFrame:
@@ -725,9 +733,8 @@ def contour_segments(chunks: DataFrame, grid: OutputGrid,
     JVM (a binary substring), so the exchange ships one band."""
     import pandas as pd
 
+    _check_band(band, grid)
     nb, chh, chw = grid.num_bands, grid.chunk_h, grid.chunk_w
-    if not (0 <= band < nb):
-        raise ValueError(f"band must be in [0, {nb})")
     src = chunks.select(*_KEYS, F.substring(
         chunk_col, band * chh * chw + 1, chh * chw).alias("chunk"))
     cols = ["time_idx", "x1q", "y1q", "x2q", "y2q"]
@@ -951,6 +958,7 @@ def basin_labels(d8_chunks: DataFrame, grid: OutputGrid,
     one lazy plan, no checkpoint.  32-bit labels cap the raster at
     2^32 cells; a 100 TB DEM widens the state to 8 label bands, same
     kernel."""
+    _check_band(band, grid)
     chh, chw = grid.chunk_h, grid.chunk_w
     wtot = grid.chunk_cols * chw
     rr, cc = np.mgrid[0:chh, 0:chw]
@@ -1010,6 +1018,7 @@ def mask_confusion(chunks_a: DataFrame, chunks_b: DataFrame,
     a global matrix is one further tiny agg."""
     import pandas as pd
 
+    _check_band(band, grid)
     nb, chh, chw = grid.num_bands, grid.chunk_h, grid.chunk_w
     a = chunks_a.select(F.col("row_idx"), F.col("col_idx"),
                         F.col(chunk_col).alias("_ca"))
@@ -1183,6 +1192,7 @@ def raster_correlation(chunks_a: DataFrame, chunks_b: DataFrame,
     mapInPandas emitting the 5 integer sums, arithmetic JVM-side."""
     import pandas as pd
 
+    _check_band(band, grid)
     nb, chh, chw = grid.num_bands, grid.chunk_h, grid.chunk_w
     a = chunks_a.select(F.col("row_idx"), F.col("col_idx"),
                         F.col(chunk_col).alias("_ca"))
@@ -1245,6 +1255,7 @@ def orientation_histogram(chunks: DataFrame, grid: OutputGrid,
     descriptor, no halo — boundary convention documented)."""
     import pandas as pd
 
+    _check_band(band, grid)
     nb, chh, chw = grid.num_bands, grid.chunk_h, grid.chunk_w
 
     def _octant(gx, gy):

@@ -5,13 +5,27 @@ bounded channels, /root/reference/src/main.rs:92-108). Our analog is
 Spark conf: AQE (runtime re-plan + skew-join splitting), Arrow-batched
 Python exchange (all heavy kernels are pandas/Arrow UDFs, never
 per-row Python), and shuffle-partition sizing.
+
+The reference is one long-running binary; every run here starts a
+JVM, and class loading is most of that start. A driver JVM that
+get_spark launches maps a dynamic AppCDS archive of Spark's classes
+(JDK 17 class-data sharing): the first session that finds none
+records one as its JVM exits, and every later one maps it (README,
+"Time to first result").
 """
 
 from __future__ import annotations
 
+import atexit
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import warnings
 
 from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # the directory holding this package (a checkout, site-packages or a
@@ -19,10 +33,11 @@ from pyspark.sql import SparkSession
 # imports whatever the workers' cwd
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Defaults chosen for the sandbox (local[32], 128 GiB). On a real
-# cluster the same conf names apply; shuffle partitions should be
-# ~2-3x total cores and maxPartitionBytes left at 128 MiB so a 100 TB
-# scan yields ~800k input splits (fine for a 1000-executor cluster).
+# Defaults sized for one node (local[k]); spark.driver.memory follows
+# $SPARK_GRAFT_DRIVER_MEM. On a real cluster the same conf names apply;
+# shuffle partitions should be ~2-3x total cores and maxPartitionBytes
+# left at 128 MiB so a 100 TB scan yields ~800k input splits (fine for
+# a 1000-executor cluster).
 _DEFAULT_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -63,6 +78,142 @@ def session_builder(app_name: str = "aef-mosaic-spark",
     return builder
 
 
+# ------------------------------------------------ class-data sharing
+# a JVM still running when its process exits gets this long to stop
+# (a recording mosaic session's stop, with its dump, measured ~11 s)
+_JVM_EXIT_WAIT_S = 120
+# env vars and conf that put more than the conf dir and Spark's jars on
+# the driver's class path: a non-empty directory there stops the dump
+_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
+                  "SPARK_PREPEND_CLASSES")
+# (driver JVM this process launched, its archive recording or None)
+_launched: tuple[subprocess.Popen, str | None] | None = None
+
+
+def _cds_root() -> str:
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    return os.path.join(cache, "aef_mosaic_spark", "cds")
+
+
+def _heap_bytes(size: str) -> int:
+    """spark.driver.memory as bytes (a bare number is MiB, as in Spark)."""
+    size = size.strip().lower().rstrip("b")
+    scale = {"k": 1, "m": 2, "g": 3, "t": 4}
+    if size and size[-1] in scale:
+        return int(float(size[:-1]) * 1024 ** scale[size[-1]])
+    return int(float(size)) * 1024 ** 2
+
+
+def _cds_key(jdk: str, spark_home: str, heap: str) -> str:
+    """The JDK, Spark's jar set (names, sizes, mtimes) and the
+    compressed-oops class of the heap: an archive maps only where all
+    three match the JVM that recorded it."""
+    parts = [jdk, _heap_bytes(heap) < 32 * 1024 ** 3]
+    for f in [os.path.join(jdk, "lib", "modules"), os.path.join(jdk, "lib", "server", "libjvm.so"),
+              *sorted(glob.glob(os.path.join(spark_home, "jars", "*")))]:
+        st = os.stat(f)
+        parts.append((os.path.basename(f), st.st_size, st.st_mtime_ns))
+    return hashlib.sha256(repr(parts).encode()).hexdigest()[:16]
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _cds_launch(conf: dict[str, str]) -> tuple[str, str, str | None] | None:
+    """(java option, conf dir, recording path or None) for a driver JVM
+    about to launch with ``conf``, or None to launch it unchanged.
+
+    JDK 17 refuses to dump with a non-empty directory on the class path
+    and maps an archive only under the class path it was dumped with, so
+    a conf dir holding nothing but ``*.template`` files (what Spark
+    ships) is swapped for an empty one at a fixed path; a conf dir with
+    a real file, or any other class-path entry, turns the archive off.
+    """
+    spark_home = _find_spark_home()
+    # the java Spark's launcher runs: $JAVA_HOME's, else the one on PATH
+    java = (os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+            if os.environ.get("JAVA_HOME") else shutil.which("java"))
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    names = os.listdir(conf_dir) if os.path.isdir(conf_dir) else []
+    if (java is None or any(not n.endswith(".template") for n in names)
+            or any(os.environ.get(v) for v in _CLASSPATH_ENV)
+            or conf.get("spark.driver.extraClassPath")):
+        return None
+    root = _cds_root()
+    if any(c.isspace() for c in root):  # the option string is split on blanks
+        return None
+    empty = os.path.join(root, "conf")
+    jdk = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    try:
+        os.makedirs(empty, exist_ok=True)
+        if os.listdir(empty):
+            return None
+        key = _cds_key(jdk, spark_home, conf["spark.driver.memory"])
+    except OSError:  # no writable cache dir, or a JDK laid out otherwise
+        return None
+    archive = os.path.join(root, f"{key}.jsa")
+    if os.path.isfile(archive):
+        return f"-XX:SharedArchiveFile={archive}", empty, None
+    # a recording whose process is gone was never promoted: drop it
+    for tmp in glob.glob(os.path.join(root, "*.*.tmp")):
+        pid = tmp.rsplit(".", 2)[-2]
+        if not pid.isdigit() or not _pid_alive(int(pid)):
+            try:
+                os.remove(tmp)
+            except OSError:
+                pass
+    tmp = os.path.join(root, f"{key}.{os.getpid()}.tmp")
+    # the dump's ~500 per-class warnings (signed jars, old class files)
+    # would go to stdout
+    return f"-XX:ArchiveClassesAtExit={tmp} -Xlog:cds=error", empty, tmp
+
+
+def _settle_jvm() -> None:
+    """Let the driver JVM this process launched finish. One still
+    running is stopped (context, gateway, EOF on its stdin) and waited
+    for, at most _JVM_EXIT_WAIT_S, so none outlives us. Its recording
+    becomes the archive only if it exited with status 0 (an archive
+    cut short crashes every JVM that maps it); else it is deleted."""
+    global _launched
+    if _launched is None:
+        return
+    (proc, tmp), _launched = _launched, None
+    if proc.poll() is None:
+        sc, gw = SparkContext._active_spark_context, SparkContext._gateway
+        try:
+            if sc is not None:
+                sc.stop()
+            if gw is not None and gw.proc is proc:
+                gw.shutdown()
+        except Exception as e:  # at exit: the JVM still stops at EOF below
+            warnings.warn(f"stopping the Spark session at exit failed: {e!r}")
+        proc.stdin.close()  # the gateway exits at EOF on its stdin
+        try:
+            proc.wait(_JVM_EXIT_WAIT_S)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+    if tmp is None:
+        return
+    try:
+        if proc.returncode == 0 and os.path.isfile(tmp):
+            os.replace(tmp, tmp.rsplit(".", 2)[0] + ".jsa")
+        else:
+            os.remove(tmp)
+    except OSError:
+        pass
+
+
+atexit.register(_settle_jvm)
+
+
 def get_spark(
     app_name: str = "aef-mosaic-spark",
     master: str | None = None,
@@ -73,8 +224,10 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
     ``local[*]``) so the same entry point runs at two parallelism
     levels (local[8] vs local[32]) for the scaling-efficiency
-    protocol in BASELINE.md.
+    protocol in BASELINE.md. A JVM launched here maps the class-data
+    archive (module docstring), or records it if there is none yet.
     """
+    global _launched
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
@@ -84,4 +237,30 @@ def get_spark(
     gw = SparkContext._gateway
     if getattr(gw, "proc", None) is not None and gw.proc.poll() is not None:
         SparkContext._gateway = SparkContext._jvm = None
-    return session_builder(app_name, extra_conf).master(master).getOrCreate()
+        _settle_jvm()
+    builder = session_builder(app_name, extra_conf).master(master)
+    # a driver JVM is launched here only without a live gateway and
+    # outside spark-submit (whose driver is already running)
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return builder.getOrCreate()
+    conf = {**_DEFAULT_CONF, **(extra_conf or {})}
+    cds = _cds_launch(conf)
+    if cds is None:
+        spark = builder.getOrCreate()
+    else:
+        option, conf_dir, _ = cds
+        # Spark puts defaultJavaOptions before a caller's extraJavaOptions
+        own = conf.get("spark.driver.defaultJavaOptions")
+        builder = builder.config("spark.driver.defaultJavaOptions",
+                                 f"{option} {own}" if own else option)
+        saved = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = conf_dir
+        try:
+            spark = builder.getOrCreate()
+        finally:
+            if saved is None:
+                del os.environ["SPARK_CONF_DIR"]
+            else:
+                os.environ["SPARK_CONF_DIR"] = saved
+    _launched = (SparkContext._gateway.proc, cds and cds[2])
+    return spark

@@ -116,6 +116,22 @@ def test_fixed_3x3_ops_refuse_larger_radius(spark, grid, op):
         focal_chunks(sdf, grid, op=op, radius=2)
 
 
+@pytest.mark.parametrize("band", [-1, NB])
+@pytest.mark.parametrize("op", ["basin_labels", "orientation_histogram",
+                                "mask_confusion", "raster_correlation"])
+def test_band_out_of_range_refused_at_plan_time(spark, grid, op, band):
+    """A band the grid does not have is refused while the plan is
+    built, naming the band and num_bands, not later in a worker."""
+    from aef_mosaic_spark.operators import focal
+
+    rows, _ = _make_chunks(sparse=False)
+    sdf = spark.createDataFrame(pd.DataFrame(rows))
+    fn = getattr(focal, op)
+    args = (sdf, sdf, grid) if op in ("mask_confusion", "raster_correlation") else (sdf, grid)
+    with pytest.raises(ValueError, match=rf"band {band} .*num_bands={NB}"):
+        fn(*args, band=band)
+
+
 def test_halo_shuffle_bytes_fraction():
     """The halo plan ships a small fraction of a 9x-replicate plan's
     bytes through the shuffle (the whole point): center once + r-wide
