@@ -22,6 +22,7 @@ import hashlib
 import os
 import shutil
 import subprocess
+import time
 import warnings
 
 from pyspark import SparkContext
@@ -79,19 +80,24 @@ def session_builder(app_name: str = "aef-mosaic-spark",
 
 
 # ------------------------------------------------ class-data sharing
-# a JVM still running when its process exits gets this long to stop
-# (a recording mosaic session's stop, with its dump, measured ~11 s)
+# a recording JVM still running when its process exits gets this long
+# to stop (a recording mosaic session's stop, with its dump, measured ~11 s)
 _JVM_EXIT_WAIT_S = 120
+# an archive no session has mapped for this long (one for an older JDK,
+# Spark or heap class) is deleted when a new one is promoted
+_CDS_UNUSED_S = 30 * 86400
 # env vars and conf that put more than the conf dir and Spark's jars on
 # the driver's class path: a non-empty directory there stops the dump
 _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
                   "SPARK_PREPEND_CLASSES")
-# (driver JVM this process launched, its archive recording or None)
-_launched: tuple[subprocess.Popen, str | None] | None = None
+# (recording driver JVM this process launched, its recording path)
+_recording: tuple[subprocess.Popen, str] | None = None
 
 
 def _cds_root() -> str:
-    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    """$XDG_CACHE_HOME, else ``.cache`` next to the package (in a
+    checkout, the checkout's own directory), then aef_mosaic_spark/cds."""
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.join(_PACKAGE_PARENT, ".cache")
     return os.path.join(cache, "aef_mosaic_spark", "cds")
 
 
@@ -126,9 +132,18 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
-def _cds_launch(conf: dict[str, str]) -> tuple[str, str, str | None] | None:
-    """(java option, conf dir, recording path or None) for a driver JVM
-    about to launch with ``conf``, or None to launch it unchanged.
+def _fsync(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def _cds_launch(conf: dict[str, str]) -> tuple[str, str, str, str | None] | None:
+    """(java option, conf dir, archive, recording path or None) for a
+    driver JVM about to launch with ``conf``, or None to launch it
+    unchanged.
 
     JDK 17 refuses to dump with a non-empty directory on the class path
     and maps an archive only under the class path it was dumped with, so
@@ -156,11 +171,18 @@ def _cds_launch(conf: dict[str, str]) -> tuple[str, str, str | None] | None:
         if os.listdir(empty):
             return None
         key = _cds_key(jdk, spark_home, conf["spark.driver.memory"])
+        archive = os.path.join(root, f"{key}.jsa")
+        # an empty file (the JVM would warn and run without it) is
+        # recorded over
+        mapped = os.path.isfile(archive) and os.path.getsize(archive) > 0
     except OSError:  # no writable cache dir, or a JDK laid out otherwise
         return None
-    archive = os.path.join(root, f"{key}.jsa")
-    if os.path.isfile(archive):
-        return f"-XX:SharedArchiveFile={archive}", empty, None
+    if mapped:
+        try:
+            os.utime(archive)  # mapped now: kept by _settle_jvm's pruning
+        except OSError:  # another user's archive
+            pass
+        return f"-XX:SharedArchiveFile={archive}", empty, archive, None
     # a recording whose process is gone was never promoted: drop it
     for tmp in glob.glob(os.path.join(root, "*.*.tmp")):
         pid = tmp.rsplit(".", 2)[-2]
@@ -172,19 +194,20 @@ def _cds_launch(conf: dict[str, str]) -> tuple[str, str, str | None] | None:
     tmp = os.path.join(root, f"{key}.{os.getpid()}.tmp")
     # the dump's ~500 per-class warnings (signed jars, old class files)
     # would go to stdout
-    return f"-XX:ArchiveClassesAtExit={tmp} -Xlog:cds=error", empty, tmp
+    return f"-XX:ArchiveClassesAtExit={tmp} -Xlog:cds=error", empty, archive, tmp
 
 
 def _settle_jvm() -> None:
-    """Let the driver JVM this process launched finish. One still
-    running is stopped (context, gateway, EOF on its stdin) and waited
-    for, at most _JVM_EXIT_WAIT_S, so none outlives us. Its recording
-    becomes the archive only if it exited with status 0 (an archive
-    cut short crashes every JVM that maps it); else it is deleted."""
-    global _launched
-    if _launched is None:
+    """Let the recording driver JVM this process launched finish. One
+    still running is stopped (context, gateway, EOF on its stdin) and
+    waited for, at most _JVM_EXIT_WAIT_S, so none outlives us. Its
+    recording becomes the archive only if it exited with status 0 (an
+    archive cut short crashes every JVM that maps it), and only once it
+    is on disk; else it is deleted."""
+    global _recording
+    if _recording is None:
         return
-    (proc, tmp), _launched = _launched, None
+    (proc, tmp), _recording = _recording, None
     if proc.poll() is None:
         sc, gw = SparkContext._active_spark_context, SparkContext._gateway
         try:
@@ -200,18 +223,42 @@ def _settle_jvm() -> None:
         except subprocess.TimeoutExpired:
             proc.kill()
             proc.wait()
-    if tmp is None:
-        return
+    root, archive = os.path.dirname(tmp), tmp.rsplit(".", 2)[0] + ".jsa"
     try:
-        if proc.returncode == 0 and os.path.isfile(tmp):
-            os.replace(tmp, tmp.rsplit(".", 2)[0] + ".jsa")
-        else:
+        if proc.returncode != 0 or not os.path.isfile(tmp):
             os.remove(tmp)
+            return
+        _fsync(tmp)
+        os.replace(tmp, archive)
+        _fsync(root)
+        for old in glob.glob(os.path.join(root, "*.jsa")):
+            if old != archive and os.path.getmtime(old) < time.time() - _CDS_UNUSED_S:
+                os.remove(old)
     except OSError:
         pass
 
 
 atexit.register(_settle_jvm)
+
+
+def _launch(builder: SparkSession.Builder, conf: dict[str, str],
+            cds: tuple[str, str, str, str | None]) -> SparkSession:
+    """getOrCreate with the archive option put ahead of a caller's own
+    ``spark.driver.defaultJavaOptions`` (which Spark puts before
+    ``extraJavaOptions``) and SPARK_CONF_DIR at the empty conf dir."""
+    option, conf_dir, _, _ = cds
+    own = conf.get("spark.driver.defaultJavaOptions")
+    builder = builder.config("spark.driver.defaultJavaOptions",
+                             f"{option} {own}" if own else option)
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        return builder.getOrCreate()
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
 
 
 def get_spark(
@@ -227,7 +274,7 @@ def get_spark(
     protocol in BASELINE.md. A JVM launched here maps the class-data
     archive (module docstring), or records it if there is none yet.
     """
-    global _launched
+    global _recording
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
@@ -246,21 +293,24 @@ def get_spark(
     conf = {**_DEFAULT_CONF, **(extra_conf or {})}
     cds = _cds_launch(conf)
     if cds is None:
-        spark = builder.getOrCreate()
-    else:
-        option, conf_dir, _ = cds
-        # Spark puts defaultJavaOptions before a caller's extraJavaOptions
-        own = conf.get("spark.driver.defaultJavaOptions")
-        builder = builder.config("spark.driver.defaultJavaOptions",
-                                 f"{option} {own}" if own else option)
-        saved = os.environ.get("SPARK_CONF_DIR")
-        os.environ["SPARK_CONF_DIR"] = conf_dir
+        return builder.getOrCreate()
+    try:
+        spark = _launch(builder, conf, cds)
+    except Exception as e:
+        if cds[3] is not None:
+            raise
+        # an archive the JVM cannot map (one cut short on disk) kills it
+        # at start: drop it and launch once more, recording a new one
+        warnings.warn(f"the driver JVM failed with class-data archive {cds[2]} ({e!r}); "
+                      "deleting it and launching again without it")
         try:
-            spark = builder.getOrCreate()
-        finally:
-            if saved is None:
-                del os.environ["SPARK_CONF_DIR"]
-            else:
-                os.environ["SPARK_CONF_DIR"] = saved
-    _launched = (SparkContext._gateway.proc, cds and cds[2])
+            os.remove(cds[2])
+        except FileNotFoundError:  # another process got there first
+            pass
+        cds = _cds_launch(conf)
+        if cds is None:  # the cache dir changed in between
+            raise
+        spark = _launch(builder, conf, cds)
+    if cds[3] is not None:
+        _recording = (SparkContext._gateway.proc, cds[3])
     return spark

@@ -79,10 +79,13 @@ spark = get_spark(app_name="cds", master="local[1]",
 
 
 def _child(tmp_path, body, conf=None, env=None):
-    full_env = {**os.environ, "XDG_CACHE_HOME": str(tmp_path / "cache"), **(env or {})}
+    path = os.pathsep.join([str(ROOT), *filter(None, [os.environ.get("PYTHONPATH")])])
+    full_env = {**os.environ, "XDG_CACHE_HOME": str(tmp_path / "cache"), "PYTHONPATH": path,
+                **(env or {})}
+    # cwd: where a crashing JVM leaves its hs_err_pid*.log
     out = subprocess.run([sys.executable, "-c", _CHILD + textwrap.dedent(body),
                           json.dumps(conf or {})],
-                         cwd=ROOT, env=full_env, capture_output=True, text=True, timeout=300)
+                         cwd=tmp_path, env=full_env, capture_output=True, text=True, timeout=300)
     assert out.returncode == 0, out.stderr[-2000:]
     line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
     return json.loads(line), out
@@ -186,6 +189,37 @@ def test_cds_killed_or_stale_recording_is_never_mapped(tmp_path):
     assert not _option(info["args"], "SharedArchiveFile")
     assert Path(recording) != stale and not stale.exists()
     assert not _cds_files(tmp_path, "*.jsa") and not _cds_files(tmp_path, "*.tmp")
+
+
+def test_cds_truncated_archive_is_recorded_again(recorded, tmp_path):
+    """An archive cut short (a host crash before the promoted file
+    reached the disk) kills the JVM that maps it; get_spark deletes it,
+    launches once more and records a whole one."""
+    (whole,) = _cds_files(recorded[0], "*.jsa")
+    cds = tmp_path / "cache" / "aef_mosaic_spark" / "cds"
+    cds.mkdir(parents=True)
+    with open(whole, "rb") as f:
+        (cds / whole.name).write_bytes(f.read(whole.stat().st_size // 2))
+    info, out = _child(tmp_path, """
+        assert spark.range(5).count() == 5
+        report(spark)
+    """)
+    assert "deleting it and launching again" in out.stderr
+    (recording,) = _option(info["args"], "ArchiveClassesAtExit")
+    assert not _option(info["args"], "SharedArchiveFile")
+    (archive,) = _cds_files(tmp_path, "*.jsa")
+    assert archive.name == whole.name and archive.stat().st_size > whole.stat().st_size // 2
+    assert not _cds_files(tmp_path, "*.tmp")
+
+
+def test_cds_root_defaults_next_to_package(monkeypatch):
+    """Without XDG_CACHE_HOME the archive lives in .cache beside the
+    package (a checkout's own directory), not under $HOME."""
+    from aef_mosaic_spark import session
+    monkeypatch.delenv("XDG_CACHE_HOME", raising=False)
+    assert session._cds_root() == str(ROOT / ".cache" / "aef_mosaic_spark" / "cds")
+    monkeypatch.setenv("XDG_CACHE_HOME", "/x")
+    assert session._cds_root() == "/x/aef_mosaic_spark/cds"
 
 
 @pytest.mark.parametrize("var", ["SPARK_CONF_DIR", "HADOOP_CONF_DIR"])
