@@ -19,10 +19,15 @@ import time
 class ProgressReporter(threading.Thread):
     """Daemon poller: call start() before the action, stop() after.
 
+    The tracker is sampled every _SAMPLE_S; every `interval_s` (and
+    once more at stop) one line lists the stages active since the last
+    line, so a stage shorter than `interval_s` still shows.
     stage_seconds: {stage_id: approx wall seconds observed active}
-    (poll-resolution bounded — stages shorter than `interval_s` may be
+    (sample-resolution bounded: a stage shorter than _SAMPLE_S may be
     missed entirely; this is a progress surface, not an exact profile).
     """
+
+    _SAMPLE_S = 0.05
 
     def __init__(self, spark, interval_s: float = 10.0, sink=print):
         super().__init__(daemon=True)
@@ -34,9 +39,10 @@ class ProgressReporter(threading.Thread):
 
     def run(self):
         tracker = self.spark.sparkContext.statusTracker()
-        while not self._halt.wait(self.interval_s):
+        active: set[int] = set()  # stages sampled since the last line
+        next_line = time.time() + self.interval_s
+        while not self._halt.wait(min(self._SAMPLE_S, self.interval_s)):
             now = time.time()
-            parts = []
             try:
                 for sid in tracker.getActiveStageIds():
                     info = tracker.getStageInfo(sid)
@@ -45,13 +51,22 @@ class ProgressReporter(threading.Thread):
                     first = self._seen.get(sid, (now, now, 0, 0))[0]
                     self._seen[sid] = (first, now, info.numCompletedTasks,
                                        info.numTasks)
-                    parts.append(
-                        f"stage {sid}: {info.numCompletedTasks}/{info.numTasks}"
-                        f" tasks ({now - first:.0f}s)")
+                    active.add(sid)
             except Exception:
                 continue  # context shutting down mid-poll
-            if parts:
-                self.sink("[progress] " + "; ".join(parts))
+            if now >= next_line:
+                self._line(active)
+                next_line = now + self.interval_s
+        self._line(active)
+
+    def _line(self, active: set[int]) -> None:
+        parts = []
+        for sid in sorted(active):
+            first, last, done, n = self._seen[sid]
+            parts.append(f"stage {sid}: {done}/{n} tasks ({last - first:.0f}s)")
+        if parts:
+            self.sink("[progress] " + "; ".join(parts))
+        active.clear()
 
     def stop(self) -> dict[int, float]:
         self._halt.set()
@@ -60,8 +75,8 @@ class ProgressReporter(threading.Thread):
 
     def stage_seconds(self) -> dict[int, float]:
         """Raw observed span per stage (last sighting - first). A stage
-        seen once reports 0.0; true resolution is ±interval_s per edge
-        — reported as-is rather than inflated to the poll interval,
+        seen once reports 0.0; true resolution is ±_SAMPLE_S per edge
+        — reported as-is rather than inflated to the sample interval,
         which would overstate sub-interval stages and skew the
         stage_pct breakdown (ADVICE r2)."""
         return {sid: round(last - first, 1)

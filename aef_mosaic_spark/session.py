@@ -26,6 +26,7 @@ import time
 import warnings
 
 from pyspark import SparkContext
+from pyspark.errors import PySparkRuntimeError
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
@@ -296,8 +297,8 @@ def get_spark(
         return builder.getOrCreate()
     try:
         spark = _launch(builder, conf, cds)
-    except Exception as e:
-        if cds[3] is not None:
+    except PySparkRuntimeError as e:
+        if cds[3] is not None or e.getCondition() != "JAVA_GATEWAY_EXITED":
             raise
         # an archive the JVM cannot map (one cut short on disk) kills it
         # at start: drop it and launch once more, recording a new one
