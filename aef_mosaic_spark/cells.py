@@ -10,8 +10,10 @@ Encoding: at resolution r (0..30), the world [-180,180]x[-90,90] is
 split into 2^r x 2^r cells. cell_id = (r << 56) | (iy << 28) | ix,
 a bigint. The lon/lat -> (ix, iy) step is pure floor arithmetic, so
 the *same* cell assignment is expressible as a Spark Column expression
-(JVM-side, no UDF) AND as ANSI SQL for the DuckDB oracle — the
-numpy version exists for use inside raster kernels.
+(JVM-side, no UDF) AND as SQL text that both DuckDB (the oracle) and
+Spark parse — the cell joins build their key and covering from the
+SQL text (`cell_id_sql`, `covering_cells_sql`), one `F.expr` each;
+the numpy version exists for use inside raster kernels.
 """
 
 from __future__ import annotations
@@ -45,11 +47,17 @@ def cell_id_col(lon: Column, lat: Column, res: int) -> Column:
             + ix.cast("long"))
 
 
-def cell_id_sql(lon: str, lat: str, res: int) -> str:
-    """The identical assignment as ANSI SQL (DuckDB oracle twin)."""
+def _index_sql(v: str, off: str, span: str, res: int) -> str:
     n = _nxy(res)
-    ix = f"least(greatest(floor(({lon} + 180.0) / 360.0 * {n}), 0), {n - 1})::BIGINT"
-    iy = f"least(greatest(floor(({lat} + 90.0) / 180.0 * {n}), 0), {n - 1})::BIGINT"
+    return f"least(greatest(floor(({v} + {off}) / {span} * {n}), 0), {n - 1})::BIGINT"
+
+
+def cell_id_sql(lon: str, lat: str, res: int) -> str:
+    """The identical assignment as SQL text that both DuckDB (the
+    oracle) and Spark parse: the law the cell joins build their key
+    from, one `F.expr` instead of a Column tree of ~300 py4j calls."""
+    ix = _index_sql(lon, "180.0", "360.0", res)
+    iy = _index_sql(lat, "90.0", "180.0", res)
     return f"({res}::BIGINT * {1 << 56} + {iy} * {1 << 28} + {ix})"
 
 
@@ -140,3 +148,17 @@ def covering_cells_col(min_lon: Column, min_lat: Column, max_lon: Column,
             ),
         )
     )
+
+
+def covering_cells_sql(min_lon: str, min_lat: str, max_lon: str,
+                       max_lat: str, res: int) -> str:
+    """`cells_covering_bbox` as Spark SQL text: the array of cell ids
+    covering a bbox, with the same INCLUSIVE floor on the max edges
+    and the same `cell_id_sql` index law. Wrap it in `explode(...)`
+    for the cell-key equi-join build side; one `F.expr` where
+    `covering_cells_col` costs ~500-1,200 py4j calls per plan."""
+    ix0, ix1 = (_index_sql(v, "180.0", "360.0", res) for v in (min_lon, max_lon))
+    iy0, iy1 = (_index_sql(v, "90.0", "180.0", res) for v in (min_lat, max_lat))
+    return (f"flatten(transform(sequence({iy0}, {iy1}), _cy -> "
+            f"transform(sequence({ix0}, {ix1}), _cx -> "
+            f"{res}::BIGINT * {1 << 56} + _cy * {1 << 28} + _cx)))")

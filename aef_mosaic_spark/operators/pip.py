@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from aef_mosaic_spark.cells import cell_id_col, covering_cells_col
+from aef_mosaic_spark.operators.spatial_join import with_cells
 
 
 def _cross_sign(x1, y1, x2, y2, px, py):
@@ -50,13 +50,8 @@ def point_in_quad_join(points: DataFrame, quads: DataFrame, res: int = 12) -> Da
     """points(point_id, lon, lat) x quads(quad_id, ring array<double>[8],
     min/max lon/lat bbox) -> containing pairs. Cell equi-join on the
     bbox covering + exact quad refine (all JVM)."""
-    p = points.withColumn("_cell", cell_id_col(F.col("lon"), F.col("lat"), res))
-    q = quads.withColumn(
-        "_cell",
-        F.explode(covering_cells_col(
-            F.col("min_lon"), F.col("min_lat"), F.col("max_lon"), F.col("max_lat"), res
-        )),
-    )
+    p = with_cells(points, res, is_point=True)
+    q = with_cells(quads, res, is_point=False)
     return (
         p.join(q, "_cell")
         .where(point_in_quad_expr(F.col("lon"), F.col("lat"), F.col("ring")))
@@ -68,13 +63,8 @@ def point_in_polygon_join(points: DataFrame, polys: DataFrame, res: int = 12) ->
     """General simple polygons: polys(poly_id, xs array<double>,
     ys array<double>, bbox). Candidates via cell join; refine =
     vectorized ray casting (numpy) in mapInPandas."""
-    p = points.withColumn("_cell", cell_id_col(F.col("lon"), F.col("lat"), res))
-    q = polys.withColumn(
-        "_cell",
-        F.explode(covering_cells_col(
-            F.col("min_lon"), F.col("min_lat"), F.col("max_lon"), F.col("max_lat"), res
-        )),
-    )
+    p = with_cells(points, res, is_point=True)
+    q = with_cells(polys, res, is_point=False)
     cand = p.join(q, "_cell").drop("_cell")
     cols = [c for c in cand.columns]
     schema = cand.schema

@@ -22,76 +22,86 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from aef_mosaic_spark.cells import cell_id_col, covering_cells_col
+from aef_mosaic_spark.cells import cell_id_sql, covering_cells_sql
+from aef_mosaic_spark.partitioning import spread_input
 
 BOX = ("min_lon", "min_lat", "max_lon", "max_lat")
 
+# The cell joins' cell columns and join conditions are SQL text, one
+# `F.expr` each: a Column tree pays several py4j round trips per
+# `F.lit`, `F.floor` and `transform` lambda, ~1,000 per
+# point_in_box_join plan before any Spark job starts; from SQL text the
+# same plan takes tens.
 
-def _boxes_intersect(a: str, b: str):
+
+def _boxes_intersect(a: str, b: str) -> str:
     """Theta predicate (reference bounds_intersect, mosaic.rs:105-108):
     strict on the open edge so touching boxes don't match — same
     convention as the reference AABB test."""
-    return (
-        (F.col(f"{a}.min_lon") < F.col(f"{b}.max_lon"))
-        & (F.col(f"{a}.max_lon") > F.col(f"{b}.min_lon"))
-        & (F.col(f"{a}.min_lat") < F.col(f"{b}.max_lat"))
-        & (F.col(f"{a}.max_lat") > F.col(f"{b}.min_lat"))
-    )
+    return (f"{a}.min_lon < {b}.max_lon AND {a}.max_lon > {b}.min_lon"
+            f" AND {a}.min_lat < {b}.max_lat AND {a}.max_lat > {b}.min_lat")
 
 
-def _point_in_box(p: str, b: str):
-    return (
-        (F.col(f"{p}.lon") >= F.col(f"{b}.min_lon"))
-        & (F.col(f"{p}.lon") < F.col(f"{b}.max_lon"))
-        & (F.col(f"{p}.lat") >= F.col(f"{b}.min_lat"))
-        & (F.col(f"{p}.lat") < F.col(f"{b}.max_lat"))
-    )
+def _point_in_box(p: str, b: str) -> str:
+    return (f"{p}.lon >= {b}.min_lon AND {p}.lon < {b}.max_lon"
+            f" AND {p}.lat >= {b}.min_lat AND {p}.lat < {b}.max_lat")
 
 
-def _with_cells(df: DataFrame, res: int, is_point: bool) -> DataFrame:
+def with_cells(df: DataFrame, res: int, is_point: bool) -> DataFrame:
+    """`df` plus its cell key `_cell`: the cell of (lon, lat) for a
+    point side, one row per covering cell of the min/max lon/lat box
+    for a box side. The one cell law of every cell equi-join
+    (`cells.cell_id_sql` / `covering_cells_sql`); coordinates are
+    cast to DOUBLE so the arithmetic is double whatever the input
+    type, as in `cells.cell_id_col`."""
+    def d(c: str) -> str:
+        return f"CAST({c} AS DOUBLE)"
     if is_point:
-        return df.withColumn("_cell", cell_id_col(F.col("lon"), F.col("lat"), res))
-    return df.withColumn(
-        "_cell",
-        F.explode(
-            covering_cells_col(
-                F.col("min_lon"), F.col("min_lat"),
-                F.col("max_lon"), F.col("max_lat"), res,
-            )
-        ),
-    )
+        return df.withColumn("_cell", F.expr(cell_id_sql(d("lon"), d("lat"), res)))
+    cover = covering_cells_sql(*(d(c) for c in BOX), res)
+    return df.withColumn("_cell", F.expr(f"explode({cover})"))
 
 
 def _salted(probe: DataFrame, build: DataFrame, salt: int):
     """Replicate build side x salt; scatter probe deterministically.
     Turns one hot cell into `salt` shuffle keys (SURVEY §4 skew row)."""
-    build = build.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
+    build = build.withColumn("_salt", F.expr(f"explode(sequence(0, {salt - 1}))"))
+    cols = ", ".join("`" + c.replace("`", "``") + "`"
+                     for c in probe.columns if c != "_cell")
     probe = probe.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in probe.columns if c != "_cell"]),
-                        F.lit(salt)).cast("int")
-    )
+        "_salt", F.expr(f"CAST(pmod(xxhash64({cols}), {salt}) AS INT)"))
     return probe, build
+
+
+def _cell_join(a: DataFrame, b: DataFrame, salt: int, refine: str) -> DataFrame:
+    """Equi-join the `_cell` sides aliased `a` and `b` (salted when
+    salt > 1) with the exact `refine` predicate over those aliases."""
+    keys = ["a._cell = b._cell"]
+    if salt > 1:
+        a, b = _salted(a, b, salt)
+        keys.append("a._salt = b._salt")
+    on = F.expr(" AND ".join(keys + [refine]))
+    return a.alias("a").join(b.alias("b"), on).drop("_cell", "_salt")
 
 
 def point_in_box_join(points: DataFrame, boxes: DataFrame, res: int = 12,
                       salt: int = 0, broadcast_boxes: bool = False) -> DataFrame:
     """points(id, lon, lat, ...) x boxes(box_id, min/max lon/lat, ...)
-    -> matched pairs. Cell equi-join + exact refine."""
+    -> matched pairs. Cell equi-join + exact refine.
+
+    The points side goes through `spread_input` first, for every
+    strategy: with the boxes broadcast (by hint or by size) the join
+    and its refine run inside the points' scan stage, so a one-row-
+    group points file would put all of that work on one task."""
+    points = spread_input(points, "lon", "lat")
     if broadcast_boxes:
         # small dim side: skip cells entirely, one broadcast theta join
         p, b = points.alias("p"), F.broadcast(boxes).alias("b")
-        return p.join(b, _point_in_box("p", "b"))
-    p = _with_cells(points, res, is_point=True).alias("p")
-    b = _with_cells(boxes, res, is_point=False).alias("b")
-    if salt > 1:
-        p, b = _salted(p, b, salt)
-        p, b = p.alias("p"), b.alias("b")
-        on = (F.col("p._cell") == F.col("b._cell")) & (F.col("p._salt") == F.col("b._salt"))
-    else:
-        on = F.col("p._cell") == F.col("b._cell")
-    out = p.join(b, on & _point_in_box("p", "b"))
+        return p.join(b, F.expr(_point_in_box("p", "b")))
     # a point lives in exactly one cell -> no dedup needed
-    return out.drop("_cell", "_salt")
+    return _cell_join(with_cells(points, res, is_point=True),
+                      with_cells(boxes, res, is_point=False),
+                      salt, _point_in_box("a", "b"))
 
 
 def box_intersect_join(left: DataFrame, right: DataFrame, res: int = 10,
@@ -102,15 +112,9 @@ def box_intersect_join(left: DataFrame, right: DataFrame, res: int = 10,
     equi-join, exact refine, dedup on the id pair."""
     left_keys = left_keys or ["id_a"]
     right_keys = right_keys or ["id_b"]
-    l = _with_cells(left, res, is_point=False).alias("l")
-    r = _with_cells(right, res, is_point=False).alias("r")
-    if salt > 1:
-        l, r = _salted(l, r, salt)
-        l, r = l.alias("l"), r.alias("r")
-        on = (F.col("l._cell") == F.col("r._cell")) & (F.col("l._salt") == F.col("r._salt"))
-    else:
-        on = F.col("l._cell") == F.col("r._cell")
-    out = l.join(r, on & _boxes_intersect("l", "r")).drop("_cell", "_salt")
+    out = _cell_join(with_cells(left, res, is_point=False),
+                     with_cells(right, res, is_point=False),
+                     salt, _boxes_intersect("a", "b"))
     return out.dropDuplicates(left_keys + right_keys)
 
 

@@ -262,6 +262,156 @@ def test_covering_superset_tiny_extent_regression(spark):
     assert c in cover
 
 
+def _edge_points(res):
+    """Grid corners and edges (+-180, +-90), a point 5.7e-15 above the
+    equator, and seeded points, for cell-key parity at `res`."""
+    rng = np.random.RandomState(res)
+    w = 360.0 / (1 << res)
+    lon = np.concatenate([[-180.0, 180.0, -180.0, 180.0, 0.0, 139.0, 2 * w - 180.0],
+                          rng.uniform(-180, 180, 200)])
+    lat = np.concatenate([[-90.0, 90.0, 90.0, -90.0, 5.7e-15, 0.0, 0.0],
+                          rng.uniform(-90, 90, 200)])
+    return pd.DataFrame({"point_id": np.arange(len(lon)), "lon": lon, "lat": lat})
+
+
+def _edge_boxes(res):
+    """Boxes at both grid corners, one whose max lies exactly on a cell
+    edge, and (res 10) the 5.66e-15 regression box; at res 0 the whole
+    world. Every box spans only a few cells at any res."""
+    w, h = 360.0 / (1 << res), 180.0 / (1 << res)
+    rows = [(-180.0, -90.0, -180.0 + 1.5 * w, -90.0 + 1.5 * h),
+            (180.0 - 1.5 * w, 90.0 - 1.5 * h, 180.0, 90.0),
+            (0.25 * w, 0.25 * h, 2 * w, 2 * h)]
+    if res == 10:
+        rows.append((138.7, -1.0999999999999943, 139.89999999999998,
+                     5.662137425588298e-15))
+    if res == 0:
+        rows.append((-180.0, -90.0, 180.0, 90.0))
+    return pd.DataFrame([dict(zip(("min_lon", "min_lat", "max_lon", "max_lat"), r),
+                              box_id=i) for i, r in enumerate(rows)])
+
+
+@pytest.mark.parametrize("res", [0, 10, 12, 28])
+def test_sql_cell_key_matches_np_col_and_duckdb(spark, res):
+    """The join's cell key (SQL text in Spark) is the same law as the
+    numpy, Column and DuckDB twins, at the grid's edges too."""
+    import duckdb
+    pts = _edge_points(res)
+    want = cells.cell_id_np(pts.lon.to_numpy(), pts.lat.to_numpy(), res)
+    sdf = spark.createDataFrame(pts)
+    got = (S.with_cells(sdf, res, is_point=True)
+           .select("point_id", "_cell", cells.cell_id_col(
+               F.col("lon"), F.col("lat"), res).alias("c"))
+           .toPandas().sort_values("point_id"))
+    con = duckdb.connect()
+    con.register("pts", pts)
+    got_duck = con.sql(
+        f"SELECT {cells.cell_id_sql('lon', 'lat', res)} AS c FROM pts ORDER BY point_id"
+    ).fetchnumpy()["c"].astype(np.int64)
+    assert np.array_equal(got["_cell"].to_numpy(), want)
+    assert np.array_equal(got["c"].to_numpy(), want)
+    assert np.array_equal(got_duck, want)
+
+
+@pytest.mark.parametrize("res", [0, 10, 12, 28])
+def test_sql_covering_matches_np_and_col(spark, res):
+    """The join's covering (SQL text in Spark) is cells_covering_bbox
+    and covering_cells_col, with the inclusive max edge."""
+    boxes = _edge_boxes(res)
+    sdf = spark.createDataFrame(boxes)
+    got = (S.with_cells(sdf, res, is_point=False)
+           .groupBy("box_id").agg(F.collect_set("_cell").alias("cc"))
+           .toPandas())
+    col = sdf.select("box_id", cells.covering_cells_col(
+        F.col("min_lon"), F.col("min_lat"), F.col("max_lon"), F.col("max_lat"),
+        res).alias("cc")).toPandas()
+    assert len(got) == len(col) == len(boxes)
+    for b in boxes.itertuples(index=False):
+        want = set(cells.cells_covering_bbox(
+            (b.min_lon, b.min_lat, b.max_lon, b.max_lat), res).tolist())
+        assert set(got[got.box_id == b.box_id].cc.iloc[0]) == want, b
+        assert set(col[col.box_id == b.box_id].cc.iloc[0]) == want, b
+    # the edge box's max sits exactly on a cell edge: inclusive covering
+    assert len(cells.cells_covering_bbox(tuple(boxes.iloc[2][
+        ["min_lon", "min_lat", "max_lon", "max_lat"]]), res)) == (9 if res else 1)
+
+
+@pytest.mark.parametrize("kwargs", [{}, {"salt": 4}, {"broadcast_boxes": True}])
+def test_point_in_box_join_plan_build_py4j_calls(spark, tmp_path, monkeypatch, kwargs):
+    """Building the join's lazy plan, spread_input's probe included,
+    costs tens of py4j round trips (a Column-built plan took ~1,000)."""
+    pts, boxes = str(tmp_path / "pts"), str(tmp_path / "boxes")
+    spark.createDataFrame(_points_pdf()).coalesce(1).write.parquet(pts)
+    spark.createDataFrame(_boxes_pdf()).coalesce(1).write.parquet(boxes)
+    S.point_in_box_join(spark.read.parquet(pts), spark.read.parquet(boxes),
+                        res=12, **kwargs)  # warm py4j's class lookups
+    p, b = spark.read.parquet(pts), spark.read.parquet(boxes)
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counted(*a, **k):
+        calls.append(1)
+        return send(*a, **k)
+    monkeypatch.setattr(client, "send_command", counted)
+    S.point_in_box_join(p, b, res=12, **kwargs)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 100
+
+
+_EMPTY_POINTS = "point_id long, lon double, lat double"
+_EMPTY_BOXES = "box_id long, min_lon double, min_lat double, max_lon double, max_lat double"
+
+
+@pytest.mark.parametrize("kwargs", [{}, {"salt": 4}, {"broadcast_boxes": True}])
+@pytest.mark.parametrize("case", ["no_points", "no_boxes", "one_point_file"])
+def test_point_in_box_join_degenerate_inputs(spark, tmp_path, kwargs, case):
+    pts, boxes = _points_pdf(), _boxes_pdf()
+    if case == "no_points":
+        pts = pts.iloc[:0]
+        p = spark.createDataFrame([], _EMPTY_POINTS)
+    elif case == "one_point_file":
+        hit = boxes.iloc[0]
+        pts = pd.DataFrame({"point_id": [7], "lon": [hit.min_lon], "lat": [hit.min_lat]})
+        spark.createDataFrame(pts).write.parquet(str(tmp_path / "one"))
+        p = spark.read.parquet(str(tmp_path / "one"))
+    else:
+        p = spark.createDataFrame(pts)
+    if case == "no_boxes":
+        boxes = boxes.iloc[:0]
+        b = spark.createDataFrame([], _EMPTY_BOXES)
+    else:
+        b = spark.createDataFrame(boxes)
+    got = {(r.point_id, r.box_id) for r in S.point_in_box_join(
+        p, b, res=8, **kwargs).select("point_id", "box_id").collect()}
+    assert got == _pib_oracle(pts, boxes)
+    if case == "one_point_file":
+        assert (7, 0) in got
+
+
+@pytest.mark.parametrize("case", ["no_left", "no_right", "one_left_file"])
+def test_box_intersect_join_degenerate_inputs(spark, tmp_path, case):
+    a = _boxes_pdf(30).rename(columns={"box_id": "id_a"})
+    b = _boxes_pdf(25).rename(columns={"box_id": "id_b"})
+    empty = _EMPTY_BOXES.replace("box_id", "{}")
+    left = spark.createDataFrame(a)
+    right = spark.createDataFrame(b)
+    if case == "no_left":
+        a, left = a.iloc[:0], spark.createDataFrame([], empty.format("id_a"))
+    elif case == "no_right":
+        b, right = b.iloc[:0], spark.createDataFrame([], empty.format("id_b"))
+    else:
+        a = a.iloc[:1]
+        spark.createDataFrame(a).write.parquet(str(tmp_path / "one"))
+        left = spark.read.parquet(str(tmp_path / "one"))
+    got = {(r.id_a, r.id_b) for r in S.box_intersect_join(
+        left, right, res=7).select("id_a", "id_b").collect()}
+    want = {(x.id_a, y.id_b) for x in a.itertuples(index=False)
+            for y in b.itertuples(index=False)
+            if x.min_lon < y.max_lon and x.max_lon > y.min_lon
+            and x.min_lat < y.max_lat and x.max_lat > y.min_lat}
+    assert got == want
+
+
 def test_ann_ivf_recall(spark):
     # clustered vectors: IVF with 4-probe must recover the true NN for
     # most queries (coarse-quantizer scale path)
