@@ -53,7 +53,7 @@ def with_cells(df: DataFrame, res: int, is_point: bool) -> DataFrame:
     for a box side. The one cell law of every cell equi-join
     (`cells.cell_id_sql` / `covering_cells_sql`); coordinates are
     cast to DOUBLE so the arithmetic is double whatever the input
-    type, as in `cells.cell_id_col`."""
+    type, as `cells.cell_id_col`'s double literals make it."""
     def d(c: str) -> str:
         return f"CAST({c} AS DOUBLE)"
     if is_point:
