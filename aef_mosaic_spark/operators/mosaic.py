@@ -809,12 +809,12 @@ def prefiltered_patches(tiles: DataFrame, grid: OutputGrid,
                         bad_tile_acc=None) -> DataFrame:
     """tiles_to_patches after its prefilter, for a caller that applied
     (and observed) wgs84_prefilter itself: spread_input -> the kernel."""
-    # spread_input: a small parquet scan reads in as many tasks as it
-    # has splits or row groups, whichever is fewer, which would
-    # serialize the decode+reproject kernel onto that few cores
-    # (perfbench mosaic_reproject's tile file is one row group in 3
-    # splits: one reading task); the conditional spread is a no-op at
-    # real scale, where the scan has thousands of splits and row groups.
+    # spread_input: a small parquet scan has fewer splits than cores
+    # (perfbench mosaic_reproject's tile file: 3 splits on local[4],
+    # and one row group, so one task reads every row), which would
+    # serialize the decode+reproject kernel onto that few cores; the
+    # conditional spread is a no-op at real scale, where the scan has
+    # thousands of splits.
     # Applied AFTER the prefilter so only surviving tiles shuffle.
     # factor=1: one kernel task per core, as every Python task pays a
     # fixed start-up cost (see spread_input).

@@ -5,13 +5,13 @@ Two degenerate shapes show up in the dedup/ANN and cell-join family:
 
 1. A *small under-parallel input* maps the whole tokenize/md5/
    signature projection, or a broadcast join and its refine, onto a
-   few scan tasks. Splits undercount it: Spark cuts a parquet file
-   into byte splits, but each row group is read whole by the one split
-   holding its midpoint, so a one-row-group file in 4 splits reads
-   [0, n, 0, 0] rows per task. ``spread_input`` therefore counts a
-   parquet scan of at most 64 local files by the smaller of its splits
-   and its footers' total row groups (perfbench tile_join: 600,000
-   points in one row group, the join's work on one of 4 tasks).
+   few scan tasks. ``spread_input`` counts the scan's splits against
+   a target taken from the session's cores. A split count can only
+   overstate a scan's parallelism: a parquet row group is read whole
+   by the one split holding its midpoint, so perfbench tile_join's
+   600,000 points (one row group, 4 splits) read [0, n, 0, 0] rows
+   per task. Its 4 splits are still under the fan-out target of 16
+   on local[4], so the split count alone spreads it.
 2. A *high-fanout self-join* (LSH band buckets multiply rows ~10^3x)
    downstream of a shuffle that AQE coalesced by BYTES: the exchange
    carries a few MB of compact per-doc rows, AQE folds it to 1-2
@@ -28,10 +28,6 @@ and a 1000-executor cluster.
 
 from __future__ import annotations
 
-import os
-from urllib.parse import unquote, urlsplit
-
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -44,56 +40,16 @@ def fanout_partitions(df: DataFrame, factor: int = 2) -> int:
     return max(int(sc.defaultParallelism) * factor, 16)
 
 
-# a scan of more files than this is never probed for row groups: a
-# driver-side footer read is ~3 ms, the same bound as Icelite's
-# _manifest_entries keeps on the driver
-_FOOTER_PROBE_FILES = 64
-
-
-def _row_groups(plan) -> int | None:
-    """Total parquet row groups under an exchange-free physical plan
-    whose every leaf is a parquet scan of an in-memory file index
-    (``spark.read.parquet``'s, listed when the DataFrame was made)
-    holding at most _FOOTER_PROBE_FILES local (``file:``) readable
-    files, from the driver-side footers. None for any other plan,
-    which is then counted by its splits alone; no file is listed and
-    no footer read for it."""
-    leaves = plan.collectLeaves()
-    uris: list[str] = []
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if not leaf.nodeName().startswith("Scan parquet"):
-            return None
-        index = leaf.relation().location()
-        if not index.getClass().getSimpleName().endswith("InMemoryFileIndex"):
-            return None
-        files = index.inputFiles()
-        if len(uris) + len(files) > _FOOTER_PROBE_FILES:
-            return None
-        uris += list(files)
-    if not all(u.startswith("file:") for u in uris):
-        return None
-    paths = [unquote(urlsplit(u).path) for u in uris]
-    if not all(os.path.isfile(p) and os.access(p, os.R_OK) for p in paths):
-        return None
-    return sum(pq.read_metadata(p).num_row_groups for p in paths)
-
-
 def spread_input(df: DataFrame, *key_cols: str, factor: int = 2) -> DataFrame:
     """Conditionally repartition an UNDER-PARALLEL source (shape 1).
 
-    Fires only when an exchange-free physical plan reads with fewer
-    non-empty tasks than the target, i.e. a local few-file scan; at
-    real scale (thousands of splits) it is a no-op and the corpus is
-    never gratuitously shuffled. The plan's parallelism is its split
-    count, except for a parquet scan of at most 64 local files: there
-    it is the smaller of the split count and the files' total row
-    groups, read from the footers on the driver. A row group is read
-    whole by the one split holding its midpoint, so a one-row-group
-    file cut into 4 byte splits reads [0, n, 0, 0] rows per task: one
-    task, not 4 (measured on perfbench tile_join's 600,000-row points
-    file). A plan with no splits or no row groups has no rows to
-    spread and is returned as is. Two targets:
+    Fires only when an exchange-free physical plan has fewer splits
+    than the target, i.e. a local few-file scan; at real scale
+    (thousands of splits) it is a no-op and the corpus is never
+    gratuitously shuffled. Splits are counted, not row groups: every
+    few-file scan a workload spreads today has fewer splits than the
+    target, and reading footers on the driver to count row groups
+    would change no decision there. Two targets:
 
     - ``factor=2`` (default): ``fanout_partitions`` — 2x the session's
       cores, floored at 16 — for JVM stages whose rows fan out
@@ -121,16 +77,11 @@ def spread_input(df: DataFrame, *key_cols: str, factor: int = 2) -> DataFrame:
     # a plan with an exchange is not the leaf-scan shape: its width is
     # the shuffle's, and counting it under AQE would run every
     # upstream stage once here and again in the real job
-    plan = df._jdf.queryExecution().executedPlan()
-    if "Exchange" in plan.toString():
+    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
         return df
     target = (fanout_partitions(df, factor) if factor > 1
               else int(df.sparkSession.sparkContext.defaultParallelism))
-    tasks = df.rdd.getNumPartitions()
-    row_groups = _row_groups(plan)
-    if row_groups is not None:
-        tasks = min(tasks, row_groups)
-    if tasks == 0 or tasks >= target:
+    if df.rdd.getNumPartitions() >= target:
         return df
     if key_cols:
         return df.repartition(target, *[F.col(c) for c in key_cols])

@@ -41,79 +41,3 @@ def test_spread_input_leaves_exchange_plan_unchanged_without_running_it(spark, t
     jobs_before = len(tracker.getJobIdsForGroup(None))
     assert spread_input(joined, "id") is joined
     assert len(tracker.getJobIdsForGroup(None)) == jobs_before
-
-
-def _one_file(tmp_path, name, n, row_group_size):
-    """One parquet file of n incompressible rows in row groups of
-    row_group_size, written by pyarrow (no Spark splitting)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    d = tmp_path / name
-    d.mkdir()
-    rng = np.random.default_rng(7)
-    pq.write_table(pa.table({"id": np.arange(n), "x": rng.random(n)}),
-                   str(d / "part-0.parquet"), row_group_size=row_group_size)
-    return str(d)
-
-
-def _small_splits(spark):
-    """Cut files into ~64 KiB splits while spread_input plans the scan."""
-    key = "spark.sql.files.maxPartitionBytes"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "65536")
-    return lambda: spark.conf.set(key, old)
-
-
-def test_spread_input_spreads_one_row_group_cut_into_many_splits(spark, tmp_path):
-    """A one-row-group file read in >= target byte splits is still one
-    task's worth of rows: the row-group rule spreads it."""
-    src = _one_file(tmp_path, "one_rg", 200_000, 200_000)
-    restore = _small_splits(spark)
-    try:
-        df = spark.read.parquet(src)
-        target = fanout_partitions(df)
-        assert df.rdd.getNumPartitions() >= target  # splits alone: no spread
-        assert df.rdd.glom().map(len).filter(bool).count() == 1
-        out = spread_input(df, "id")
-    finally:
-        restore()
-    assert out is not df
-    assert out.rdd.getNumPartitions() == target
-    assert out.count() == 200_000
-
-
-def test_spread_input_leaves_many_row_group_file_unchanged(spark, tmp_path):
-    n = fanout_partitions(spark.range(1))
-    src = _one_file(tmp_path, "many_rg", 200_000, 200_000 // (n + 4))
-    restore = _small_splits(spark)
-    try:
-        df = spark.read.parquet(src)
-        assert df.rdd.getNumPartitions() >= n
-        assert spread_input(df, "id") is df
-    finally:
-        restore()
-
-
-def test_spread_input_leaves_empty_parquet_dir_unchanged(spark, tmp_path):
-    src = str(tmp_path / "empty")
-    spark.range(0).write.parquet(src)
-    df = spark.read.parquet(src)
-    assert df.rdd.getNumPartitions() == 1  # one footer-only file, 0 row groups
-    assert spread_input(df, "id") is df
-
-
-def test_spread_input_reads_no_footer_past_64_files(spark, tmp_path, monkeypatch):
-    from aef_mosaic_spark import partitioning
-
-    src = str(tmp_path / "many")
-    spark.range(0, 650, numPartitions=65).write.parquet(src)
-    df = spark.read.parquet(src)
-    assert len(df.inputFiles()) == 65
-
-    def no_footers(path):
-        raise AssertionError(f"footer read: {path}")
-    monkeypatch.setattr(partitioning.pq, "read_metadata", no_footers)
-    out = spread_input(df, "id")  # counted by its splits alone
-    assert (out is df) == (df.rdd.getNumPartitions() >= fanout_partitions(df))
